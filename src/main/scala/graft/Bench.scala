@@ -70,13 +70,13 @@ object Bench {
     Seq("target", "spark-warehouse").flatMap { root =>
       val r = Paths.get(root)
       if (!Files.isDirectory(r)) Seq.empty
-      else Files.list(r).iterator().asScala
+      else scala.util.Using.resource(Files.list(r))(_.iterator().asScala
         .map(_.getFileName.toString)
         .filter(n => n.startsWith("graft_") &&
           (Files.exists(Paths.get(root, n, "_version")) ||
            Files.exists(Paths.get(root, n + "._version")) ||
            root == "spark-warehouse"))
-        .map(n => s"$root/$n").toSeq.sorted
+        .map(n => s"$root/$n").toSeq.sorted)
     }
   }
 

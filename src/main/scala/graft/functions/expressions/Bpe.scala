@@ -474,19 +474,7 @@ object Bpe {
           .localCheckpoint()
       else null
     val merges = Seq.newBuilder[(String, String)]
-    // small-vocab regime: every round is a scheduling-floor-bound tiny
-    // job — adaptive re-planning and 32-way shuffles are pure per-round
-    // overhead. Narrow the session to 1 shuffle partition with AQE off
-    // for the loop's duration, restored in the finally (the same
-    // visible-session-mutation contract as Tables' nanosAsLong set).
-    val conf = spark.conf
-    val savedAqe = conf.getOption("spark.sql.adaptive.enabled")
-    val savedParts = conf.getOption("spark.sql.shuffle.partitions")
-    if (small) {
-      conf.set("spark.sql.adaptive.enabled", "false")
-      conf.set("spark.sql.shuffle.partitions", "1")
-    }
-    try {
+    def loop(): Unit = {
       var it = 0
       var exhausted = false
       while (it < numMerges && !exhausted) {
@@ -523,14 +511,12 @@ object Bpe {
         }
         it += 1
       }
-    } finally {
-      if (small) {
-        savedAqe.fold(conf.unset("spark.sql.adaptive.enabled"))(
-          v => conf.set("spark.sql.adaptive.enabled", v))
-        savedParts.fold(conf.unset("spark.sql.shuffle.partitions"))(
-          v => conf.set("spark.sql.shuffle.partitions", v))
-      }
     }
+    // small-vocab regime: every round is a scheduling-floor-bound tiny
+    // job — adaptive re-planning and 32-way shuffles are pure per-round
+    // overhead. Narrow the session to 1 shuffle partition with AQE off
+    // for the loop's duration ([[graft.util.ExecScope.narrow]]).
+    if (small) graft.util.ExecScope.narrow(spark, 1)(loop()) else loop()
     Vocab(merges.result())
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.ExecScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -96,8 +97,7 @@ object Hierarchy {
   def closureScoped(nodes: DataFrame,
                     idCol: Column = col("id"),
                     parentCol: Column = col("parent"),
-                    maxRounds: Int = 64,
-                    loopAqe: Boolean = false): Scoped = {
+                    maxRounds: Int = 64): Scoped = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     // roots point at themselves with depth 0: the doubling join is
     // then TOTAL (a settled node joins the root's self-row and adds
@@ -115,18 +115,15 @@ object Hierarchy {
       .cache()
     var st = pinned
     // materialize the round-0 cache and size the loop from its row
-    // count (r19, [[graft.util.LoopScope]]): AQE stays scoped OFF as
-    // before (per-exchange driver round trips, measured 3.7× — the
-    // AqeScope rationale), and the loop's static shuffle width is now
-    // derived from |nodes| instead of inherited from the session —
-    // sf0.1's 15 k-row face ran 31 stages × 32 tasks of pure dispatch
-    // (profiled: every executor parked in every jstack sample). The
-    // count doubles as the cache materialization the round-1
-    // row-conservation check re-reads hot. Pass loopAqe = true to
-    // keep AQE (skew-join splitting on a celebrity-parent hierarchy).
+    // count (r19, [[graft.util.ExecScope]]): AQE stays scoped OFF as
+    // before (per-exchange driver round trips, measured 3.7×), and the
+    // loop's static shuffle width is derived from |nodes| instead of
+    // inherited from the session — sf0.1's 15 k-row face ran 31 stages
+    // × 32 tasks of pure dispatch (profiled: every executor parked in
+    // every jstack sample). The count doubles as the cache
+    // materialization the round-1 row-conservation check re-reads hot.
     val nNodes = pinned.count()
-    graft.util.LoopScope.sized(nodes.sparkSession, nNodes,
-      keepAqe = loopAqe) {
+    ExecScope.narrow(nodes.sparkSession, ExecScope.forRows(nNodes)) {
     var round = 0
     var moved = 1L
     // the round checkpoint whose blocks are still NEEDED: cached

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.ExecScope
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -66,8 +67,7 @@ object LabelProp {
 
   def components(pairs: DataFrame, aCol: String, bCol: String,
                  checkpointDir: Option[String] = None,
-                 maxIters: Int = 50,
-                 loopAqe: Boolean = false): DataFrame = {
+                 maxIters: Int = 50): DataFrame = {
     val s = pairs.sparkSession
     val p = pairs.select(col(aCol), col(bCol))
     // EAGER localCheckpoint, not cache: the caller's pair plan can be
@@ -85,7 +85,7 @@ object LabelProp {
       .localCheckpoint(true)
     val edgesRdd = ckRdd(edges)
     // loop partitioning sized from the MATERIALIZED edge count (r19,
-    // [[graft.util.LoopScope]]): the count is a cheap scan of the
+    // [[graft.util.ExecScope]]): the count is a cheap scan of the
     // checkpoint blocks just written. r18 kept AQE ON in this loop so
     // runtime coalescing would size the micro-rounds; that bought the
     // right widths at the price of a driver re-planning round trip per
@@ -93,10 +93,9 @@ object LabelProp {
     // were small (profiled r19: executors parked in every jstack
     // sample while the driver sequenced 30+ stages). A static count
     // derived from |edges| gets the same size-adaptivity without the
-    // round trips; `loopAqe = true` restores the r18 posture (e.g. a
-    // celebrity-key graph wanting AQE skew splitting).
+    // round trips.
     val nEdges = edges.count()
-    graft.util.LoopScope.sized(s, nEdges, keepAqe = loopAqe) {
+    ExecScope.narrow(s, ExecScope.forRows(nEdges)) {
     // `pinned` is the frame ACTUALLY cached each round; `labels` may
     // be a projection over it — Dataset.unpersist only uncaches an
     // exact plan match, so retiring the projection would silently

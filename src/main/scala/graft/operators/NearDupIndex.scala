@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.expressions.TextExprs
+import graft.util.ExecScope
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -313,17 +314,16 @@ object NearDupIndex {
     * TOMBSTONED id is refused loudly (the tombstone filter would
     * silently hide the re-add forever; [[compactStores]] first).
     *
-    * The whole cycle runs with AQE scoped OFF ([[graft.util.AqeScope]]
+    * The whole cycle runs with AQE scoped OFF ([[graft.util.ExecScope]]
     * — the q103/Hierarchy rationale): a maintain is a dozen small
     * delta-sized actions (probe collects, pair count, LabelProp
     * rounds, label merge, store appends), and AQE's per-exchange
     * query-stage materialization costs a driver round trip for each —
     * the r12 profile measured ~94 Spark jobs and ~14 s for a 500-doc
     * delta at sf0.1, dominated by exactly this fixed overhead, not
-    * data. `keepAqe = true` re-enables it for deployments whose delta
-    * batches are large/skewed enough that runtime re-planning pays.
+    * data.
     *
-    * The scope is SESSION-ISOLATED ([[graft.util.AqeScope.isolatedOff]]
+    * The scope is SESSION-ISOLATED ([[graft.util.ExecScope.isolated]]
     * — the r14 contract, enforced rather than documented): the whole
     * cycle runs on a `newSession()` clone, with the caller's `newDocs`
     * frame re-rooted onto the clone through a global temp view (the
@@ -334,7 +334,7 @@ object NearDupIndex {
     * (NearDupIndexSpec pins this).
     */
   def maintain(spark: SparkSession, path: String, newDocs: DataFrame,
-               lockWaitMs: Long = 0L, keepAqe: Boolean = false,
+               lockWaitMs: Long = 0L,
                smallGraphEdges: Int = 200000): Stats =
     graft.util.PathLock.withLock(spark, path, lockWaitMs,
       what = "near-dup index maintainer") {
@@ -343,7 +343,7 @@ object NearDupIndex {
         java.util.UUID.randomUUID().toString.replace("-", "")
       newDocs.createOrReplaceGlobalTempView(vname)
       try
-        graft.util.AqeScope.isolatedOff(spark, keepAqe = keepAqe) { iso =>
+        ExecScope.isolated(spark) { iso =>
           maintainImpl(iso, path, iso.table(db + "." + vname),
             smallGraphEdges)
         }
@@ -360,7 +360,7 @@ object NearDupIndex {
       // maintain cycle's probe collects and store appends are separate
       // actions that would each race this entry
       val nNew = sigsNew.count()
-      // delta-sized static partitioning (r19, the LoopScope sizing):
+      // delta-sized static partitioning (r19, [[ExecScope.forRows]]):
       // this cycle runs on a PRIVATE session with AQE scoped off, so
       // every exchange inherits the session's static shuffle width —
       // at sf0.1 that meant ~15 stages × 32 tasks over a ~500-doc
@@ -371,11 +371,8 @@ object NearDupIndex {
       // executorRunTime ≫ executorCpuTime). Deriving the width from
       // the MATERIALIZED delta row count keeps micro-deltas on
       // single-task stages while a production-sized batch still fans
-      // out; the session is private and discarded, so no restore is
-      // needed.
-      spark.conf.set("spark.sql.shuffle.partitions",
-        graft.util.LoopScope.partitionsFor(nNew).toString)
-      try {
+      // out.
+      try ExecScope.narrow(spark, ExecScope.forRows(nNew)) {
         deletedIds(spark, path).foreach { dead =>
           val readds = sigsNew.select(col("doc_id"))
             .join(broadcast(dead), Seq("doc_id")).limit(1).count()

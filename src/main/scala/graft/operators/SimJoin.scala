@@ -122,7 +122,7 @@ object SimJoin {
     // 24 s CPU vs 3.3 s single-task) — in a 150-query shared JVM the
     // per-task overhead (task-binary deserialization, page
     // allocation) dwarfs the kernel. The width answer lives in the
-    // q96 entry instead (LoopScope.sizedForInput: AQE-off scope with
+    // q96 entry instead (ExecScope.forInput: AQE-off scope with
     // a file-size-derived static width, so production inputs still
     // fan out).
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("nsz"))

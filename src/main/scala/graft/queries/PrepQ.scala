@@ -5,7 +5,6 @@ import graft.pipeline.CorpusPrep
 import graft.functions.TextOps._
 import graft.functions.expressions.TextExprs
 import graft.operators.NearDup
-import graft.util.AqeScope
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 

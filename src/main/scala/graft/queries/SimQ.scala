@@ -45,7 +45,8 @@ object SimQ {
     */
   def q96(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir).documents
-    graft.util.LoopScope.sizedForInput(docs) {
+    graft.util.ExecScope.narrow(docs.sparkSession,
+        graft.util.ExecScope.forInput(docs)) {
       val sc = graft.operators.SimJoin.joinPairsScoped(
         docs, SimShingle, SimNum, SimDen)
       try sc.df.localCheckpoint() finally sc.release()

@@ -279,7 +279,7 @@ class NearDupIndexSpec extends SparkSpec {
   test("AQE isolation: a query planned on the caller session mid-scope keeps adaptive execution; maintain leaves the caller conf untouched") {
     val Key = "spark.sql.adaptive.enabled"
     assert(spark.conf.get(Key) == "true", "precondition: session AQE on")
-    graft.util.AqeScope.isolatedOff(spark) { iso =>
+    graft.util.ExecScope.isolated(spark) { iso =>
       assert(iso.conf.get(Key) == "false", "the clone runs AQE-off")
       assert(spark.conf.get(Key) == "true",
         "the caller session conf must be untouched inside the window")

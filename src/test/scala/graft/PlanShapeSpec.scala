@@ -360,11 +360,9 @@ class PlanShapeSpec extends SparkSpec {
   test("q78: hash arrays die map-side — no exchange carries a string or array") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.{ArrayType, StringType}
-    // operator form — the registered entry is scoped + eagerly
-    // checkpointed (r19); see the q74 pin note
-    val exchanges = physicalOf(graft.operators.SubstrDedup.winnowedSpans(
-        Tables(spark, sf).documents, graft.queries.SubstrQ.SubstrWindow,
-        graft.queries.SubstrQ.WinnowWindow))
+    // the registered entry is lazy (SubstrQ's r19 note), so the pin
+    // inspects its own plan
+    val exchanges = physicalOf(graft.queries.SubstrQ.q78(spark, sf))
       .collect { case e: ShuffleExchangeExec => e }
     assert(exchanges.nonEmpty)
     exchanges.foreach(e =>
@@ -376,10 +374,8 @@ class PlanShapeSpec extends SparkSpec {
   test("q95: both rounds keep text map-side — no exchange carries a string or array") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.{ArrayType, StringType}
-    // operator form — see the q74 pin note
-    val exchanges = physicalOf(graft.operators.SubstrDedup.refinedSpans(
-        Tables(spark, sf).documents, graft.queries.SubstrQ.SubstrWindow,
-        graft.queries.SubstrQ.WinnowWindow))
+    // the registered entry, lazy like q78's
+    val exchanges = physicalOf(graft.queries.SubstrQ.q95(spark, sf))
       .collect { case e: ShuffleExchangeExec => e }
     assert(exchanges.nonEmpty)
     exchanges.foreach(e =>
@@ -427,11 +423,10 @@ class PlanShapeSpec extends SparkSpec {
   test("q74: window strings stay map-side — exchanges carry hashes/ids only, islands share one doc exchange") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.StringType
-    // the registered q74 entry is scoped + eagerly checkpointed (r19),
-    // so its plan is an RDD scan; the pin inspects the operator form it
-    // materializes (the SimJoin pin convention)
-    val q74op = graft.operators.SubstrDedup.spans(
-      Tables(spark, sf).documents, graft.queries.SubstrQ.SubstrWindow)
+    // the registered q74 entry stays lazy (the r19 eager-checkpoint
+    // experiment was reverted; SubstrQ's note), so the pin inspects
+    // its own plan
+    val q74op = graft.queries.SubstrQ.q74(spark, sf)
     assertSpreadFloorOnly(q74op)
     val plan = physicalOf(q74op)
     // the r18 Spread floor (Q.wideDocs) is an explicit, guarded
@@ -453,9 +448,8 @@ class PlanShapeSpec extends SparkSpec {
   test("q75: token arrays never shuffle — the span side broadcasts; only the output sort carries text") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.{ArrayType, StringType}
-    // operator form — the r19 scoped-entry note on the q74 pin above
-    val q75op = graft.operators.SubstrDedup.strip(
-      Tables(spark, sf).documents, graft.queries.SubstrQ.SubstrWindow)
+    // the registered entry, lazy like q74's (SubstrQ's r19 note)
+    val q75op = graft.queries.SubstrQ.q75(spark, sf)
     assertSpreadFloorOnly(q75op)
     val plan = physicalOf(q75op)
     // Spread-floor exchange exempt, as in the q74 pin above
