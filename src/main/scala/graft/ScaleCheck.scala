@@ -484,12 +484,14 @@ object ScaleCheck {
       // rows and byte share, so each round records what the
       // exclusion costs on the fixture mix (the no-silent-caps rule
       // applied to a capability gap)
+      val avifHeic = Seq(graft.sources.BinarySource.MimeAvif,
+        graft.sources.BinarySource.MimeHeic)
       val hv = graft.sources.WarcSource.media(
           graft.sources.WarcSource.records(spark, dir))
         .agg(
-          sum(when(col("meta.mime").isin("image/avif", "image/heic"), 1L)
+          sum(when(col("meta.mime").isin(avifHeic: _*), 1L)
             .otherwise(0L)).as("hrows"),
-          sum(when(col("meta.mime").isin("image/avif", "image/heic"),
+          sum(when(col("meta.mime").isin(avifHeic: _*),
             length(col("payload")).cast("long")).otherwise(0L))
             .as("hbytes"),
           sum(length(col("payload")).cast("long")).as("allbytes"))

@@ -12,68 +12,7 @@ object SparkEntry {
       SketchQ.entries ++ PrepQ.entries ++ LmQ.entries ++ SubstrQ.entries ++
       WebQ.entries ++ LayoutQ.entries ++ SimQ.entries ++ SearchQ.entries ++
       SubQ.entries ++ QualityQ.entries ++ MergeQ.entries ++
-      DeltaQ.entries ++
-      Seq(
-        Entry("q50_multimodal_meta", graft.multimodal.Multimodal.q50,
-          Some(graft.multimodal.Multimodal.q50Sql)),
-        Entry("q67_ppm_decode", graft.multimodal.Multimodal.q67,
-          Some(graft.multimodal.Multimodal.q67Sql)),
-        Entry("q69_wav_decode", graft.multimodal.Multimodal.q69,
-          Some(graft.multimodal.Multimodal.q69Sql)),
-        Entry("q91_bmp_decode", graft.multimodal.Multimodal.q91,
-          Some(graft.multimodal.Multimodal.q91Sql)),
-        Entry("q118_image_dhash", graft.multimodal.Multimodal.q118,
-          Some(graft.multimodal.Multimodal.q118Sql)),
-        Entry("q119_image_neardup", graft.multimodal.Multimodal.q119,
-          Some(graft.multimodal.Multimodal.q119Sql)),
-        Entry("q120_audio_fingerprint", graft.multimodal.Multimodal.q120,
-          Some(graft.multimodal.Multimodal.q120Sql)),
-        Entry("q124_png_decode", graft.multimodal.Multimodal.q124,
-          Some(graft.multimodal.Multimodal.q124Sql)),
-        Entry("q125_gif_decode", graft.multimodal.Multimodal.q125,
-          Some(graft.multimodal.Multimodal.q125Sql)),
-        Entry("q126_jpeg_decode", graft.multimodal.Multimodal.q126,
-          Some(graft.multimodal.Multimodal.q126Sql)),
-        Entry("q127_pdf_extract", graft.multimodal.Multimodal.q127,
-          Some(graft.multimodal.Multimodal.q127Sql)),
-        Entry("q128_webp_decode", graft.multimodal.Multimodal.q128,
-          Some(graft.multimodal.Multimodal.q128Sql)),
-        Entry("q129_docx_extract", graft.multimodal.Multimodal.q129,
-          Some(graft.multimodal.Multimodal.q129Sql)),
-        Entry("q130_video_probe", graft.multimodal.Multimodal.q130,
-          Some(graft.multimodal.Multimodal.q130Sql)),
-        Entry("q131_epub_extract", graft.multimodal.Multimodal.q131,
-          Some(graft.multimodal.Multimodal.q131Sql)),
-        Entry("q132_audio_probe", graft.multimodal.Multimodal.q132,
-          Some(graft.multimodal.Multimodal.q132Sql)),
-        Entry("q133_tiff_probe", graft.multimodal.Multimodal.q133,
-          Some(graft.multimodal.Multimodal.q133Sql)),
-        Entry("q134_rtf_extract", graft.multimodal.Multimodal.q134,
-          Some(graft.multimodal.Multimodal.q134Sql)),
-        Entry("q135_odt_extract", graft.multimodal.Multimodal.q135,
-          Some(graft.multimodal.Multimodal.q135Sql)),
-        Entry("q136_xlsx_extract", graft.multimodal.Multimodal.q136,
-          Some(graft.multimodal.Multimodal.q136Sql)),
-        Entry("q137_doc_extract", graft.multimodal.Multimodal.q137,
-          Some(graft.multimodal.Multimodal.q137Sql)),
-        Entry("q138_xls_extract", graft.multimodal.Multimodal.q138,
-          Some(graft.multimodal.Multimodal.q138Sql)),
-        Entry("q139_media_coverage", graft.multimodal.Multimodal.q139,
-          Some(graft.multimodal.Multimodal.q139Sql)),
-        Entry("q140_ppt_extract", graft.multimodal.Multimodal.q140,
-          Some(graft.multimodal.Multimodal.q140Sql)),
-        Entry("q141_exif_scrub", graft.multimodal.Multimodal.q141,
-          Some(graft.multimodal.Multimodal.q141Sql)),
-        Entry("q147_exif_containers", graft.multimodal.Multimodal.q147,
-          Some(graft.multimodal.Multimodal.q147Sql)),
-        Entry("q148_vp8_decode", graft.multimodal.Multimodal.q148,
-          Some(graft.multimodal.Multimodal.q148Sql)),
-        Entry("q149_heif_probe", graft.multimodal.Multimodal.q149,
-          Some(graft.multimodal.Multimodal.q149Sql)),
-        Entry("q150_vp8_segfilter", graft.multimodal.Multimodal.q150,
-          Some(graft.multimodal.Multimodal.q150Sql)),
-        Entry("q151_brotli_decode", graft.multimodal.Multimodal.q151,
-          Some(graft.multimodal.Multimodal.q151Sql)))
+      DeltaQ.entries ++ graft.multimodal.Multimodal.entries
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

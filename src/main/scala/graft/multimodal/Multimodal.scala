@@ -1,19 +1,25 @@
 package graft.multimodal
 
+import graft.queries.Entry
+import graft.sources.BinarySource
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: media as opaque `binary` columns with
   * typed metadata, and a batched decode→feature pipeline.
   *
-  * Decode dispatches on `meta.mime`:
-  *  - `image/x-portable-pixmap` rows go through [[Netpbm]], a REAL
-  *    pure-JVM P6 codec — header parse, raster validation,
-  *    nearest-neighbor resize, luma-histogram features, multi-frame
-  *    streams — with malformed payloads fenced to ok=false rows;
-  *  - any other mime falls back to [[decodeStub]], the deterministic
-  *    byte fold standing where libjpeg/ffmpeg/a vision encoder would
-  *    plug in for codecs this container lacks.
+  * Decode dispatches on `meta.mime` through ONE codec table,
+  * [[Codecs]]. Each entry is a real pure-JVM kernel:
+  *  - image mimes (PPM, BMP, PNG, GIF, JPEG, WebP) decode to a raster
+  *    that feeds a luma histogram, and resize re-encodes most of them;
+  *  - WAV decodes to samples; MP3, OGG, FLAC, TIFF, MP4 and
+  *    WebM/Matroska yield header-walk evidence without a sample or
+  *    pixel decode.
+  * A malformed payload of a known mime fences to an ok=false row. A
+  * mime with no entry falls back to [[decodeStub]], the deterministic
+  * byte fold standing where a vision or audio encoder would plug in.
+  * The same table carries the documents-as-media fixture encoders
+  * behind the oracle-checked decode faces ([[fixtureTable]]).
   * At 100 TB the shape matters as much as the codec:
   *  - blobs stay in `binary` columns, never stringified;
   *  - decode runs per PARTITION batch via `mapPartitions`, so codec /
@@ -26,19 +32,23 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** The documents scan behind the HEAVY fixture builders, floored to
-    * the session's parallelism ([[graft.util.Spread]], r18): the
-    * fixture file is one parquet row group, so without this every
-    * encode+decode kernel below ran on ONE core (q148 measured at
-    * 5.2 s wall ≈ 5.1 s task-time on 32 cores). The spread exchange
-    * carries only the tiny pre-kernel rows; at production scale the
-    * scan is already wide and the guard makes it a no-op. The LIGHT
-    * probe/stub tables (blob/ppm/wav/bmp, q119's hash pass, q130/
-    * q132/q134/q149) deliberately stay on the raw scan — their
-    * kernels are cheaper than one exchange (bench-measured +50-120 ms
-    * per query when spread), so the floor applies only where the
-    * kernel dominates.
+  /** Scan widths for [[docsAt]], as a partition cap. The fixture file
+    * is one parquet row group, so the raw scan is ONE task.
+    *
+    * The HEAVY fixture faces floor the scan to the session's
+    * parallelism ([[graft.util.Spread]], r18): without it every
+    * encode+decode kernel ran on ONE core (q148 measured at 5.2 s
+    * wall ≈ 5.1 s task-time on 32 cores). The spread exchange carries
+    * only the tiny pre-kernel rows; at production scale the scan is
+    * already wide and the guard makes it a no-op. The LIGHT probe/stub
+    * faces (ppm/wav/bmp, q119's hash pass, q130/q132/q134/q149)
+    * deliberately stay on the raw scan — their kernels are cheaper
+    * than one exchange (bench-measured +50-120 ms per query when
+    * spread), so the floor applies only where the kernel dominates.
     */
+  private val RawScan = 1
+  private val FullWidth = Int.MaxValue
+
   /** Saturation width for the MID-WEIGHT extract kernels (r19): the
     * driver's 8-vs-32-core scaling block read ratios of 0.55–0.87 on
     * the office-extract family (q133/q135–q141) — they ran FASTER on
@@ -52,18 +62,31 @@ object Multimodal {
     */
   private val MidKernelParts = 8
 
-  /** docsSpread is a SINGLE-CONSUMER helper (Spread.byKey): spreading
+  /** The documents table at scan width `width` (a partition cap;
+    * [[RawScan]] skips the spread and its guard entirely).
+    *
+    * The spread is a SINGLE-CONSUMER helper (Spread.byKey): spreading
     * by the cluster key satisfies downstream ClusteredDistribution and
     * would silently collapse a diamond's reused exchange (measured
     * q74: kernel recomputed per consumer, CPU 1.7 s → 11.3 s). Every
     * current call site feeds one kernel chain; a future multi-consumer
     * caller must use Spread.neutral instead.
     */
-  private def docsSpread(spark: SparkSession, dir: String,
-                         maxParts: Int = Int.MaxValue): DataFrame =
-    graft.util.Spread.byKey(
-      spark.read.parquet(dir + "/documents.parquet"), col("doc_id"),
-      maxParts)
+  private def docsAt(spark: SparkSession, dir: String,
+                     width: Int): DataFrame = {
+    val scan = spark.read.parquet(dir + "/documents.parquet")
+    if (width <= RawScan) scan
+    else graft.util.Spread.byKey(scan, col("doc_id"), width)
+  }
+
+  /** [[docsAt]] as (doc_id, text) pairs, null text read as "". */
+  private def textsAt(spark: SparkSession, dir: String,
+                      width: Int): Dataset[(Long, String)] = {
+    import spark.implicits._
+    docsAt(spark, dir, width)
+      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
+      .as[(Long, String)]
+  }
 
   final case class MediaMeta(mime: String, n_bytes: Long, checksum: Long)
   final case class MediaRow(doc_id: Long, payload: Array[Byte], meta: MediaMeta)
@@ -73,23 +96,13 @@ object Multimodal {
   /** Feature vector dimensionality (both encoders). */
   val FeatureDim = 16
 
-  /** Mime routed to the real [[Netpbm]] codec. */
-  val MimePpm = "image/x-portable-pixmap"
-
-  /** Mime routed to the real [[Wav]] codec. */
-  val MimeWav = "audio/x-wav"
-
-  /** Mime routed to the real [[Bmp]] codec. */
-  val MimeBmp = "image/bmp"
-
-  /** Mime routed to the real [[Png]] codec. */
-  val MimePng = "image/png"
-
-  /** Mime routed to the real [[Gif]] codec. */
-  val MimeGif = "image/gif"
-
-  /** Mime routed to the real [[Jpeg]] codec. */
-  val MimeJpeg = "image/jpeg"
+  /** Mimes of the decodable formats, spelled once in [[BinarySource]]. */
+  val MimePpm = BinarySource.MimePpm
+  val MimeWav = BinarySource.MimeWav
+  val MimeBmp = BinarySource.MimeBmp
+  val MimePng = BinarySource.MimePng
+  val MimeGif = BinarySource.MimeGif
+  val MimeJpeg = BinarySource.MimeJpeg
 
   /** Stand-in corpus: wrap each document's text bytes as the opaque
     * payload with typed metadata. In production this is the ingest
@@ -114,13 +127,11 @@ object Multimodal {
         xxhash64(encode(txt, "UTF-8")).as("checksum")).as("meta"))
   }
 
-  /** ==== DECODE STUB (non-image fallback) ====
-    * Deterministic fake for mimes without a JVM codec in this
-    * container: folds the payload bytes into a fixed-length float
-    * vector. Image rows never reach it — [[MimePpm]] dispatches to the
-    * real [[Netpbm]] decode in [[extractFeatures]]/[[resize]]/
-    * [[sampleFrames]]; a production build adds more `mime -> codec`
-    * arms the same way.
+  /** ==== DECODE STUB (fallback for mimes without a codec) ====
+    * Deterministic fake for mimes with no [[Codecs]] entry: folds the
+    * payload bytes into a fixed-length float vector — the arm where
+    * libjpeg/ffmpeg/a vision encoder would plug in for formats this
+    * container lacks; a production build adds more table entries.
     */
   private[multimodal] def decodeStub(payload: Array[Byte]): Array[Float] = {
     val f = new Array[Float](FeatureDim)
@@ -132,13 +143,198 @@ object Multimodal {
     f
   }
 
+  /** One row of the codec table: what the media pipeline knows about
+    * one mime.
+    *  - `features`: the [[extractFeatures]] arm; None fences the row.
+    *  - `image`: the pixel decoder behind the luma faces and resize.
+    *  - `reencode`: [[resize]]'s writer for the resampled raster; None
+    *    keeps the byte-stride stand-in.
+    *  - `fixture`: the documents-as-media encoder (doc id, UTF-8 text
+    *    bytes → payload) behind [[fixtureTable]].
+    */
+  private[graft] final case class Codec(
+      mime: String,
+      features: Array[Byte] => Option[Array[Float]],
+      image: Array[Byte] => Option[Netpbm.Image] = _ => None,
+      reencode: Option[Netpbm.Image => Array[Byte]] = None,
+      fixture: Option[(Long, Array[Byte]) => Array[Byte]] = None)
+
+  /** An image codec: its features are the 16-bin luma histogram of the
+    * decoded raster — one histogram kernel for every image format.
+    */
+  private def imageCodec(mime: String,
+      decode: Array[Byte] => Option[Netpbm.Image],
+      reencode: Option[Netpbm.Image => Array[Byte]],
+      fixture: (Long, Array[Byte]) => Array[Byte]): Codec =
+    Codec(mime, p => decode(p).map(Netpbm.lumaHistogram(_, FeatureDim)),
+      decode, reencode, Some(fixture))
+
+  /** `xs` in the leading feature slots, zero-padded to [[FeatureDim]]. */
+  private def padded(xs: Float*): Array[Float] = {
+    val f = new Array[Float](FeatureDim)
+    xs.copyToArray(f)
+    f
+  }
+
+  /** VP8 dims are 14-bit: h = 8*ceil(nb/10) <= 16383 caps nb at
+    * 20,470 bytes — the vp8 fixture caps HERE (and the oracle's
+    * hex-slice mirrors it) instead of throwing inside an executor map
+    * on a long document (the review-caught failure mode).
+    */
+  private val Vp8MaxBytes = 20470
+
+  /** The codec table. Both WebP fixtures (lossless VP8L and lossy VP8)
+    * carry `image/webp`; [[Webp.decode]] routes either bitstream, and
+    * the first entry of a mime is its dispatch arm. No val of the
+    * enclosing object may read this table: its initializer reads
+    * theirs, so such a read sees it half-built.
+    */
+  private[graft] object Codecs {
+    val ppm: Codec = imageCodec(MimePpm, Netpbm.decode,
+      Some(img => Netpbm.encodeP6(img)),
+      (_, b) => Netpbm.encodeP6(rasterOf(b)))
+
+    /** No resize arm: BMP keeps the byte-stride stand-in. */
+    val bmp: Codec = imageCodec(MimeBmp, Bmp.decode, None,
+      (_, b) => Bmp.encode(rgbRaster(b, 10)))
+
+    val png: Codec = imageCodec(MimePng, Png.decode,
+      Some(img => Png.encode(img)), (_, b) => Png.encode(rgbRaster(b, 10)))
+
+    /** Nearest-neighbor keeps a SUBSET of the source pixels, so the
+      * resized image stays within the palette ceiling and re-encodes
+      * losslessly.
+      */
+    val gif: Codec = imageCodec(MimeGif, Gif.decode,
+      Some(img => Gif.encode(img)), (_, b) => Gif.encode(grayRaster(b)))
+
+    /** JPEG re-encode is lossy by nature; quant 2 keeps the resized
+      * thumbnail visually faithful at a sane byte size. The fixture is
+      * the 8×8-tiled gray layout (the constant-block device, q126).
+      */
+    val jpeg: Codec = imageCodec(MimeJpeg, Jpeg.decode,
+      Some(img => Jpeg.encode(img, gray = false, quant = 2)),
+      (_, b) => Jpeg.encode(grayImage(tiled80(b), 80)))
+
+    /** VP8L is lossless: nearest-neighbor keeps source pixels and the
+      * re-encode loses nothing (subtract-green for size). The fixture
+      * is [[grayRaster]] through the full option gauntlet: subtract-
+      * green, the Select predictor (mode 11), a 6-bit color cache and
+      * dist-1 LZ77 runs.
+      */
+    val webp: Codec = imageCodec(BinarySource.MimeWebp, Webp.decode,
+      Some(img => Webp.encode(img, subtractGreen = true)), { (id, b) =>
+        val still = grayRaster(b)
+        // every 5th doc ships as an ANIMATED container (r18): the
+        // raster rides frame 1 with a deliberately-different second
+        // frame, so the closed form only matches if the POSTER frame
+        // — not the last — is what decodes
+        if (((id % 5) + 5) % 5 == 0)
+          Webp.encodeAnimated(Seq(still, Netpbm.Image(10, still.height,
+            255, still.pixels.map(x => (~x).toByte))))
+        else Webp.encode(still, subtractGreen = true, predictor = Some(11),
+          cacheBits = 6, runs = true)
+      })
+
+    /** The lossy VP8 fixture: q126's 8×8-tiled geometry as the luma
+      * plane, chroma flat 128 ([[Vp8.encodeWebp]]).
+      */
+    val vp8: Codec = webp.copy(fixture = Some { (_, b) =>
+      val luma = tiled80(b.take(Vp8MaxBytes))
+      Vp8.encodeWebp(luma, 80, luma.length / 80)
+    })
+
+    /** RIFF/PCM16 decode + signal summary (rate, length, peak, rms).
+      * The fixture is each text byte as one centered mono PCM16 sample,
+      * (byte - 128) * 256 at 8 kHz.
+      */
+    val wav: Codec = Codec(MimeWav, p => Wav.decode(p).map { a =>
+      var ss = 0.0; var peak = 0f; var i = 0
+      while (i < a.samples.length) {
+        val v = a.samples(i).toFloat
+        ss += v.toDouble * v; if (math.abs(v) > peak) peak = math.abs(v)
+        i += 1
+      }
+      // Float holds integers exactly only up to 2^24: a clip longer
+      // than ~16.7M samples (~35 min at 8 kHz) rounds its length here.
+      // Fine for a fixed-dim float feature vector; readers needing the
+      // exact count should take it from the decoded samples, not this
+      // summary.
+      padded(a.sampleRate.toFloat, a.samples.length.toFloat, peak,
+        if (a.samples.isEmpty) 0f
+        else math.sqrt(ss / a.samples.length).toFloat)
+    }, fixture = Some { (_, b) =>
+      Wav.encodePcm16(Wav.Audio(8000,
+        b.map(x => (((x & 0xff) - 128) * 256).toShort)))
+    })
+
+    /** MP3 frame-header walk — duration/rate/bitrate/CBR-VBR triage
+      * evidence WITHOUT PCM decode (crawl audio is overwhelmingly MP3;
+      * a synthesis filter bank is not what a triage pass should pay
+      * for). Layout: rate, frames, durationMs, kbps, channels,
+      * version×10, layer, vbr flag.
+      */
+    val mp3: Codec = Codec(BinarySource.MimeMp3, p => Mp3.parse(p).map(i =>
+      padded(i.sampleRate.toFloat, i.frames.toFloat, i.durationMs.toFloat,
+        i.bitrateKbps.toFloat, i.channels.toFloat, i.version.toFloat,
+        i.layer.toFloat, if (i.vbr) 1f else 0f)))
+
+    /** OGG page walk. Layout: rate, channels, durationMs, pages, codec
+      * code (1 vorbis / 2 opus).
+      */
+    val ogg: Codec = Codec(BinarySource.MimeOgg, p => Ogg.parse(p).map(i =>
+      padded(i.sampleRate.toFloat, i.channels.toFloat, i.durationMs.toFloat,
+        i.pages.toFloat, if (i.codec == "vorbis") 1f else 2f)))
+
+    /** FLAC STREAMINFO. Layout: rate, channels, durationMs, total
+      * samples, bits/sample.
+      */
+    val flac: Codec = Codec(BinarySource.MimeFlac, p => Flac.parse(p).map(i =>
+      padded(i.sampleRate.toFloat, i.channels.toFloat, i.durationMs.toFloat,
+        i.totalSamples.toFloat, i.bitsPerSample.toFloat)))
+
+    /** TIFF IFD walk — dims/compression/layout/page-census evidence
+      * without decoding strips. Layout: width, height, compression,
+      * bitsPerSample, samplesPerPixel, photometric, pages.
+      */
+    val tiff: Codec = Codec(BinarySource.MimeTiff, p => Tiff.parse(p).map(i =>
+      padded(i.width.toFloat, i.height.toFloat, i.compression.toFloat,
+        i.bitsPerSample.toFloat, i.samplesPerPixel.toFloat,
+        i.photometric.toFloat, i.pages.toFloat)))
+
+    /** ISO-BMFF box walk — duration/dims/track-census triage evidence
+      * WITHOUT touching a codec frame (the MP3 rationale, applied to
+      * video). Layout: durationMs, width, height, videoTracks,
+      * audioTracks, audioRate, audioChannels.
+      */
+    val mp4: Codec = Codec(BinarySource.MimeMp4, p => Mp4.parse(p).map(i =>
+      padded(i.durationMs.toFloat, i.width.toFloat, i.height.toFloat,
+        i.videoTracks.toFloat, i.audioTracks.toFloat, i.audioRate.toFloat,
+        i.audioChannels.toFloat)))
+
+    /** Matroska/WebM EBML walk, the MP4 evidence layout. */
+    val mkv: Codec = Codec(BinarySource.MimeMkv, p => Mkv.parse(p).map(i =>
+      padded(i.durationMs.toFloat, i.width.toFloat, i.height.toFloat,
+        i.videoTracks.toFloat, i.audioTracks.toFloat, i.audioRate.toFloat,
+        i.audioChannels.toFloat)))
+    val webm: Codec = mkv.copy(mime = BinarySource.MimeWebm)
+
+    val all: Seq[Codec] = Seq(ppm, bmp, png, gif, jpeg, webp, vp8, wav,
+      mp3, ogg, flac, tiff, mp4, webm, mkv)
+
+    /** The dispatch arm per mime: the first entry that names it. */
+    val byMime: Map[String, Codec] =
+      all.reverseIterator.map(c => c.mime -> c).toMap
+  }
+
   /** Batched decode: one "codec init" per partition, rows batched by
     * CUMULATIVE BYTES (the batch is where a real decoder would
     * vectorize) — a count-based batch of near-ceiling blobs would
     * pin batchSize × maxBytes of payload at once; a byte budget keeps
     * task memory flat regardless of blob-size distribution. Failures
-    * (oversize, null) yield ok=false rows instead of failing the task,
-    * so one bad blob can't kill a 100 TB job.
+    * (oversize, null, malformed for the mime's codec) yield ok=false
+    * rows instead of failing the task, so one bad blob can't kill a
+    * 100 TB job.
     */
   def extractFeatures(media: Dataset[MediaRow],
                       batchBytes: Long = 128L * 1024 * 1024,
@@ -160,195 +356,14 @@ object Multimodal {
         }
       }.flatMap { batch =>
         batch.iterator.map { r =>
-          if (r.payload == null || r.meta.n_bytes > maxBytes)
-            FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-              ok = false, features = Array.empty)
-          else if (r.meta.mime == MimePpm)
-            // REAL codec path: P6 decode + 16-bin luma histogram;
-            // malformed image -> fenced row, never an exception
-            Netpbm.decode(r.payload) match {
-              case Some(img) =>
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = true, features = Netpbm.lumaHistogram(img, FeatureDim))
-              case None =>
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = false, features = Array.empty)
+          val feats =
+            if (r.payload == null || r.meta.n_bytes > maxBytes) None
+            else Codecs.byMime.get(r.meta.mime) match {
+              case Some(c) => c.features(r.payload)
+              case None => Some(decodeStub(r.payload))
             }
-          else if (r.meta.mime == MimeBmp || r.meta.mime == MimePng ||
-                   r.meta.mime == MimeGif || r.meta.mime == MimeJpeg ||
-                   r.meta.mime == graft.sources.BinarySource.MimeWebp) {
-            // REAL codec paths #3..#7: BMP, PNG, GIF, JPEG and WebP
-            // (VP8L) decode to the same Image type — one histogram
-            // kernel for all
-            val dec = if (r.meta.mime == MimeBmp) Bmp.decode(r.payload)
-                      else if (r.meta.mime == MimePng) Png.decode(r.payload)
-                      else if (r.meta.mime == MimeGif) Gif.decode(r.payload)
-                      else if (r.meta.mime ==
-                        graft.sources.BinarySource.MimeWebp)
-                        Webp.decode(r.payload)
-                      else Jpeg.decode(r.payload)
-            dec match {
-              case Some(img) =>
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = true, features = Netpbm.lumaHistogram(img, FeatureDim))
-              case None =>
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = false, features = Array.empty)
-            }
-          }
-          else if (r.meta.mime == MimeWav)
-            // REAL audio path: RIFF/PCM16 decode + signal summary
-            // (rate, length, peak, rms) padded to the shared dim
-            Wav.decode(r.payload) match {
-              case Some(a) =>
-                var ss = 0.0; var peak = 0f; var i = 0
-                while (i < a.samples.length) {
-                  val v = a.samples(i).toFloat
-                  ss += v.toDouble * v; if (math.abs(v) > peak) peak = math.abs(v)
-                  i += 1
-                }
-                val f = new Array[Float](FeatureDim)
-                f(0) = a.sampleRate.toFloat
-                // Float holds integers exactly only up to 2^24: a clip
-                // longer than ~16.7M samples (~35 min at 8 kHz) rounds
-                // its length here. Fine for a fixed-dim float feature
-                // vector; readers needing the exact count should take
-                // it from the decoded samples, not this summary.
-                f(1) = a.samples.length.toFloat
-                f(2) = peak
-                f(3) = if (a.samples.isEmpty) 0f
-                       else math.sqrt(ss / a.samples.length).toFloat
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = true, features = f)
-              case None =>
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = false, features = Array.empty)
-            }
-          else if (r.meta.mime == graft.sources.BinarySource.MimeMp3)
-            // REAL audio path #2: MP3 frame-header walk — duration/
-            // rate/bitrate/CBR-VBR triage evidence WITHOUT PCM decode
-            // (crawl audio is overwhelmingly MP3; a synthesis filter
-            // bank is not what a triage pass should pay for). Feature
-            // layout: rate, frames, durationMs, kbps, channels,
-            // version×10, layer, vbr flag.
-            Mp3.parse(r.payload) match {
-              case Some(info) =>
-                val f = new Array[Float](FeatureDim)
-                f(0) = info.sampleRate.toFloat
-                f(1) = info.frames.toFloat
-                f(2) = info.durationMs.toFloat
-                f(3) = info.bitrateKbps.toFloat
-                f(4) = info.channels.toFloat
-                f(5) = info.version.toFloat
-                f(6) = info.layer.toFloat
-                f(7) = if (info.vbr) 1f else 0f
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = true, features = f)
-              case None =>
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = false, features = Array.empty)
-            }
-          else if (r.meta.mime == graft.sources.BinarySource.MimeOgg)
-            // REAL audio path #3: OGG page walk — codec/rate/channels/
-            // duration-from-granule triage. Layout: rate, channels,
-            // durationMs, pages, codec code (1 vorbis / 2 opus).
-            Ogg.parse(r.payload) match {
-              case Some(info) =>
-                val f = new Array[Float](FeatureDim)
-                f(0) = info.sampleRate.toFloat
-                f(1) = info.channels.toFloat
-                f(2) = info.durationMs.toFloat
-                f(3) = info.pages.toFloat
-                f(4) = if (info.codec == "vorbis") 1f else 2f
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = true, features = f)
-              case None =>
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = false, features = Array.empty)
-            }
-          else if (r.meta.mime == graft.sources.BinarySource.MimeFlac)
-            // REAL audio path #4: FLAC STREAMINFO — rate, channels,
-            // bits/sample, total samples, durationMs.
-            Flac.parse(r.payload) match {
-              case Some(info) =>
-                val f = new Array[Float](FeatureDim)
-                f(0) = info.sampleRate.toFloat
-                f(1) = info.channels.toFloat
-                f(2) = info.durationMs.toFloat
-                f(3) = info.totalSamples.toFloat
-                f(4) = info.bitsPerSample.toFloat
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = true, features = f)
-              case None =>
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = false, features = Array.empty)
-            }
-          else if (r.meta.mime == graft.sources.BinarySource.MimeTiff)
-            // REAL image-triage path: TIFF IFD walk — dims/compression/
-            // layout/page-census evidence without decoding strips.
-            // Layout: width, height, compression, bitsPerSample,
-            // samplesPerPixel, photometric, pages.
-            Tiff.parse(r.payload) match {
-              case Some(info) =>
-                val f = new Array[Float](FeatureDim)
-                f(0) = info.width.toFloat
-                f(1) = info.height.toFloat
-                f(2) = info.compression.toFloat
-                f(3) = info.bitsPerSample.toFloat
-                f(4) = info.samplesPerPixel.toFloat
-                f(5) = info.photometric.toFloat
-                f(6) = info.pages.toFloat
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = true, features = f)
-              case None =>
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = false, features = Array.empty)
-            }
-          else if (r.meta.mime == graft.sources.BinarySource.MimeMp4)
-            // REAL video path #1: ISO-BMFF box walk — duration/dims/
-            // track-census triage evidence WITHOUT touching a codec
-            // frame (the MP3 rationale, applied to video). Layout:
-            // durationMs, width, height, videoTracks, audioTracks,
-            // audioRate, audioChannels.
-            Mp4.parse(r.payload) match {
-              case Some(info) =>
-                val f = new Array[Float](FeatureDim)
-                f(0) = info.durationMs.toFloat
-                f(1) = info.width.toFloat
-                f(2) = info.height.toFloat
-                f(3) = info.videoTracks.toFloat
-                f(4) = info.audioTracks.toFloat
-                f(5) = info.audioRate.toFloat
-                f(6) = info.audioChannels.toFloat
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = true, features = f)
-              case None =>
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = false, features = Array.empty)
-            }
-          else if (r.meta.mime == graft.sources.BinarySource.MimeWebm ||
-                   r.meta.mime == graft.sources.BinarySource.MimeMkv)
-            // REAL video path #2: Matroska/WebM EBML walk, same
-            // evidence layout as the MP4 arm
-            Mkv.parse(r.payload) match {
-              case Some(info) =>
-                val f = new Array[Float](FeatureDim)
-                f(0) = info.durationMs.toFloat
-                f(1) = info.width.toFloat
-                f(2) = info.height.toFloat
-                f(3) = info.videoTracks.toFloat
-                f(4) = info.audioTracks.toFloat
-                f(5) = info.audioRate.toFloat
-                f(6) = info.audioChannels.toFloat
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = true, features = f)
-              case None =>
-                FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-                  ok = false, features = Array.empty)
-            }
-          else
-            FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
-              ok = true, features = decodeStub(r.payload))
+          FeatureRow(r.doc_id, r.meta.mime, r.meta.n_bytes,
+            ok = feats.isDefined, features = feats.getOrElse(Array.empty))
         }
       }
     }
@@ -425,19 +440,19 @@ object Multimodal {
     }
   }
 
-  /** Downsample stage. [[MimePpm]] rows get REAL resampling: P6 decode
-    * → nearest-neighbor by `factor` on both axes → re-encode (the
-    * round-5 stub kept every factor-th payload byte, which tears RGB
-    * channel alignment — the pixel path now goes through [[Netpbm
-    * .resizeNearest]]). Other mimes keep the byte-stride stand-in.
-    * The meta struct is REBUILT for the new payload — n_bytes and
-    * checksum (the module-wide xxhash64-of-bytes definition, identical
-    * to blobTable's) describe what the row now carries, never the
-    * original. Rows this stage cannot process (null payload, over
-    * maxBytes, malformed image) pass through UNCHANGED, so the
-    * downstream decode stage still sees — and fences — the original
-    * failure instead of an ok-looking empty row. Runs per-partition
-    * like the decode stage.
+  /** Downsample stage. Rows whose mime has a re-encoder in [[Codecs]]
+    * get REAL resampling: decode → nearest-neighbor by `factor` on
+    * both axes ([[Netpbm.resizeNearest]]) → re-encode through the
+    * format's own writer (the round-5 stub kept every factor-th
+    * payload byte, which tears RGB channel alignment). Other mimes
+    * keep the byte-stride stand-in. The meta struct is REBUILT for the
+    * new payload — n_bytes and checksum (the module-wide
+    * xxhash64-of-bytes definition, identical to blobTable's) describe
+    * what the row now carries, never the original. Rows this stage
+    * cannot process (null payload, over maxBytes, malformed image)
+    * pass through UNCHANGED, so the downstream decode stage still sees
+    * — and fences — the original failure instead of an ok-looking
+    * empty row. Runs per-partition like the decode stage.
     */
   def resize(media: Dataset[MediaRow], factor: Int = 4,
              maxBytes: Long = 64L * 1024 * 1024): Dataset[MediaRow] = {
@@ -446,67 +461,26 @@ object Multimodal {
     media.mapPartitions { rows =>
       rows.map { r =>
         if (r.payload == null || r.meta.n_bytes > maxBytes) r
-        else if (r.meta.mime == MimePpm)
-          Netpbm.decode(r.payload) match {
-            case Some(img) =>
-              val out = Netpbm.encodeP6(Netpbm.resizeNearest(img, factor))
-              MediaRow(r.doc_id, out,
-                MediaMeta(r.meta.mime, out.length.toLong, payloadChecksum(out)))
-            case None => r // malformed: downstream fences it
-          }
-        else if (r.meta.mime == MimePng)
-          // real resampling for the crawl-served format too: decode →
-          // nearest-neighbor → re-encode through the real PNG writer
-          Png.decode(r.payload) match {
-            case Some(img) =>
-              val out = Png.encode(Netpbm.resizeNearest(img, factor))
-              MediaRow(r.doc_id, out,
-                MediaMeta(r.meta.mime, out.length.toLong, payloadChecksum(out)))
-            case None => r // malformed: downstream fences it
-          }
-        else if (r.meta.mime == MimeGif)
-          // nearest-neighbor keeps a SUBSET of the source pixels, so
-          // the resized image stays within the palette ceiling and
-          // re-encodes losslessly
-          Gif.decode(r.payload) match {
-            case Some(img) =>
-              val out = Gif.encode(Netpbm.resizeNearest(img, factor))
-              MediaRow(r.doc_id, out,
-                MediaMeta(r.meta.mime, out.length.toLong, payloadChecksum(out)))
-            case None => r // malformed: downstream fences it
-          }
-        else if (r.meta.mime == MimeJpeg)
-          // JPEG re-encode is lossy by nature; quant 2 keeps the
-          // resized thumbnail visually faithful at a sane byte size
-          Jpeg.decode(r.payload) match {
-            case Some(img) =>
-              val out = Jpeg.encode(Netpbm.resizeNearest(img, factor),
-                gray = false, quant = 2)
-              MediaRow(r.doc_id, out,
-                MediaMeta(r.meta.mime, out.length.toLong, payloadChecksum(out)))
-            case None => r // malformed: downstream fences it
-          }
-        else if (r.meta.mime == graft.sources.BinarySource.MimeWebp)
-          // VP8L is lossless: nearest-neighbor keeps source pixels and
-          // the re-encode loses nothing (subtract-green for size)
-          Webp.decode(r.payload) match {
-            case Some(img) =>
-              val out = Webp.encode(Netpbm.resizeNearest(img, factor),
-                subtractGreen = true)
-              MediaRow(r.doc_id, out,
-                MediaMeta(r.meta.mime, out.length.toLong, payloadChecksum(out)))
-            case None => r // malformed/lossy: downstream fences it
-          }
-        else {
-          val out = new Array[Byte]((r.payload.length + factor - 1) / factor)
-          var i = 0
-          while (i < out.length) { out(i) = r.payload(i * factor); i += 1 }
-          MediaRow(r.doc_id, out,
-            MediaMeta(r.meta.mime, out.length.toLong, payloadChecksum(out)))
+        else Codecs.byMime.get(r.meta.mime)
+          .flatMap(c => c.reencode.map(c.image -> _)) match {
+          case Some((decode, reencode)) =>
+            // malformed: passes through, downstream fences it
+            decode(r.payload).fold(r)(img =>
+              withPayload(r, reencode(Netpbm.resizeNearest(img, factor))))
+          case None => // the byte-stride stand-in
+            val out = new Array[Byte]((r.payload.length + factor - 1) / factor)
+            var i = 0
+            while (i < out.length) { out(i) = r.payload(i * factor); i += 1 }
+            withPayload(r, out)
         }
       }
     }
   }
+
+  /** `r` carrying `out`, its meta rebuilt to describe the new bytes. */
+  private def withPayload(r: MediaRow, out: Array[Byte]): MediaRow =
+    MediaRow(r.doc_id, out,
+      MediaMeta(r.meta.mime, out.length.toLong, payloadChecksum(out)))
 
   /** The module-wide checksum: xxhash64 (Spark's seed-42 variant) of
     * the payload bytes — bit-identical to the `xxhash64(binary)`
@@ -518,106 +492,147 @@ object Multimodal {
       bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
       bytes.length, 42L)
 
-  /** Images-from-documents corpus for the REAL codec path: each doc's
-    * UTF-8 text bytes laid out as the raster of an 8-wide P6 image
-    * (height = ceil(n_bytes/24), min 1; tail zero-padded to fill the
-    * last row), encoded through [[Netpbm.encodeP6]]. The decode side
-    * then runs the real parser over real headers — and because the
-    * pixels are a pure function of the text bytes, DuckDB can replay
-    * the whole round trip exactly (q67's oracle).
+  /** A documents-as-media fixture: each doc's UTF-8 text bytes through
+    * `codec`'s fixture encoder at scan width `width`, with the
+    * module-wide meta of the payload. The decode side then runs the
+    * real parser over real headers — and because the pixels/samples
+    * are a pure function of the text bytes, DuckDB can replay the
+    * whole round trip exactly.
     */
-  /** The documents-as-rasters layout contract (8-wide, zero-padded,
-    * height floored at `minH`) — ONE Scala copy, replayed by the
-    * [[rasterCtes]] SQL mirror; ppmTable (q67/q118, minH 1) and q119
-    * (minH 8 — see its scaladoc) must not drift apart.
-    */
-  private[graft] def rasterOf(bytes: Array[Byte],
-                              minH: Int = 1): Netpbm.Image = {
-    val h = math.max((bytes.length + 23) / 24, minH)
-    Netpbm.Image(8, h, 255, java.util.Arrays.copyOf(bytes, 8 * h * 3))
+  private[graft] def fixtureTable(spark: SparkSession, dir: String,
+      width: Int, codec: Codec): Dataset[MediaRow] = {
+    import spark.implicits._
+    val mime = codec.mime
+    val encode = codec.fixture.getOrElse(
+      throw new IllegalArgumentException(s"no fixture encoder for $mime"))
+    textsAt(spark, dir, width).map { case (id, t) =>
+      val payload = encode(id, t.getBytes("UTF-8"))
+      MediaRow(id, payload,
+        MediaMeta(mime, payload.length.toLong, payloadChecksum(payload)))
+    }
   }
 
-  def ppmTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.read.parquet(dir + "/documents.parquet")
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val payload = Netpbm.encodeP6(rasterOf(t.getBytes("UTF-8")))
-        MediaRow(id, payload,
-          MediaMeta(MimePpm, payload.length.toLong, payloadChecksum(payload)))
+  /** The documents-as-rasters layout contract: text bytes as RGB
+    * triples, `width` pixels per row, zero-padded to whole rows, height
+    * floored at `minH` — ONE Scala copy, replayed by the [[rasterCtes]]
+    * SQL mirror. The ppm fixture (q67/q118, width 8, minH 1), q119
+    * (width 8, minH 8 — see its scaladoc) and the bmp/png fixtures
+    * (width 10: each file row is 30 bytes, NOT 4-aligned, so every BMP
+    * row carries 2 padding bytes and the decoder's stride arithmetic
+    * is actually exercised) must not drift apart.
+    */
+  private def rgbRaster(bytes: Array[Byte], width: Int,
+                        minH: Int = 1): Netpbm.Image = {
+    val h = math.max((bytes.length + 3 * width - 1) / (3 * width), minH)
+    Netpbm.Image(width, h, 255,
+      java.util.Arrays.copyOf(bytes, width * h * 3))
+  }
+
+  /** [[rgbRaster]] at the 8-wide P6 geometry. */
+  private[graft] def rasterOf(bytes: Array[Byte],
+                              minH: Int = 1): Netpbm.Image =
+    rgbRaster(bytes, 8, minH)
+
+  /** A one-byte-per-pixel plane as (v, v, v) truecolor. */
+  private def grayImage(plane: Array[Byte], width: Int): Netpbm.Image = {
+    val px = new Array[Byte](plane.length * 3)
+    var i = 0
+    while (i < plane.length) {
+      px(3 * i) = plane(i); px(3 * i + 1) = plane(i); px(3 * i + 2) = plane(i)
+      i += 1
+    }
+    Netpbm.Image(width, plane.length / width, 255, px)
+  }
+
+  /** Text bytes, one per pixel, 10 per row, zero-padded to whole rows
+    * (height ceil(nb/10), min 1).
+    */
+  private def grayPlane(bytes: Array[Byte]): Array[Byte] =
+    java.util.Arrays.copyOf(bytes, 10 * math.max((bytes.length + 9) / 10, 1))
+
+  /** The gray layout for the palette and VP8L codecs (gif/webp): one
+    * GRAYSCALE pixel per text byte. GIF is palette-based (≤ 256
+    * colors), so the RGB layout cannot ride it; the BT.601 integer
+    * luma of (b, b, b) is exactly b, so the decode stats reduce to
+    * plain byte statistics — the closed form [[grayLumaSql]] replays.
+    */
+  private def grayRaster(bytes: Array[Byte]): Netpbm.Image =
+    grayImage(grayPlane(bytes), 10)
+
+  /** The 8×8-TILED layout for the lossy codecs (jpeg/vp8) as a luma
+    * plane: each text byte becomes one CONSTANT 8×8 block — 10 blocks
+    * per row, so width 80, height 8·ceil(nb/10), tail zero-padded. The
+    * constant-block device is what makes a LOSSY codec oracle-exact:
+    * a constant block's DCT is a single integral DC coefficient (every
+    * AC exactly zero), so quantization at 1 and the IDCT reproduce the
+    * value bit-exactly while the stream still runs the full real
+    * machinery — Huffman codes, DC differentials (±8·Δbyte, category up
+    * to 11), zigzag, dequant. VP8 sees the same per-4x4-uniform layout
+    * (see [[Vp8]]): residuals encode as DC levels at quantizer step 8
+    * and reconstruct to the byte verbatim.
+    */
+  private def tiled80(bytes: Array[Byte]): Array[Byte] = {
+    val idx = grayPlane(bytes)
+    val w = 80
+    val luma = new Array[Byte](64 * idx.length)
+    var bi = 0
+    while (bi < idx.length) {
+      val v = idx(bi)
+      val bx = bi % 10; val by = bi / 10
+      var yy = 0
+      while (yy < 8) {
+        var xx = 0
+        while (xx < 8) {
+          luma((by * 8 + yy) * w + bx * 8 + xx) = v
+          xx += 1
+        }
+        yy += 1
       }
+      bi += 1
+    }
+    luma
   }
 
   /** Shared oracle CTE: documents' UTF-8 bytes decoded to an INT list
     * (`bts.bs`, with `nb` = byte count) via hex() nibble extraction —
-    * the ONE copy of the byte-decode recipe, consumed by the q50, q67
-    * (which pads it to the raster size) and q69 oracles.
+    * the ONE copy of the byte-decode recipe, consumed by every oracle
+    * that replays the text bytes (q50, the luma faces, q69 and
+    * q118–q120). `cap` truncates to the first `cap` bytes (the vp8
+    * fixture's [[Vp8MaxBytes]]).
     */
-  private val hexBytesCte: String =
-    """hx AS (
-      |  SELECT doc_id, hex(encode(coalesce(text,''))) AS h,
-      |         octet_length(encode(coalesce(text,''))) AS nb
+  private def hexBytes(cap: Option[Int]): String = {
+    val enc = "encode(coalesce(text,''))"
+    val (h, nb) = cap match {
+      case Some(c) => (s"substr(hex($enc), 1, ${2 * c})",
+                       s"LEAST(octet_length($enc), $c)")
+      case None => (s"hex($enc)", s"octet_length($enc)")
+    }
+    s"""hx AS (
+      |  SELECT doc_id, $h AS h,
+      |         $nb AS nb
       |  FROM documents),
       |bts AS (
       |  SELECT doc_id, nb, list_transform(range(1, nb+1), i ->
       |    CAST(strpos('0123456789ABCDEF', substr(h, CAST(2*i-1 AS INT), 1)) - 1 AS INT) * 16 +
       |    CAST(strpos('0123456789ABCDEF', substr(h, CAST(2*i AS INT), 1)) - 1 AS INT)) AS bs
       |  FROM hx)""".stripMargin
-
-  /** q67 entry: the REAL image decode in the oracle-checked path —
-    * [[ppmTable]] → [[Netpbm.decode]] (actual header parse + raster
-    * read, not byte math) → per-image luma stats. All state stays in
-    * INTEGER longs (pixel count, BT.601 integer-luma sum, dark-pixel
-    * count) until one final double division, so the DuckDB replay is
-    * hash-exact — float feature vectors never touch the compared
-    * output.
-    */
-  def q67(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    ppmTable(spark, dir)
-      .map { r =>
-        Netpbm.decode(r.payload) match {
-          case Some(img) =>
-            var lsum = 0L; var dark = 0L; var i = 0
-            while (i < img.pixels.length) {
-              val l = Netpbm.luma(img.pixels(i) & 0xff,
-                img.pixels(i + 1) & 0xff, img.pixels(i + 2) & 0xff)
-              lsum += l; if (l < 32) dark += 1; i += 3
-            }
-            (r.doc_id, img.width.toLong, img.height.toLong,
-              img.nPixels.toLong, lsum, dark, true)
-          case None => (r.doc_id, 0L, 0L, 0L, 0L, 0L, false)
-        }
-      }
-      .toDF("doc_id", "img_w", "img_h", "n_px", "luma_sum", "n_dark", "ok")
-      .select(col("doc_id"), col("img_w"), col("img_h"), col("n_px"),
-        col("ok"),
-        graft.queries.Q.round4(
-          col("luma_sum").cast("double") / col("n_px")).as("luma_mean4"),
-        graft.queries.Q.round4(
-          col("n_dark").cast("double") / col("n_px")).as("dark_frac4"))
-      .orderBy(col("doc_id"))
   }
 
-  /** DuckDB mirror of q67: rebuild the raster (UTF-8 bytes via
-    * hex(encode()), zero-padded to 24*ceil(nb/24), min one 8-pixel
-    * row), BT.601 integer luma per pixel (`//` = the same int
-    * division), aggregate the identical integer state, divide once.
-    */
-  /** DuckDB rendering of [[rasterOf]]'s padded-byte-list layout
+  private val hexBytesCte: String = hexBytes(None)
+
+  /** DuckDB rendering of [[rgbRaster]]'s padded-byte-list layout
     * (`pad(doc_id, ih, bs)` over the [[hexBytesCte]] bytes) — the ONE
-    * SQL copy of the raster rebuild, consumed by the q67, q118 and
-    * q119 oracles (minH parameterized like the Scala side).
+    * SQL copy of the raster rebuild, consumed by the RGB luma, q118 and
+    * q119 oracles (width and minH parameterized like the Scala side).
     */
-  private def rasterCtes(minH: Int): String =
+  private def rasterCtes(minH: Int, width: Int = 8): String =
     s"""dims AS (
-      |  SELECT doc_id, GREATEST(CAST(ceil(nb / 24.0) AS BIGINT), $minH) AS ih
+      |  SELECT doc_id, GREATEST(CAST(ceil(nb / ${3 * width}.0) AS BIGINT), $minH) AS ih
       |  FROM hx),
       |pad AS (
       |  SELECT b.doc_id, d.ih,
       |    list_concat(b.bs,
-      |      list_transform(range(b.nb, d.ih*24), x -> CAST(0 AS INT))) AS bs
+      |      list_transform(range(b.nb, d.ih*${3 * width}), x -> CAST(0 AS INT))) AS bs
       |  FROM bts b JOIN dims d USING (doc_id))""".stripMargin
 
   /** DuckDB rendering of [[Netpbm.dHash64]]'s 9×8 luma grid over a
@@ -632,11 +647,66 @@ object Multimodal {
       |     bs[CAST(3*(((i//9)*ih//8)*8 + ((i%9)*8//9)) + 3 AS INT)]*114) // 1000) AS g
       |  FROM $src)""".stripMargin
 
-  val q67Sql: String =
+  /** The codec-family luma-stats face, shared by every image decode
+    * face (one kernel, seven decoders): `codec`'s fixture at scan
+    * width `width` → its real decoder → integer luma sum + dark count
+    * → one final division. All state stays in INTEGER longs until that
+    * division, so the DuckDB replay is hash-exact — float feature
+    * vectors never touch the compared output. Fence rows are ok=false
+    * with n_px=1 (a malformed blob must cost one VISIBLE row, never an
+    * ANSI divide-by-zero task death).
+    */
+  private def lumaStatsFace(spark: SparkSession, dir: String, width: Int,
+                            codec: Codec): DataFrame = {
+    import spark.implicits._
+    val decode = codec.image
+    fixtureTable(spark, dir, width, codec)
+      .map { r =>
+        decode(r.payload) match {
+          case Some(img) =>
+            var lsum = 0L; var dark = 0L; var i = 0
+            while (i < img.pixels.length) {
+              val l = Netpbm.luma(img.pixels(i) & 0xff,
+                img.pixels(i + 1) & 0xff, img.pixels(i + 2) & 0xff)
+              lsum += l; if (l < 32) dark += 1; i += 3
+            }
+            (r.doc_id, img.width.toLong, img.height.toLong,
+              (img.width * img.height).toLong, lsum, dark, true)
+          case None => (r.doc_id, 1L, 1L, 1L, 0L, 0L, false)
+        }
+      }
+      .toDF("doc_id", "img_w", "img_h", "n_px", "luma_sum", "n_dark", "ok")
+      .select(col("doc_id"), col("img_w"), col("img_h"), col("n_px"),
+        col("ok"),
+        graft.queries.Q.round4(
+          col("luma_sum").cast("double") / col("n_px")).as("luma_mean4"),
+        graft.queries.Q.round4(
+          col("n_dark").cast("double") / col("n_px")).as("dark_frac4"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** The luma-stats SELECT over `agg(doc_id, n_px, lsum, ndark)`. */
+  private def lumaSelect(imgW: Int, imgH: String): String =
+    s"""SELECT doc_id, CAST($imgW AS BIGINT) AS img_w,
+      |  CAST($imgH AS BIGINT) AS img_h,
+      |  CAST(n_px AS BIGINT) AS n_px, TRUE AS ok,
+      |  ${graft.queries.Q.round4Sql("CAST(lsum AS DOUBLE) / n_px")} AS luma_mean4,
+      |  ${graft.queries.Q.round4Sql("CAST(ndark AS DOUBLE) / n_px")} AS dark_frac4
+      |FROM agg ORDER BY doc_id""".stripMargin
+
+  /** DuckDB mirror of the RGB luma faces (q67 at width 8, q91/q124 at
+    * width 10): rebuild the raster ([[rasterCtes]]), BT.601 integer
+    * luma per pixel (`//` = the same int division), aggregate the
+    * identical integer state, divide once. Everything the file format
+    * adds — BMP's BGR/bottom-up/row padding, PNG's filter/unfilter,
+    * zlib and CRC — must cancel: encode∘decode is the identity on the
+    * pixel array, which is the round trip each query proves.
+    */
+  private def rgbLumaSql(width: Int): String =
     s"""WITH $hexBytesCte,
-      |${rasterCtes(1)},
+      |${rasterCtes(1, width)},
       |lum AS (
-      |  SELECT doc_id, ih, list_transform(range(0, ih*8), p ->
+      |  SELECT doc_id, ih, list_transform(range(0, ih*$width), p ->
       |    (bs[CAST(3*p+1 AS INT)]*299 + bs[CAST(3*p+2 AS INT)]*587 +
       |     bs[CAST(3*p+3 AS INT)]*114) // 1000) AS ls
       |  FROM pad),
@@ -645,14 +715,39 @@ object Multimodal {
       |  SELECT doc_id, any_value(ih) AS ih, count(*) AS n_px,
       |         sum(l) AS lsum, count(*) FILTER (l < 32) AS ndark
       |  FROM px GROUP BY doc_id)
-      |SELECT doc_id, CAST(8 AS BIGINT) AS img_w, CAST(ih AS BIGINT) AS img_h,
-      |  CAST(n_px AS BIGINT) AS n_px, TRUE AS ok,
-      |  ${graft.queries.Q.round4Sql("CAST(lsum AS DOUBLE) / n_px")} AS luma_mean4,
-      |  ${graft.queries.Q.round4Sql("CAST(ndark AS DOUBLE) / n_px")} AS dark_frac4
-      |FROM agg ORDER BY doc_id""".stripMargin
+      |${lumaSelect(width, "ih")}""".stripMargin
+
+  /** DuckDB mirror of the gray luma faces: grayscale means
+    * luma(b,b,b) = b exactly (299+587+114 = 1000), so the replay is
+    * PLAIN BYTE STATISTICS over the zero-padded 10-wide plane, each
+    * byte owning `tile`×`tile` pixels (1 for gif/webp, 8 for
+    * jpeg/vp8), over the first `cap` bytes. The whole LZW/palette,
+    * VP8L transform/prefix/cache/LZ77, Huffman/DCT or arithmetic-coder
+    * machinery must cancel for the hash to match.
+    */
+  private def grayLumaSql(tile: Int, cap: Option[Int] = None): String =
+    s"""WITH ${hexBytes(cap)},
+      |dims AS (
+      |  SELECT doc_id, GREATEST(CAST(ceil(nb / 10.0) AS BIGINT), 1) AS hb
+      |  FROM hx),
+      |agg AS (
+      |  SELECT b.doc_id, d.hb, d.hb * ${10 * tile * tile} AS n_px,
+      |    ${tile * tile} * coalesce(list_sum(b.bs), 0) AS lsum,
+      |    ${tile * tile} * (list_count(list_filter(b.bs, x -> x < 32)) +
+      |      (d.hb * 10 - b.nb)) AS ndark
+      |  FROM bts b JOIN dims d ON b.doc_id = d.doc_id)
+      |${lumaSelect(10 * tile, s"hb * $tile")}""".stripMargin
+
+  /** q67 entry: the REAL image decode in the oracle-checked path —
+    * the ppm fixture (each doc's text bytes as the raster of an 8-wide
+    * P6 image through [[Netpbm.encodeP6]]) → [[Netpbm.decode]] (actual
+    * header parse + raster read, not byte math) → per-image luma stats.
+    */
+  def q67(spark: SparkSession, dir: String): DataFrame =
+    lumaStatsFace(spark, dir, RawScan, Codecs.ppm)
 
   /** q118: PERCEPTUAL image fingerprint in the oracle-checked path —
-    * [[ppmTable]] → real [[Netpbm.decode]] → [[Netpbm.dHash64]] (9×8
+    * the ppm fixture → real [[Netpbm.decode]] → [[Netpbm.dHash64]] (9×8
     * nearest-neighbor luma grid, adjacent-sample comparison bits).
     * The hash is emitted as TWO 32-bit halves (dh_hi/dh_lo BIGINT):
     * bit 63 of a one-column form would need the sign bit, and signed
@@ -665,7 +760,7 @@ object Multimodal {
     */
   def q118(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    ppmTable(spark, dir)
+    fixtureTable(spark, dir, RawScan, Codecs.ppm)
       .map { r =>
         Netpbm.decode(r.payload) match {
           case Some(img) =>
@@ -731,9 +826,7 @@ object Multimodal {
     */
   def q119(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val hashes = spark.read.parquet(dir + "/documents.parquet")
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
+    val hashes = textsAt(spark, dir, RawScan)
       .flatMap { case (id, t) =>
         val px = rasterOf(t.getBytes("UTF-8"), minH = 8)
         val base = (id, Netpbm.dHash64(px))
@@ -777,36 +870,16 @@ object Multimodal {
       |  FROM grid),
       |${graft.queries.TextQ.hammingPairsSql("dh", "h")}""".stripMargin
 
-  /** Audio-from-documents corpus for the WAV arm: each doc's UTF-8
-    * text bytes as centered mono PCM16 samples (sample = (byte - 128)
-    * * 256, 8 kHz), through the real [[Wav.encodePcm16]] — the q69
-    * decode side then walks real RIFF chunks, and the samples being a
-    * pure function of the text bytes lets DuckDB replay the round
-    * trip.
-    */
-  def wavTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.read.parquet(dir + "/documents.parquet")
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val samples = t.getBytes("UTF-8")
-          .map(b => (((b & 0xff) - 128) * 256).toShort)
-        val payload = Wav.encodePcm16(Wav.Audio(8000, samples))
-        MediaRow(id, payload,
-          MediaMeta(MimeWav, payload.length.toLong, payloadChecksum(payload)))
-      }
-  }
-
   /** q69 entry: the real AUDIO decode in the oracle-checked path —
-    * [[wavTable]] → [[Wav.decode]] (actual RIFF chunk walk) → signal
-    * stats. Integer state (sample count, peak magnitude, sum of
-    * squares) until the final rms division — DuckDB replays exactly,
-    * the q67 recipe on the audio arm.
+    * the wav fixture (each text byte as one centered PCM16 sample
+    * through [[Wav.encodePcm16]]) → [[Wav.decode]] (actual RIFF chunk
+    * walk) → signal stats. Integer state (sample count, peak
+    * magnitude, sum of squares) until the final rms division — DuckDB
+    * replays exactly, the q67 recipe on the audio arm.
     */
   def q69(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    wavTable(spark, dir)
+    fixtureTable(spark, dir, RawScan, Codecs.wav)
       .map { r =>
         Wav.decode(r.payload) match {
           case Some(a) =>
@@ -855,8 +928,8 @@ object Multimodal {
            "sqrt(CAST(a.ss AS DOUBLE) / a.n)")} ELSE 0.0 END AS rms4
       |FROM hx h LEFT JOIN agg a USING (doc_id) ORDER BY doc_id""".stripMargin
 
-  /** q120: AUDIO fingerprint in the oracle-checked path — [[wavTable]]
-    * → real [[Wav.decode]] (actual RIFF chunk walk, the q69 path) →
+  /** q120: AUDIO fingerprint in the oracle-checked path — the wav
+    * fixture → real [[Wav.decode]] (actual RIFF chunk walk, the q69 path) →
     * [[Wav.energyHash64]] (65-window energy contour, adjacent-window
     * comparison bits). Completes the perceptual-fingerprint family:
     * text (q43 winnowing), image (q118 dHash), audio (this) — each an
@@ -867,7 +940,7 @@ object Multimodal {
     */
   def q120(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    wavTable(spark, dir)
+    fixtureTable(spark, dir, RawScan, Codecs.wav)
       .map { r =>
         Wav.decode(r.payload) match {
           case Some(a) =>
@@ -906,465 +979,85 @@ object Multimodal {
       |FROM en ORDER BY doc_id""".stripMargin
   }
 
-  /** Documents laid out as WIDTH-10 24-bpp BMPs through the REAL
-    * [[Bmp.encode]] writer — width 10 deliberately makes each file row
-    * 30 bytes, NOT 4-aligned, so every row carries 2 padding bytes and
-    * the decoder's stride arithmetic is actually exercised (width 8
-    * would make padding vacuously zero). Text bytes → RGB top-down,
-    * zero-padded to whole rows; the encoder flips to bottom-up BGR on
-    * disk and [[Bmp.decode]] must flip both back for the stats to
-    * match the oracle's replay of the raw bytes.
+  /** q91 entry: the real BMP decode in the oracle-checked path — the
+    * bmp fixture (the text bytes as a width-10 RGB raster through the
+    * REAL [[Bmp.encode]] writer, which flips to bottom-up BGR on disk
+    * with 2 padding bytes per row) → [[Bmp.decode]] (actual header
+    * validation + bottom-up padded-stride raster read, which must flip
+    * both back) → the q67 luma stats, the recipe on the third codec
+    * arm.
     */
-  def bmpTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.read.parquet(dir + "/documents.parquet")
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val bytes = t.getBytes("UTF-8")
-        val h = math.max((bytes.length + 29) / 30, 1)
-        val px = java.util.Arrays.copyOf(bytes, 10 * h * 3)
-        val payload = Bmp.encode(Netpbm.Image(10, h, 255, px))
-        MediaRow(id, payload,
-          MediaMeta(MimeBmp, payload.length.toLong, payloadChecksum(payload)))
-      }
-  }
+  def q91(spark: SparkSession, dir: String): DataFrame =
+    lumaStatsFace(spark, dir, RawScan, Codecs.bmp)
 
-  /** q91 entry: the real BMP decode in the oracle-checked path —
-    * [[bmpTable]] → [[Bmp.decode]] (actual header validation +
-    * bottom-up padded-stride raster read) → the q67 luma stats.
-    * Integer state until one final division, the q67/q69 recipe on
-    * the third codec arm.
-    */
-  def q91(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    bmpTable(spark, dir)
-      .map { r =>
-        Bmp.decode(r.payload) match {
-          case Some(img) =>
-            var lsum = 0L; var dark = 0L; var i = 0
-            while (i < img.pixels.length) {
-              val l = Netpbm.luma(img.pixels(i) & 0xff,
-                img.pixels(i + 1) & 0xff, img.pixels(i + 2) & 0xff)
-              lsum += l; if (l < 32) dark += 1; i += 3
-            }
-            (r.doc_id, img.width.toLong, img.height.toLong,
-              (img.width * img.height).toLong, lsum, dark, true)
-          case None => (r.doc_id, 0L, 0L, 0L, 0L, 0L, false)
-        }
-      }
-      .toDF("doc_id", "img_w", "img_h", "n_px", "luma_sum", "n_dark", "ok")
-      .select(col("doc_id"), col("img_w"), col("img_h"), col("n_px"),
-        col("ok"),
-        graft.queries.Q.round4(
-          col("luma_sum").cast("double") / col("n_px")).as("luma_mean4"),
-        graft.queries.Q.round4(
-          col("n_dark").cast("double") / col("n_px")).as("dark_frac4"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** DuckDB mirror of q91: rebuild the raster (UTF-8 bytes zero-padded
-    * to 30·ceil(nb/30), min one 10-pixel row), BT.601 integer luma,
-    * identical integer state, one division — the q67 mirror at the
-    * BMP geometry. The file's BGR/bottom-up/padding details cancel:
-    * encode∘decode is the identity on the pixel array, which is the
-    * round trip the query proves.
-    */
-  val q91Sql: String =
-    s"""WITH $hexBytesCte,
-      |dims AS (
-      |  SELECT doc_id, GREATEST(CAST(ceil(nb / 30.0) AS BIGINT), 1) AS ih
-      |  FROM hx),
-      |pad AS (
-      |  SELECT b.doc_id, d.ih,
-      |    list_concat(b.bs,
-      |      list_transform(range(b.nb, d.ih*30), x -> CAST(0 AS INT))) AS bs
-      |  FROM bts b JOIN dims d USING (doc_id)),
-      |lum AS (
-      |  SELECT doc_id, ih, list_transform(range(0, ih*10), p ->
-      |    (bs[CAST(3*p+1 AS INT)]*299 + bs[CAST(3*p+2 AS INT)]*587 +
-      |     bs[CAST(3*p+3 AS INT)]*114) // 1000) AS ls
-      |  FROM pad),
-      |px AS (SELECT doc_id, ih, unnest(ls) AS l FROM lum),
-      |agg AS (
-      |  SELECT doc_id, any_value(ih) AS ih, count(*) AS n_px,
-      |         sum(l) AS lsum, count(*) FILTER (l < 32) AS ndark
-      |  FROM px GROUP BY doc_id)
-      |SELECT doc_id, CAST(10 AS BIGINT) AS img_w, CAST(ih AS BIGINT) AS img_h,
-      |  CAST(n_px AS BIGINT) AS n_px, TRUE AS ok,
-      |  ${graft.queries.Q.round4Sql("CAST(lsum AS DOUBLE) / n_px")} AS luma_mean4,
-      |  ${graft.queries.Q.round4Sql("CAST(ndark AS DOUBLE) / n_px")} AS dark_frac4
-      |FROM agg ORDER BY doc_id""".stripMargin
-
-  /** The codec-family luma-stats face, shared by q124/q125/q126 (one
-    * kernel, three decoders): decode → integer luma sum + dark count →
-    * one final division, fence rows ok=false with n_px=1 (a malformed
-    * blob must cost one VISIBLE row, never an ANSI divide-by-zero
-    * task death).
-    */
-  private def lumaStatsFace(media: Dataset[MediaRow],
-      decode: Array[Byte] => Option[Netpbm.Image]): DataFrame = {
-    import media.sparkSession.implicits._
-    media
-      .map { r =>
-        decode(r.payload) match {
-          case Some(img) =>
-            var lsum = 0L; var dark = 0L; var i = 0
-            while (i < img.pixels.length) {
-              val l = Netpbm.luma(img.pixels(i) & 0xff,
-                img.pixels(i + 1) & 0xff, img.pixels(i + 2) & 0xff)
-              lsum += l; if (l < 32) dark += 1; i += 3
-            }
-            (r.doc_id, img.width.toLong, img.height.toLong,
-              (img.width * img.height).toLong, lsum, dark, true)
-          case None => (r.doc_id, 1L, 1L, 1L, 0L, 0L, false)
-        }
-      }
-      .toDF("doc_id", "img_w", "img_h", "n_px", "luma_sum", "n_dark", "ok")
-      .select(col("doc_id"), col("img_w"), col("img_h"), col("n_px"),
-        col("ok"),
-        graft.queries.Q.round4(
-          col("luma_sum").cast("double") / col("n_px")).as("luma_mean4"),
-        graft.queries.Q.round4(
-          col("n_dark").cast("double") / col("n_px")).as("dark_frac4"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Documents laid out as WIDTH-10 truecolor PNGs through the REAL
-    * [[Png.encode]] writer — the q91 geometry (30 bytes per row, text
-    * bytes zero-padded to whole rows) behind the fourth codec. The
-    * encoder cycles the per-row filter type `y mod 5`, so every
-    * multi-row document exercises ALL FIVE unfilter paths
-    * (None/Sub/Up/Average/Paeth) plus the zlib inflate and per-chunk
-    * CRC validation on the decode side.
-    */
-  def pngTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    docsSpread(spark, dir)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val bytes = t.getBytes("UTF-8")
-        val h = math.max((bytes.length + 29) / 30, 1)
-        val px = java.util.Arrays.copyOf(bytes, 10 * h * 3)
-        val payload = Png.encode(Netpbm.Image(10, h, 255, px))
-        MediaRow(id, payload,
-          MediaMeta(MimePng, payload.length.toLong, payloadChecksum(payload)))
-      }
-  }
-
-  /** q124 entry: the real PNG decode in the oracle-checked path —
-    * [[pngTable]] → [[Png.decode]] (signature + CRC-validated chunk
-    * walk + zlib inflate + all-five-filters unfilter) → the q67/q91
-    * luma stats. Integer state until one final division, the codec-
-    * family recipe on the fourth arm — the one covering a format real
-    * crawls serve ([[graft.sources.WarcSource.media]] routes PNG
-    * responses here by magic).
+  /** q124 entry: the real PNG decode in the oracle-checked path — the
+    * png fixture (q91's width-10 RGB geometry through the REAL
+    * [[Png.encode]] writer, which cycles the per-row filter type
+    * `y mod 5`, so every multi-row document exercises ALL FIVE
+    * unfilter paths) → [[Png.decode]] (signature + CRC-validated chunk
+    * walk + zlib inflate + all-five-filters unfilter) → the codec-
+    * family luma stats. The fourth arm, the one covering a format
+    * real crawls serve ([[graft.sources.WarcSource.media]] routes PNG
+    * responses here by magic). The geometry is deliberately q91's, so
+    * one closed-form replay of the raw text bytes checks both round
+    * trips.
     */
   def q124(spark: SparkSession, dir: String): DataFrame =
-    lumaStatsFace(pngTable(spark, dir), Png.decode)
+    lumaStatsFace(spark, dir, FullWidth, Codecs.png)
 
-  /** DuckDB mirror of q124: [[q91Sql]] verbatim — the raster GEOMETRY
-    * (width 10, zero-padded 30-byte rows) is deliberately identical,
-    * and encode∘decode is the identity on the pixel array for BOTH
-    * codecs, so the same closed-form replay of the raw text bytes
-    * checks either round trip. What differs — and what the query
-    * proves — is everything between: filter/unfilter, zlib, CRC.
-    */
-  val q124Sql: String = q91Sql
-
-  /** Documents laid out as WIDTH-10 GRAYSCALE GIFs through the real
-    * [[Gif.encode]] writer — GIF is palette-based (≤ 256 colors), so
-    * the codec-family layout switches from RGB triples to one
-    * grayscale pixel PER TEXT BYTE: palette entry b = (b, b, b),
-    * height = ceil(nb/10), tail zero-padded. The BT.601 integer luma
-    * of (b, b, b) is exactly b, so the decode stats reduce to plain
-    * byte statistics — the closed form [[q125Sql]] replays. Real LZW
-    * rides the round trip (text's repeated tokens give genuine
-    * dictionary growth; the zero-padded tail is the canonical KwKwK
-    * run).
-    */
-  def gifTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    docsSpread(spark, dir)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val bytes = t.getBytes("UTF-8")
-        val h = math.max((bytes.length + 9) / 10, 1)
-        val idx = java.util.Arrays.copyOf(bytes, 10 * h)
-        val px = new Array[Byte](10 * h * 3)
-        var i = 0
-        while (i < idx.length) {
-          px(3 * i) = idx(i); px(3 * i + 1) = idx(i); px(3 * i + 2) = idx(i)
-          i += 1
-        }
-        val payload = Gif.encode(Netpbm.Image(10, h, 255, px))
-        MediaRow(id, payload,
-          MediaMeta(MimeGif, payload.length.toLong, payloadChecksum(payload)))
-      }
-  }
-
-  /** q125 entry: the real GIF decode in the oracle-checked path —
-    * [[gifTable]] → [[Gif.decode]] (header walk, palette, REAL
-    * variable-width LZW with width escalation and KwKwK) → the
-    * codec-family luma stats. The fifth arm, and the second covering
-    * a format real crawls serve ([[graft.sources.WarcSource.media]]
-    * routes GIF responses here by magic).
+  /** q125 entry: the real GIF decode in the oracle-checked path — the
+    * gif fixture ([[grayRaster]] through the real [[Gif.encode]]
+    * writer: text's repeated tokens give genuine LZW dictionary
+    * growth; the zero-padded tail is the canonical KwKwK run) →
+    * [[Gif.decode]] (header walk, palette, REAL variable-width LZW
+    * with width escalation and KwKwK) → the codec-family luma stats.
+    * The fifth arm, and the second covering a format real crawls
+    * serve ([[graft.sources.WarcSource.media]] routes GIF responses
+    * here by magic).
     */
   def q125(spark: SparkSession, dir: String): DataFrame =
-    lumaStatsFace(gifTable(spark, dir), Gif.decode)
+    lumaStatsFace(spark, dir, FullWidth, Codecs.gif)
 
-  /** DuckDB mirror of q125: grayscale means luma(b,b,b) = b exactly
-    * (299+587+114 = 1000), so the replay is PLAIN BYTE STATISTICS
-    * over the zero-padded 10-wide raster — the whole LZW/palette
-    * machinery must cancel for the hash to match.
-    */
-  val q125Sql: String =
-    s"""WITH $hexBytesCte,
-      |dims AS (
-      |  SELECT doc_id, GREATEST(CAST(ceil(nb / 10.0) AS BIGINT), 1) AS ih
-      |  FROM hx),
-      |agg AS (
-      |  SELECT b.doc_id, d.ih, d.ih * 10 AS n_px,
-      |    coalesce(list_sum(b.bs), 0) AS lsum,
-      |    list_count(list_filter(b.bs, x -> x < 32)) +
-      |      (d.ih * 10 - b.nb) AS ndark
-      |  FROM bts b JOIN dims d ON b.doc_id = d.doc_id)
-      |SELECT doc_id, CAST(10 AS BIGINT) AS img_w, CAST(ih AS BIGINT) AS img_h,
-      |  CAST(n_px AS BIGINT) AS n_px, TRUE AS ok,
-      |  ${graft.queries.Q.round4Sql("CAST(lsum AS DOUBLE) / n_px")} AS luma_mean4,
-      |  ${graft.queries.Q.round4Sql("CAST(ndark AS DOUBLE) / n_px")} AS dark_frac4
-      |FROM agg ORDER BY doc_id""".stripMargin
-
-  /** Documents laid out as WIDTH-10 GRAYSCALE WebP (VP8L) images —
-    * [[gifTable]]'s exact raster layout (one pixel per text byte,
-    * palette-free (b,b,b) truecolor, height ceil(nb/10), zero-padded
-    * tail) through the real [[Webp.encode]] writer with the full
-    * option gauntlet ON: subtract-green, the Select predictor
-    * (mode 11, 16×16 blocks with border rules), a 6-bit color cache,
-    * and dist-1 LZ77 run chunks. VP8L is lossless, so decode
-    * reproduces the raster exactly and the decode stats reduce to
-    * plain byte statistics — [[q125Sql]] replays verbatim. What
-    * differs — and what the query proves — is everything between:
-    * prefix codes, the predictor inverse, the cache, the copy loop.
-    */
-  def webpTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    docsSpread(spark, dir)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val bytes = t.getBytes("UTF-8")
-        val h = math.max((bytes.length + 9) / 10, 1)
-        val idx = java.util.Arrays.copyOf(bytes, 10 * h)
-        val px = new Array[Byte](10 * h * 3)
-        var i = 0
-        while (i < idx.length) {
-          px(3 * i) = idx(i); px(3 * i + 1) = idx(i); px(3 * i + 2) = idx(i)
-          i += 1
-        }
-        val still = Netpbm.Image(10, h, 255, px)
-        // every 5th doc ships as an ANIMATED container (r18): the
-        // raster rides frame 1 with a deliberately-different second
-        // frame, so the q125Sql closed form only matches if the
-        // POSTER frame — not the last — is what decodes
-        val payload =
-          if (((id % 5) + 5) % 5 == 0)
-            Webp.encodeAnimated(Seq(still,
-              Netpbm.Image(10, h, 255, px.map(b => (~b).toByte))))
-          else Webp.encode(still,
-            subtractGreen = true, predictor = Some(11),
-            cacheBits = 6, runs = true)
-        MediaRow(id, payload,
-          MediaMeta(graft.sources.BinarySource.MimeWebp,
-            payload.length.toLong, payloadChecksum(payload)))
-      }
-  }
-
-  /** q128 entry: the real WebP (VP8L) decode in the oracle-checked
-    * path — [[webpTable]] → [[Webp.decode]] (RIFF walk, prefix codes,
-    * subtract-green + Select-predictor inverses, color cache, LZ77
-    * copies) → the codec-family luma stats. The seventh arm, covering
-    * the third format real crawls serve ([[graft.sources.WarcSource
-    * .media]] routes WebP responses here by magic).
-    */
-  def q128(spark: SparkSession, dir: String): DataFrame =
-    lumaStatsFace(webpTable(spark, dir), Webp.decode)
-
-  /** DuckDB mirror of q128: the [[gifTable]] layout at lossless
-    * fidelity means the closed form is [[q125Sql]] unchanged — the
-    * whole VP8L transform/prefix/cache/LZ77 machinery must cancel
-    * for the hash to match.
-    */
-  val q128Sql: String = q125Sql
-
-  /** Documents laid out as 8×8-TILED grayscale JPEGs through the real
-    * [[Jpeg.encode]] writer (quant 1): each text byte becomes one
-    * CONSTANT 8×8 block — 10 blocks per row, so width 80, height
-    * 8·ceil(nb/10), tail zero-padded. The constant-block device is
-    * what makes a LOSSY codec oracle-exact: a constant block's DCT is
-    * a single integral DC coefficient (every AC exactly zero), so
-    * quantization at 1 and the IDCT reproduce the value bit-exactly
-    * while the stream still runs the full real machinery — Huffman
-    * codes, DC differentials (±8·Δbyte, category up to 11), zigzag,
-    * dequant.
-    */
-  def jpegTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    docsSpread(spark, dir)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val bytes = t.getBytes("UTF-8")
-        val hb = math.max((bytes.length + 9) / 10, 1)
-        val idx = java.util.Arrays.copyOf(bytes, 10 * hb)
-        val w = 80; val h = 8 * hb
-        val px = new Array[Byte](w * h * 3)
-        var bi = 0
-        while (bi < idx.length) {
-          val v = idx(bi)
-          val bx = bi % 10; val by = bi / 10
-          var yy = 0
-          while (yy < 8) {
-            var xx = 0
-            while (xx < 8) {
-              val o = ((by * 8 + yy) * w + bx * 8 + xx) * 3
-              px(o) = v; px(o + 1) = v; px(o + 2) = v
-              xx += 1
-            }
-            yy += 1
-          }
-          bi += 1
-        }
-        val payload = Jpeg.encode(Netpbm.Image(w, h, 255, px))
-        MediaRow(id, payload,
-          MediaMeta(MimeJpeg, payload.length.toLong, payloadChecksum(payload)))
-      }
-  }
-
-  /** q126 entry: the real JPEG decode in the oracle-checked path —
-    * [[jpegTable]] → [[Jpeg.decode]] (marker walk, Huffman, DC
+  /** q126 entry: the real JPEG decode in the oracle-checked path — the
+    * jpeg fixture ([[tiled80]] through the real [[Jpeg.encode]]
+    * writer, quant 1) → [[Jpeg.decode]] (marker walk, Huffman, DC
     * differentials, zigzag, dequant, IDCT) → the codec-family luma
     * stats. The sixth arm, covering the format that dominates crawl
     * image bytes ([[graft.sources.WarcSource.media]] routes JPEG
     * responses here by magic); exactness rides the constant-block
-    * device ([[jpegTable]]).
+    * device ([[tiled80]]): each byte owns 64 pixels of its own value,
+    * so the stats are byte statistics × 64.
     */
   def q126(spark: SparkSession, dir: String): DataFrame =
-    lumaStatsFace(jpegTable(spark, dir), Jpeg.decode)
+    lumaStatsFace(spark, dir, FullWidth, Codecs.jpeg)
 
-  /** DuckDB mirror of q126: each byte owns 64 pixels of its own value
-    * and grayscale luma(b,b,b) = b, so the stats are BYTE STATISTICS
-    * × 64 — the entire Huffman/DCT pipeline must cancel for the hash
-    * to match.
+  /** q128 entry: the real WebP (VP8L) decode in the oracle-checked
+    * path — the webp fixture (the gif layout at lossless fidelity,
+    * through the full VP8L option gauntlet, every 5th doc animated) →
+    * [[Webp.decode]] (RIFF walk, prefix codes, subtract-green +
+    * Select-predictor inverses, color cache, LZ77 copies) → the
+    * codec-family luma stats. The seventh arm, covering the third
+    * format real crawls serve ([[graft.sources.WarcSource.media]]
+    * routes WebP responses here by magic). VP8L is lossless, so the
+    * closed form is q125's unchanged.
     */
-  val q126Sql: String =
-    s"""WITH $hexBytesCte,
-      |dims AS (
-      |  SELECT doc_id, GREATEST(CAST(ceil(nb / 10.0) AS BIGINT), 1) AS hb
-      |  FROM hx),
-      |agg AS (
-      |  SELECT b.doc_id, d.hb, d.hb * 640 AS n_px,
-      |    64 * coalesce(list_sum(b.bs), 0) AS lsum,
-      |    64 * (list_count(list_filter(b.bs, x -> x < 32)) +
-      |      (d.hb * 10 - b.nb)) AS ndark
-      |  FROM bts b JOIN dims d ON b.doc_id = d.doc_id)
-      |SELECT doc_id, CAST(80 AS BIGINT) AS img_w,
-      |  CAST(hb * 8 AS BIGINT) AS img_h,
-      |  CAST(n_px AS BIGINT) AS n_px, TRUE AS ok,
-      |  ${graft.queries.Q.round4Sql("CAST(lsum AS DOUBLE) / n_px")} AS luma_mean4,
-      |  ${graft.queries.Q.round4Sql("CAST(ndark AS DOUBLE) / n_px")} AS dark_frac4
-      |FROM agg ORDER BY doc_id""".stripMargin
+  def q128(spark: SparkSession, dir: String): DataFrame =
+    lumaStatsFace(spark, dir, FullWidth, Codecs.webp)
 
-  /** Documents laid out as the q126 geometry behind the LOSSY VP8
-    * codec ([[Vp8.encodeWebp]] — a conforming keyframe whose
-    * bitstreams libwebp itself decodes byte-identically, the
-    * strongest possible writer claim): 80 px wide, each text byte
-    * owning an 8x8 LUMA region of its own value, chroma flat 128.
-    * The per-4x4-uniform layout is exactly what makes the lossy
-    * pipeline exact (see [[Vp8]]): residuals encode as DC levels at
-    * quantizer step 8 and reconstruct to the byte verbatim.
-    */
-  def vp8Table(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    docsSpread(spark, dir)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        // VP8 dims are 14-bit: h = 8*ceil(nb/10) <= 16383 caps nb at
-        // 20,470 bytes — capped HERE (and mirrored in the oracle's
-        // hex-slice) instead of throwing inside an executor map on a
-        // long document (the review-caught failure mode)
-        val bytes = t.getBytes("UTF-8").take(20470)
-        val hb = math.max((bytes.length + 9) / 10, 1)
-        val idx = java.util.Arrays.copyOf(bytes, 10 * hb)
-        val w = 80; val h = 8 * hb
-        val luma = new Array[Byte](w * h)
-        var bi = 0
-        while (bi < idx.length) {
-          val v = idx(bi)
-          val bx = bi % 10; val by = bi / 10
-          var yy = 0
-          while (yy < 8) {
-            var xx = 0
-            while (xx < 8) {
-              luma((by * 8 + yy) * w + bx * 8 + xx) = v
-              xx += 1
-            }
-            yy += 1
-          }
-          bi += 1
-        }
-        val payload = Vp8.encodeWebp(luma, w, h)
-        MediaRow(id, payload,
-          MediaMeta("image/webp", payload.length.toLong,
-            payloadChecksum(payload)))
-      }
-  }
-
-  /** q148 entry: the LOSSY-VP8 decode in the oracle-checked path —
-    * [[vp8Table]] fixtures through [[Webp.decode]]'s VP8 route (the
-    * full RFC 6386 keyframe machinery: bool decoder, token trees,
-    * dequant, IWHT/IDCT, intra predictors; the q148 fixtures carry
-    * filter level 0, and U=V=128 makes the repo's YUV→RGB exact on
-    * gray). DuckDB recomputes the luma statistics as byte statistics
-    * × 64 — the entire arithmetic-coder + transform pipeline must
-    * cancel for the hash to match, the q126 device on the lossy
-    * codec.
+  /** q148 entry: the LOSSY-VP8 decode in the oracle-checked path — the
+    * vp8 fixture (q126's geometry behind [[Vp8.encodeWebp]], a
+    * conforming keyframe whose bitstreams libwebp itself decodes
+    * byte-identically, the strongest possible writer claim) through
+    * [[Webp.decode]]'s VP8 route (the full RFC 6386 keyframe
+    * machinery: bool decoder, token trees, dequant, IWHT/IDCT, intra
+    * predictors; the q148 fixtures carry filter level 0, and U=V=128
+    * makes the repo's YUV→RGB exact on gray). DuckDB recomputes the
+    * luma statistics as byte statistics × 64 — the entire
+    * arithmetic-coder + transform pipeline must cancel for the hash to
+    * match, the q126 device on the lossy codec.
     */
   def q148(spark: SparkSession, dir: String): DataFrame =
-    lumaStatsFace(vp8Table(spark, dir), Webp.decode)
-
-  /** DuckDB mirror of q148 — the q126 shape verbatim (same geometry,
-    * different codec underneath).
-    */
-  val q148Sql: String =
-    s"""WITH hx AS (
-      |  SELECT doc_id,
-      |    substr(hex(encode(coalesce(text,''))), 1, 40940) AS h,
-      |    LEAST(octet_length(encode(coalesce(text,''))), 20470) AS nb
-      |  FROM documents),
-      |bts AS (
-      |  SELECT doc_id, nb, list_transform(range(1, nb+1), i ->
-      |    CAST(strpos('0123456789ABCDEF', substr(h, CAST(2*i-1 AS INT), 1)) - 1 AS INT) * 16 +
-      |    CAST(strpos('0123456789ABCDEF', substr(h, CAST(2*i AS INT), 1)) - 1 AS INT)) AS bs
-      |  FROM hx),
-      |dims AS (
-      |  SELECT doc_id, GREATEST(CAST(ceil(nb / 10.0) AS BIGINT), 1) AS hb
-      |  FROM hx),
-      |agg AS (
-      |  SELECT b.doc_id, d.hb, d.hb * 640 AS n_px,
-      |    64 * coalesce(list_sum(b.bs), 0) AS lsum,
-      |    64 * (list_count(list_filter(b.bs, x -> x < 32)) +
-      |      (d.hb * 10 - b.nb)) AS ndark
-      |  FROM bts b JOIN dims d ON b.doc_id = d.doc_id)
-      |SELECT doc_id, CAST(80 AS BIGINT) AS img_w,
-      |  CAST(hb * 8 AS BIGINT) AS img_h,
-      |  CAST(n_px AS BIGINT) AS n_px, TRUE AS ok,
-      |  ${graft.queries.Q.round4Sql("CAST(lsum AS DOUBLE) / n_px")} AS luma_mean4,
-      |  ${graft.queries.Q.round4Sql("CAST(ndark AS DOUBLE) / n_px")} AS dark_frac4
-      |FROM agg ORDER BY doc_id""".stripMargin
+    lumaStatsFace(spark, dir, FullWidth, Codecs.vp8)
 
   /** q149 entry: HEIF/AVIF PROBE in the oracle-checked path — the
     * triage arm for the two still-image formats whose pixel decode
@@ -1378,7 +1071,7 @@ object Multimodal {
     */
   def q149(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(dir + "/documents.parquet")
+    docsAt(spark, dir, RawScan)
       .select(col("doc_id")).as[Long]
       .map { id =>
         def pmod(m: Long): Long = ((id % m) + m) % m
@@ -1438,7 +1131,7 @@ object Multimodal {
     */
   def q150(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    docsSpread(spark, dir)
+    docsAt(spark, dir, FullWidth)
       .select(col("doc_id")).as[Long]
       .map { id =>
         def pmod(m: Long): Long = ((id % m) + m) % m
@@ -1529,6 +1222,34 @@ object Multimodal {
       |    AS BIGINT) AS colsum
       |FROM delt ORDER BY doc_id""".stripMargin
 
+  /** The text round-trip face shared by the document-format faces
+    * (q127/q129/q131/q134–q138/q140/q151): each doc's text written
+    * through a real format writer and read back by its extractor,
+    * `roundTrip(doc_id, text)`, at scan width `width`. A None fences
+    * to ("", false). The oracle is [[identitySql]]: the whole writer +
+    * extractor machinery must cancel for the hash to match.
+    */
+  private def roundTripFace(spark: SparkSession, dir: String, width: Int,
+      okCol: String = "extract_ok")(
+      roundTrip: (Long, String) => Option[String]): DataFrame = {
+    import spark.implicits._
+    textsAt(spark, dir, width)
+      .map { case (id, t) =>
+        val back = roundTrip(id, t)
+        (id, back.getOrElse(""), back.isDefined)
+      }
+      .toDF("doc_id", "text", okCol)
+      .orderBy(col("doc_id"))
+  }
+
+  /** DuckDB mirror of every text round-trip face: the identity — the
+    * face must return each document's text verbatim, with every
+    * payload accepted.
+    */
+  private def identitySql(okCol: String): String =
+    s"""SELECT doc_id, coalesce(text, '') AS text, TRUE AS $okCol
+      |FROM documents ORDER BY doc_id""".stripMargin
+
   /** q151 entry: BROTLI DECODE in the oracle-checked path — each
     * document's UTF-8 bytes written as a CONFORMANT RFC 7932 stream
     * (the fixture encoders are system-libbrotlidec-verified, see
@@ -1544,33 +1265,17 @@ object Multimodal {
     * copy/dictionary/context paths are pinned by the libbrotli
     * parity corpus, which no SQL engine can replay).
     */
-  def q151(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docsSpread(spark, dir)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        def pmod(m: Long): Long = ((id % m) + m) % m
-        val bytes = t.getBytes("UTF-8")
-        val stream = pmod(3) match {
-          case 0 => Brotli.encodeFixed(bytes, split = false)
-          case 1 => Brotli.encodeUncompressed(bytes)
-          case _ => Brotli.encodeFixed(bytes, split = true)
-        }
-        val back = Brotli.decode(stream)
-        (id, back.map(new String(_, "UTF-8")).getOrElse(""),
-          back.isDefined)
+  def q151(spark: SparkSession, dir: String): DataFrame =
+    roundTripFace(spark, dir, FullWidth, okCol = "decode_ok") { (id, t) =>
+      def pmod(m: Long): Long = ((id % m) + m) % m
+      val bytes = t.getBytes("UTF-8")
+      val stream = pmod(3) match {
+        case 0 => Brotli.encodeFixed(bytes, split = false)
+        case 1 => Brotli.encodeUncompressed(bytes)
+        case _ => Brotli.encodeFixed(bytes, split = true)
       }
-      .toDF("doc_id", "text", "decode_ok")
-      .orderBy(col("doc_id"))
-  }
-
-  /** DuckDB mirror of q151: the identity — decode must return the
-    * original text verbatim with every stream accepted.
-    */
-  val q151Sql: String =
-    """SELECT doc_id, coalesce(text, '') AS text, TRUE AS decode_ok
-      |FROM documents ORDER BY doc_id""".stripMargin
+      Brotli.decode(stream).map(new String(_, "UTF-8"))
+    }
 
   /** q127 entry: PDF TEXT EXTRACTION in the oracle-checked path —
     * each document written as a REAL single-page PDF
@@ -1583,25 +1288,9 @@ object Multimodal {
     * (the lossless-round-trip device, applied to a document format
     * instead of a raster).
     */
-  def q127(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docsSpread(spark, dir)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val back = PdfText.extract(PdfText.write(t))
-        (id, back.getOrElse(""), back.isDefined)
-      }
-      .toDF("doc_id", "text", "extract_ok")
-      .orderBy(col("doc_id"))
-  }
-
-  /** DuckDB mirror of q127: the identity — extraction must return the
-    * original text verbatim.
-    */
-  val q127Sql: String =
-    """SELECT doc_id, coalesce(text, '') AS text, TRUE AS extract_ok
-      |FROM documents ORDER BY doc_id""".stripMargin
+  def q127(spark: SparkSession, dir: String): DataFrame =
+    roundTripFace(spark, dir, FullWidth)((_, t) =>
+      PdfText.extract(PdfText.write(t)))
 
   /** q129 entry: DOCX TEXT EXTRACTION in the oracle-checked path —
     * each document written as a REAL .docx ([[Docx.write]]: the
@@ -1615,25 +1304,9 @@ object Multimodal {
     * the hash to match (q127's lossless-round-trip device, applied
     * to the office-document format crawls actually serve).
     */
-  def q129(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docsSpread(spark, dir)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val back = Docx.extractText(Docx.write(t))
-        (id, back.getOrElse(""), back.isDefined)
-      }
-      .toDF("doc_id", "text", "extract_ok")
-      .orderBy(col("doc_id"))
-  }
-
-  /** DuckDB mirror of q129: the identity — extraction must return the
-    * original text verbatim.
-    */
-  val q129Sql: String =
-    """SELECT doc_id, coalesce(text, '') AS text, TRUE AS extract_ok
-      |FROM documents ORDER BY doc_id""".stripMargin
+  def q129(spark: SparkSession, dir: String): DataFrame =
+    roundTripFace(spark, dir, FullWidth)((_, t) =>
+      Docx.extractText(Docx.write(t)))
 
   /** q131 entry: EPUB TEXT EXTRACTION in the oracle-checked path —
     * each document written as a REAL .epub ([[Epub.write]]: stored
@@ -1644,23 +1317,9 @@ object Multimodal {
     * the bounded XHTML scan). The oracle is the IDENTITY on the
     * documents table — q129's device on the book format.
     */
-  def q131(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docsSpread(spark, dir)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val back = Epub.extractText(Epub.write(t))
-        (id, back.getOrElse(""), back.isDefined)
-      }
-      .toDF("doc_id", "text", "extract_ok")
-      .orderBy(col("doc_id"))
-  }
-
-  /** DuckDB mirror of q131: the identity — extraction must return the
-    * original text verbatim.
-    */
-  val q131Sql: String = q129Sql
+  def q131(spark: SparkSession, dir: String): DataFrame =
+    roundTripFace(spark, dir, FullWidth)((_, t) =>
+      Epub.extractText(Epub.write(t)))
 
   /** q134 entry: RTF TEXT EXTRACTION in the oracle-checked path —
     * each document written as REAL RTF ([[RtfText.write]]: header
@@ -1673,21 +1332,9 @@ object Multimodal {
     * q127/q129/q131's device on the legacy office format, and the
     * route that stops ASCII RTF from polluting the text corpus.
     */
-  def q134(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.parquet(dir + "/documents.parquet")
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val back = RtfText.extract(RtfText.write(t))
-        (id, back.getOrElse(""), back.isDefined)
-      }
-      .toDF("doc_id", "text", "extract_ok")
-      .orderBy(col("doc_id"))
-  }
-
-  /** DuckDB mirror of q134: the identity. */
-  val q134Sql: String = q129Sql
+  def q134(spark: SparkSession, dir: String): DataFrame =
+    roundTripFace(spark, dir, RawScan)((_, t) =>
+      RtfText.extract(RtfText.write(t)))
 
   /** q135 entry: ODT TEXT EXTRACTION in the oracle-checked path —
     * each document written as a REAL OpenDocument package
@@ -1699,21 +1346,9 @@ object Multimodal {
     * oracle is the IDENTITY — the fourth document format under the
     * q127 device, and the LibreOffice half of the office pair.
     */
-  def q135(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docsSpread(spark, dir, MidKernelParts)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val back = Odt.extractText(Odt.write(t))
-        (id, back.getOrElse(""), back.isDefined)
-      }
-      .toDF("doc_id", "text", "extract_ok")
-      .orderBy(col("doc_id"))
-  }
-
-  /** DuckDB mirror of q135: the identity. */
-  val q135Sql: String = q129Sql
+  def q135(spark: SparkSession, dir: String): DataFrame =
+    roundTripFace(spark, dir, MidKernelParts)((_, t) =>
+      Odt.extractText(Odt.write(t)))
 
   /** q136 entry: XLSX TEXT EXTRACTION in the oracle-checked path —
     * each document written as a REAL SpreadsheetML package
@@ -1725,21 +1360,9 @@ object Multimodal {
     * IDENTITY — the tabular member of the office family under the
     * q127 device.
     */
-  def q136(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docsSpread(spark, dir, MidKernelParts)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val back = Xlsx.extractText(Xlsx.write(t))
-        (id, back.getOrElse(""), back.isDefined)
-      }
-      .toDF("doc_id", "text", "extract_ok")
-      .orderBy(col("doc_id"))
-  }
-
-  /** DuckDB mirror of q136: the identity. */
-  val q136Sql: String = q129Sql
+  def q136(spark: SparkSession, dir: String): DataFrame =
+    roundTripFace(spark, dir, MidKernelParts)((_, t) =>
+      Xlsx.extractText(Xlsx.write(t)))
 
   /** q137 entry: LEGACY WORD (.doc) TEXT EXTRACTION in the
     * oracle-checked path — each document written as a REAL Word-97
@@ -1754,21 +1377,9 @@ object Multimodal {
     * q127 device, and the arm that turns the OLE2 media route into
     * corpus text.
     */
-  def q137(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docsSpread(spark, dir, MidKernelParts)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val back = DocText.extract(DocText.write(t))
-        (id, back.getOrElse(""), back.isDefined)
-      }
-      .toDF("doc_id", "text", "extract_ok")
-      .orderBy(col("doc_id"))
-  }
-
-  /** DuckDB mirror of q137: the identity. */
-  val q137Sql: String = q129Sql
+  def q137(spark: SparkSession, dir: String): DataFrame =
+    roundTripFace(spark, dir, MidKernelParts)((_, t) =>
+      DocText.extract(DocText.write(t)))
 
   /** q138 entry: LEGACY EXCEL (.xls, BIFF8) TEXT EXTRACTION in the
     * oracle-checked path — each document written as a REAL BIFF8
@@ -1784,21 +1395,9 @@ object Multimodal {
     * under the q127 device, and the reference-shaped gap (its own
     * domain is tabular import).
     */
-  def q138(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docsSpread(spark, dir, MidKernelParts)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val back = XlsText.extract(XlsText.write(t))
-        (id, back.getOrElse(""), back.isDefined)
-      }
-      .toDF("doc_id", "text", "extract_ok")
-      .orderBy(col("doc_id"))
-  }
-
-  /** DuckDB mirror of q138: the identity. */
-  val q138Sql: String = q129Sql
+  def q138(spark: SparkSession, dir: String): DataFrame =
+    roundTripFace(spark, dir, MidKernelParts)((_, t) =>
+      XlsText.extract(XlsText.write(t)))
 
   /** q140 entry: LEGACY POWERPOINT (.ppt) TEXT EXTRACTION in the
     * oracle-checked path — each document written as a REAL
@@ -1810,21 +1409,9 @@ object Multimodal {
     * recursive record walk, CR/VT normalization). The oracle is the
     * IDENTITY — the slides member of the legacy trio.
     */
-  def q140(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    docsSpread(spark, dir, MidKernelParts)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val back = PptText.extract(PptText.write(t, forceChars = id % 2 == 0))
-        (id, back.getOrElse(""), back.isDefined)
-      }
-      .toDF("doc_id", "text", "extract_ok")
-      .orderBy(col("doc_id"))
-  }
-
-  /** DuckDB mirror of q140: the identity. */
-  val q140Sql: String = q129Sql
+  def q140(spark: SparkSession, dir: String): DataFrame =
+    roundTripFace(spark, dir, MidKernelParts)((id, t) =>
+      PptText.extract(PptText.write(t, forceChars = id % 2 == 0)))
 
   // ---- q139: the media-coverage AUDIT face ----
 
@@ -1835,10 +1422,11 @@ object Multimodal {
     * (status `fenced`).
     */
   private val CoverageMimes: IndexedSeq[String] = IndexedSeq(
-    MimePpm, MimeBmp, MimePng, MimeGif, MimeJpeg, "image/webp",
-    MimeWav, "image/tiff", "audio/mpeg", "audio/ogg", "audio/flac",
-    "video/mp4", "video/x-matroska", "image/avif", "image/heic",
-    "image/webp")
+    MimePpm, MimeBmp, MimePng, MimeGif, MimeJpeg, BinarySource.MimeWebp,
+    MimeWav, BinarySource.MimeTiff, BinarySource.MimeMp3,
+    BinarySource.MimeOgg, BinarySource.MimeFlac, BinarySource.MimeMp4,
+    BinarySource.MimeMkv, BinarySource.MimeAvif, BinarySource.MimeHeic,
+    BinarySource.MimeWebp)
 
   /** Truncation prefix per class: long enough to keep the SNIFF
     * magic (the blob still routes to its class — the lying-content
@@ -1911,35 +1499,21 @@ object Multimodal {
     }
   }
 
-  /** The class-k attempt — the SAME kernels the media pipeline
-    * dispatches, so the audit measures the real thing.
+  /** The class-k attempt — the [[Codecs]] entry the media pipeline
+    * dispatches the class mime to, so the audit measures the real
+    * thing. HEIF has no entry: its probe stands in.
     */
-  private[graft] def coverageStatus(k: Int,
-                                         payload: Array[Byte]): String =
-    k match {
-      case 0 => if (Netpbm.decode(payload).isDefined) "decoded" else "fenced"
-      case 1 => if (Bmp.decode(payload).isDefined) "decoded" else "fenced"
-      case 2 => if (Png.decode(payload).isDefined) "decoded" else "fenced"
-      case 3 => if (Gif.decode(payload).isDefined) "decoded" else "fenced"
-      case 4 => if (Jpeg.decode(payload).isDefined) "decoded" else "fenced"
-      case 5 => if (Webp.decode(payload).isDefined) "decoded" else "fenced"
-      case 6 => if (Wav.decode(payload).isDefined) "decoded" else "fenced"
-      case 7 => if (Tiff.parse(payload).isDefined) "triaged" else "fenced"
-      case 8 => if (Mp3.parse(payload).isDefined) "triaged" else "fenced"
-      case 9 => if (Ogg.parse(payload).isDefined) "triaged" else "fenced"
-      case 10 => if (Flac.parse(payload).isDefined) "triaged" else "fenced"
-      case 11 => if (Mp4.parse(payload).isDefined) "triaged" else "fenced"
-      case 12 => if (Mkv.parse(payload).isDefined) "triaged" else "fenced"
-      case 13 | 14 =>
-        if (Heif.probe(payload).isDefined) "triaged" else "fenced"
-      case _ =>
-        // the poster frame must DECODE and the flag must read true —
-        // an animated container whose flag goes dark is a coverage
-        // regression the same as a fencing decoder
-        if (Webp.decode(payload).isDefined && Webp.isAnimated(payload))
-          "decoded"
-        else "fenced"
+  private[graft] def coverageStatus(k: Int, payload: Array[Byte]): String = {
+    val ok = k match {
+      case 13 | 14 => Heif.probe(payload).isDefined
+      // the poster frame must DECODE and the flag must read true — an
+      // animated container whose flag goes dark is a coverage
+      // regression the same as a fencing decoder
+      case 15 => Webp.decode(payload).isDefined && Webp.isAnimated(payload)
+      case _ => Codecs.byMime(CoverageMimes(k)).features(payload).isDefined
     }
+    if (!ok) "fenced" else if (k <= 6 || k == 15) "decoded" else "triaged"
+  }
 
   /** q139 entry: the MEDIA-COVERAGE AUDIT as a verified query — the
     * operator a 100 TB crawl deployment dashboards daily ("of the
@@ -1966,7 +1540,7 @@ object Multimodal {
     */
   def q139(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val rows = docsSpread(spark, dir, MidKernelParts)
+    val rows = docsAt(spark, dir, MidKernelParts)
       .select(col("doc_id")).as[Long]
       .map { id =>
         val k = ((id % 16) + 16) % 16
@@ -1984,8 +1558,8 @@ object Multimodal {
       }
       .toDF("doc_id", "payload", "status")
     rows
-      .select(graft.sources.BinarySource.sniffMime(col("payload"))
-        .as("mime"), col("status"))
+      .select(BinarySource.sniffMime(col("payload")).as("mime"),
+        col("status"))
       .groupBy(col("mime"), col("status"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("mime"), col("status"))
@@ -2007,7 +1581,7 @@ object Multimodal {
     */
   def q141(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    docsSpread(spark, dir, MidKernelParts)
+    docsAt(spark, dir, MidKernelParts)
       .select(col("doc_id")).as[Long]
       .map { id =>
         def pmod(m: Long): Long = ((id % m) + m) % m
@@ -2065,7 +1639,7 @@ object Multimodal {
     */
   def q147(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    docsSpread(spark, dir)
+    docsAt(spark, dir, FullWidth)
       .select(col("doc_id")).as[Long]
       .map { id =>
         def pmod(m: Long): Long = ((id % m) + m) % m
@@ -2165,7 +1739,7 @@ object Multimodal {
     */
   def q130(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(dir + "/documents.parquet")
+    docsAt(spark, dir, RawScan)
       .select(col("doc_id"))
       .as[Long]
       .map { id =>
@@ -2257,7 +1831,7 @@ object Multimodal {
     */
   def q132(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(dir + "/documents.parquet")
+    docsAt(spark, dir, RawScan)
       .select(col("doc_id"))
       .as[Long]
       .map { id =>
@@ -2336,7 +1910,7 @@ object Multimodal {
     */
   def q133(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    docsSpread(spark, dir, MidKernelParts)
+    docsAt(spark, dir, MidKernelParts)
       .select(col("doc_id"))
       .as[Long]
       .map { id =>
@@ -2425,4 +1999,37 @@ object Multimodal {
       |  FLOOR((list_reduce(list_prepend(CAST(0 AS DOUBLE),
       |    list_transform(f, x -> CAST(x AS DOUBLE))), (a,x) -> a+x)) * 10000 + 0.5)/10000 AS feature_sum
       |FROM feats ORDER BY doc_id""".stripMargin
+
+  /** The multimodal query family, in SURVEY §2 order. */
+  val entries: Seq[Entry] = Seq(
+    Entry("q50_multimodal_meta", q50, Some(q50Sql)),
+    Entry("q67_ppm_decode", q67, Some(rgbLumaSql(8))),
+    Entry("q69_wav_decode", q69, Some(q69Sql)),
+    Entry("q91_bmp_decode", q91, Some(rgbLumaSql(10))),
+    Entry("q118_image_dhash", q118, Some(q118Sql)),
+    Entry("q119_image_neardup", q119, Some(q119Sql)),
+    Entry("q120_audio_fingerprint", q120, Some(q120Sql)),
+    Entry("q124_png_decode", q124, Some(rgbLumaSql(10))),
+    Entry("q125_gif_decode", q125, Some(grayLumaSql(1))),
+    Entry("q126_jpeg_decode", q126, Some(grayLumaSql(8))),
+    Entry("q127_pdf_extract", q127, Some(identitySql("extract_ok"))),
+    Entry("q128_webp_decode", q128, Some(grayLumaSql(1))),
+    Entry("q129_docx_extract", q129, Some(identitySql("extract_ok"))),
+    Entry("q130_video_probe", q130, Some(q130Sql)),
+    Entry("q131_epub_extract", q131, Some(identitySql("extract_ok"))),
+    Entry("q132_audio_probe", q132, Some(q132Sql)),
+    Entry("q133_tiff_probe", q133, Some(q133Sql)),
+    Entry("q134_rtf_extract", q134, Some(identitySql("extract_ok"))),
+    Entry("q135_odt_extract", q135, Some(identitySql("extract_ok"))),
+    Entry("q136_xlsx_extract", q136, Some(identitySql("extract_ok"))),
+    Entry("q137_doc_extract", q137, Some(identitySql("extract_ok"))),
+    Entry("q138_xls_extract", q138, Some(identitySql("extract_ok"))),
+    Entry("q139_media_coverage", q139, Some(q139Sql)),
+    Entry("q140_ppt_extract", q140, Some(identitySql("extract_ok"))),
+    Entry("q141_exif_scrub", q141, Some(q141Sql)),
+    Entry("q147_exif_containers", q147, Some(q147Sql)),
+    Entry("q148_vp8_decode", q148, Some(grayLumaSql(8, Some(Vp8MaxBytes)))),
+    Entry("q149_heif_probe", q149, Some(q149Sql)),
+    Entry("q150_vp8_segfilter", q150, Some(q150Sql)),
+    Entry("q151_brotli_decode", q151, Some(identitySql("decode_ok"))))
 }

@@ -32,15 +32,21 @@ import org.apache.spark.sql.functions._
   */
 object BinarySource {
 
-  /** Route-only mimes: formats the sniffer recognizes so crawl intake
-    * can QUARANTINE them from the text corpus ([[WarcSource.documents]])
-    * and route them to the media face, even though no decoder exists
-    * yet for them (the decode dispatch fences them as ok=false — the
-    * stub arm). Keeping a JPEG out of the documents table does not
-    * require being able to decode it.
+  /** Every mime the sniffer emits, spelled once for the whole engine.
+    * The multimodal codec table decodes or triages many of them; the
+    * rest are route-only: formats the sniffer recognizes so crawl
+    * intake can QUARANTINE them from the text corpus
+    * ([[WarcSource.documents]]) and route them to the media face even
+    * though no decoder exists for them (the decode dispatch gives them
+    * the stub arm). Keeping an archive out of the documents table does
+    * not require being able to decode it.
     */
-  val MimeJpeg = graft.multimodal.Multimodal.MimeJpeg // decodable since r13
-  val MimeGif = graft.multimodal.Multimodal.MimeGif   // decodable since r13
+  val MimePpm = "image/x-portable-pixmap"
+  val MimeBmp = "image/bmp"
+  val MimeWav = "audio/x-wav"
+  val MimePng = "image/png"
+  val MimeJpeg = "image/jpeg"
+  val MimeGif = "image/gif"
   val MimeWebp = "image/webp"
   val MimePdf = "application/pdf"
   val MimeGzip = "application/gzip"
@@ -107,12 +113,11 @@ object BinarySource {
       substring(payload, 8, 1) < lit(Array[Byte](0x80.toByte)) &&
       substring(payload, 9, 1) < lit(Array[Byte](0x80.toByte)) &&
       substring(payload, 10, 1) < lit(Array[Byte](0x80.toByte))
-    when(magic(payload, 1, "P6"), lit(graft.multimodal.Multimodal.MimePpm))
-      .when(magic(payload, 1, "BM"), lit(graft.multimodal.Multimodal.MimeBmp))
+    when(magic(payload, 1, "P6"), lit(MimePpm))
+      .when(magic(payload, 1, "BM"), lit(MimeBmp))
       .when(magic(payload, 1, "RIFF") && magic(payload, 9, "WAVE"),
-        lit(graft.multimodal.Multimodal.MimeWav))
-      .when(magic(payload, 1, "\u0089PNG\r\n\u001a\n"),
-        lit(graft.multimodal.Multimodal.MimePng))
+        lit(MimeWav))
+      .when(magic(payload, 1, "\u0089PNG\r\n\u001a\n"), lit(MimePng))
       .when(magic(payload, 1, "\u00ff\u00d8\u00ff"), lit(MimeJpeg))
       .when(magic(payload, 1, "GIF87a") || magic(payload, 1, "GIF89a"),
         lit(MimeGif))

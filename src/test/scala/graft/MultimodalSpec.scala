@@ -1617,6 +1617,49 @@ class MultimodalSpec extends SparkSpec {
     assert(!f(3L).ok && f(3L).features.isEmpty)
   }
 
+  test("extractFeatures on TIFF mime yields IFD-walk evidence; a truncated file fences") {
+    import graft.multimodal.Tiff
+    import spark.implicits._
+    val tiff = Tiff.write(big = true, 24, 17, 5, 8, 3, 2, pages = 3)
+    val cut = java.util.Arrays.copyOf(tiff, 9) // header survives, IFD not
+    val media = Seq(
+      MediaRow(1L, tiff, MediaMeta(graft.sources.BinarySource.MimeTiff,
+        tiff.length.toLong, 0L)),
+      MediaRow(2L, cut, MediaMeta(graft.sources.BinarySource.MimeTiff,
+        cut.length.toLong, 0L))).toDS()
+    val f = Multimodal.extractFeatures(media).collect()
+      .map(r => r.doc_id -> r).toMap
+    // f0-f6: width, height, compression, bps, spp, photometric, pages
+    assert(f(1L).ok && f(1L).features.length == Multimodal.FeatureDim &&
+      f(1L).features.take(7).toSeq == Seq(24f, 17f, 5f, 8f, 3f, 2f, 3f),
+      f(1L).features.toSeq)
+    assert(!f(2L).ok && f(2L).features.isEmpty,
+      "a truncated TIFF fences, not stubs")
+  }
+
+  test("extractFeatures on Matroska mime yields EBML-walk evidence; a truncated file fences") {
+    import graft.multimodal.Mkv
+    import spark.implicits._
+    val mkv = Mkv.write("matroska", 65432L, Some(("V_VP9", 640, 360)),
+      Some(("A_OPUS", 44100, 1)))
+    val cut = java.util.Arrays.copyOf(mkv, 10) // EBML magic survives
+    val media = Seq(
+      MediaRow(1L, mkv, MediaMeta(graft.sources.BinarySource.MimeMkv,
+        mkv.length.toLong, 0L)),
+      MediaRow(2L, cut, MediaMeta(graft.sources.BinarySource.MimeMkv,
+        cut.length.toLong, 0L))).toDS()
+    val f = Multimodal.extractFeatures(media).collect()
+      .map(r => r.doc_id -> r).toMap
+    // the MP4 arm's layout: durationMs, width, height, video tracks,
+    // audio tracks, audio rate, audio channels
+    assert(f(1L).ok && f(1L).features.length == Multimodal.FeatureDim &&
+      f(1L).features.take(7).toSeq ==
+        Seq(65432f, 640f, 360f, 1f, 1f, 44100f, 1f),
+      f(1L).features.toSeq)
+    assert(!f(2L).ok && f(2L).features.isEmpty,
+      "a truncated Matroska file fences, not stubs")
+  }
+
   test("q132: audio probe end-to-end — every container probes, fields follow the doc_id closed form") {
     val out = Multimodal.q132(spark, sf).cache()
     assert(out.count() == Tables(spark, sf).documents.count())
