@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.CorpusPrep
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 class CorpusPrepSpec extends SparkSpec {
@@ -755,31 +756,9 @@ class CorpusPrepSpec extends SparkSpec {
 
   test("all stages at once: scrub + snapshot gate + dedup + near-dup + decontaminate + substring strip + weights + BPE packing compose in one run") {
     import spark.implicits._
-    val docs = Tables(spark, sf).documents
-      .select(col("doc_id"), col("text"), col("lang"), col("source"),
-        col("n_chars"))
-    // a prior snapshot holding a slice of the corpus, so the gate bites
-    val priorDir = java.nio.file.Files.createTempDirectory("graft-all-prior").toString
-    val prior = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
-    graft.operators.SnapshotBloom.save(spark,
-      graft.operators.SnapshotBloom.build(
-        prior.withColumn("text", graft.queries.PrepQ.scrub(col("text"))), 2000),
-      s"$priorDir/prior.bloom")
-    val bench = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-      .select(col("doc_id"), col("text"))
-    val vocab = graft.functions.expressions.Bpe
-      .trainOn(docs, col("doc_id"), col("text"), 50, sampleN = 100)
-    val sources = docs.select(col("source")).distinct()
-      .as[String].collect().sorted.toSeq
-    val weights = sources.take(2).map(_ -> 0.5).toMap
-    val cfgAll = CorpusPrep.Config(
-      langRates = Map("en" -> 0.8), defaultRate = 0.6, nShards = 4,
-      nearDupMinEst = Some(0.7), scrubPii = true,
-      packBudget = Some(512), bpeVocab = Some(vocab),
-      sourceWeights = Some(weights),
-      priorSnapshot = Some(s"$priorDir/prior.bloom"),
-      publishSnapshot = Some(2000L),
-      substrWindow = Some(16))
+    val CorpusPrepSpec.AllStages(docs, cfgAll, bench) =
+      CorpusPrepSpec.allStages(spark, sf)
+    val weights = cfgAll.sourceWeights.get
     val out = java.nio.file.Files.createTempDirectory("graft-all").toString
     val stats = CorpusPrep.run(docs, out, cfgAll, benchmark = Some(bench))
     // stage accounting is coherent
@@ -921,5 +900,43 @@ class CorpusPrepSpec extends SparkSpec {
     val out2 = java.nio.file.Files.createTempDirectory("graft-corpus-nm").toString
     CorpusPrep.run(docs, out2, cfgP.copy(packBudget = None))
     assert(!new java.io.File(CorpusPrep.manifestPath(out2)).exists())
+  }
+}
+
+object CorpusPrepSpec {
+
+  /** Every optional stage of [[CorpusPrep.run]] switched on over the
+    * documents at `sf`: its input, config and contamination benchmark.
+    */
+  final case class AllStages(docs: DataFrame, cfg: CorpusPrep.Config,
+      bench: DataFrame)
+
+  def allStages(spark: SparkSession, sf: String): AllStages = {
+    import spark.implicits._
+    val docs = Tables(spark, sf).documents
+      .select(col("doc_id"), col("text"), col("lang"), col("source"),
+        col("n_chars"))
+    // a prior snapshot holding a slice of the corpus, so the gate bites
+    val priorDir = java.nio.file.Files.createTempDirectory("graft-all-prior").toString
+    val prior = docs.filter(pmod(col("doc_id"), lit(7)) === 0)
+    graft.operators.SnapshotBloom.save(spark,
+      graft.operators.SnapshotBloom.build(
+        prior.withColumn("text", graft.queries.PrepQ.scrub(col("text"))), 2000),
+      s"$priorDir/prior.bloom")
+    val bench = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
+      .select(col("doc_id"), col("text"))
+    val vocab = graft.functions.expressions.Bpe
+      .trainOn(docs, col("doc_id"), col("text"), 50, sampleN = 100)
+    val sources = docs.select(col("source")).distinct()
+      .as[String].collect().sorted.toSeq
+    val weights = sources.take(2).map(_ -> 0.5).toMap
+    AllStages(docs, CorpusPrep.Config(
+      langRates = Map("en" -> 0.8), defaultRate = 0.6, nShards = 4,
+      nearDupMinEst = Some(0.7), scrubPii = true,
+      packBudget = Some(512), bpeVocab = Some(vocab),
+      sourceWeights = Some(weights),
+      priorSnapshot = Some(s"$priorDir/prior.bloom"),
+      publishSnapshot = Some(2000L),
+      substrWindow = Some(16)), bench)
   }
 }
