@@ -44,8 +44,8 @@ object Bench {
     * decode warms) and the r18 verdict flagged the growth trend: a
     * warm list that keeps growing converges on "measure only the
     * JIT-warm fast path". This constant is the single definition
-    * (InterleaveProbe replicates the bench environment from it, so the
-    * probe can no longer drift from the bench — the r18 advice), and
+    * (`Probe stages` under PROBE_WARMUP=1 warms through [[warmUp]]
+    * too, so the probe cannot drift from the bench), and
     * BenchWarmlistSpec pins its exact contents: any future change must
     * edit the pin too, making warm-list growth a reviewed, visible
     * diff instead of a side effect.
@@ -82,14 +82,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = EngineConf(
-      appName = "graft-bench",
-      master = Some(s"local[$cpus]"),
-      shufflePartitions = Some(cpus.toInt),
-      extraConf = Map("spark.ui.enabled" -> "false")).session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.localSession("graft-bench")
+    // artifact-inheritance snapshot BEFORE any query (warmup itself
+    // can build artifacts): see [[preexistingArtifacts]]
+    val inherited = preexistingArtifacts()
     // warm-up on the BENCHMARKED dataset: JVM/codegen/scheduler startup
     // must not bill to whichever query happens to run first. One
     // representative per operator family (relational agg, windowed
@@ -103,49 +100,7 @@ object Bench {
     // cache holds the registered surface (EngineConf.CodegenCacheEntries).
     // The warmup seconds are reported separately in the JSON.
     val wu0 = System.nanoTime()
-    // per-item fault isolation (round 7): a single broken warmup entry
-    // (q22 under the NTZ data drift) previously aborted the whole list
-    // inside one try, silently unwarming every entry after it — so part
-    // of the measured medians included the first-run codegen the warmup
-    // exists to exclude. Each item now fails alone.
-    // Per-item ATTRIBUTION (round 11): warmup was a single
-    // undifferentiated number, so when the official r10 artifact
-    // showed it jumping 26s -> 56s nothing could say which item (or
-    // machine churn) ate the difference. Each item's seconds are
-    // recorded and emitted as their own JSON line below.
-    val warmItems = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def warm(label: String)(body: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      try body catch { case _: Throwable => () }
-      warmItems += label -> (System.nanoTime() - t0) / 1e9
-    }
-    val t = Tables(spark, sfDir)
-    warm("t_lineitem") { t.lineitem.count(); () }
-    warm("t_documents") { t.documents.count(); () }
-    warm("t_embeddings") { t.embeddings.count(); () }
-    // q59 warms the LineDedup family (q59-q62): round 5 had no
-    // representative, so q62's first measured rep paid the family's
-    // whole-stage codegen inside measurement (one 21.6s driver rep).
-    // q74 warms the substring-dedup family (q74/q75/q78): the window-
-    // hash kernel + HOF span lambdas are its own codegen units, like
-    // the LineDedup family before it
-    // q86 warms the n-gram-model join family, q84 the url regex chain
-    // q126/q148/q128/q150 (r18) warm the multimodal decode family:
-    // the heavy Scala codecs (Jpeg, Vp8's 4.5 KB-bytecode decodeImpl)
-    // start interpreted, and with no family representative their C2
-    // compile billed to rep 1 of each decode query — q148's rep-1
-    // read 6-12x its warm time, wide enough to pollute the 3-rep
-    // median. q128 (VP8L + the webp container) and q150 (the
-    // segmented loop-filter arm) exercise the decode branches q148's
-    // uniform fixtures do not, so the JIT's branch profiles are
-    // trained BEFORE rep 1 instead of deopt-cycling mid-bench
-    // (-XX:+PrintCompilation traced 66 made-not-entrant events on
-    // Vp8 methods when these arms first ran under measurement)
-    // artifact-inheritance snapshot BEFORE any query (warmup itself
-    // can build artifacts): see [[preexistingArtifacts]]
-    val inherited = preexistingArtifacts()
-    WarmupQueries
-      .foreach(q => warm(q) { SparkEntry.queries(q)(spark, sfDir).count(); () })
+    val warmItems = warmUp(spark, sfDir)
     val warmupSec = (System.nanoTime() - wu0) / 1e9
     // SPARK_GRAFT_BENCH_EXCLUDE (a regex over query names): the drift
     // A/B knob — rerunning with a suspect family excluded separates
@@ -157,42 +112,32 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(n => sys.env.get("SPARK_GRAFT_BENCH_EXCLUDE")
         .exists(x => n.matches(x)))
-    // samples(name) = seconds per rep; a failed rep records -1 and the
-    // query's reported time becomes -1 (a failure must never report its
-    // tiny time-to-failure as a benchmark result)
-    val samples = scala.collection.mutable.Map(names.map(_ -> Vector.empty[Double]): _*)
-    // task-time/GC attribution (round 16): wall time cannot tell "the
-    // code got slower" from "the host stalled between stages" (the
-    // 66-89s A/B/A swings, SURVEY §6). Per rep, the delta of summed
-    // executor task time and JVM GC time brackets each query — the
-    // listener bus is DRAINED at each snapshot so a stage's events
-    // never misattribute to the next query. A drifted round then
-    // reads off the artifact alone: wall up + task flat = host churn;
-    // task up = real regression.
-    import org.apache.spark.graftbench.BenchBridge
-    BenchBridge.install(spark.sparkContext)
-    val taskSamples = scala.collection.mutable.Map(names.map(_ -> Vector.empty[Double]): _*)
-    val gcSamples = scala.collection.mutable.Map(names.map(_ -> Vector.empty[Double]): _*)
-    val cpuSamples = scala.collection.mutable.Map(names.map(_ -> Vector.empty[Double]): _*)
+    // one Recorder scope per rep; a failed rep records None
+    import org.apache.spark.graftbench.Recorder
+    val runs = scala.collection.mutable.Map(
+      names.map(_ -> Vector.empty[Option[Recorder.Measured]]): _*)
     // generated classes compiled during the timed reps: with the cache
     // sized to the registered surface, rep 2 onward compiles ~none, so
     // a cache thrash (a cap too small) reads off every artifact
     import org.apache.spark.metrics.source.CodegenMetrics
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     for (_ <- 1 to reps; name <- names) {
-      val (task0, gc0, cpu0) = BenchBridge.snapshot(spark.sparkContext)
-      val t0 = System.nanoTime()
-      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      val (task1, gc1, cpu1) = BenchBridge.snapshot(spark.sparkContext)
-      samples(name) = samples(name) :+ sec
-      taskSamples(name) = taskSamples(name) :+
-        (if (ok) task1 - task0 else -1.0)
-      gcSamples(name) = gcSamples(name) :+ (if (ok) gc1 - gc0 else -1.0)
-      cpuSamples(name) = cpuSamples(name) :+ (if (ok) cpu1 - cpu0 else -1.0)
+      val run =
+        try Some(Recorder.measure(spark.sparkContext)(
+          SparkEntry.queries(name)(spark, sfDir).count()))
+        catch { case _: Throwable => None }
+      runs(name) = runs(name) :+ run
     }
     val codegenCompiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    // per-rep series of one figure; a failed rep reads -1 and the
+    // query's median becomes -1 (a failure must never report its tiny
+    // time-to-failure as a benchmark result). Task/GC/CPU seconds
+    // (round 16): wall time cannot tell "the code got slower" from
+    // "the host stalled between stages" (the 66-89s A/B/A swings,
+    // SURVEY §6). A drifted round reads off the artifact alone: wall
+    // up + task flat = host churn; task up = real regression.
+    def series(f: Recorder.Measured => Double): Map[String, Vector[Double]] =
+      names.map(n => n -> runs(n).map(_.fold(-1.0)(f))).toMap
     def median(xs: Vector[Double]): Double = {
       if (xs.exists(_ < 0)) -1.0
       else {
@@ -201,10 +146,13 @@ object Bench {
         if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
       }
     }
-    val med = names.map(n => n -> median(samples(n))).toMap
-    val medTask = names.map(n => n -> median(taskSamples(n))).toMap
-    val medGc = names.map(n => n -> median(gcSamples(n))).toMap
-    val medCpu = names.map(n => n -> median(cpuSamples(n))).toMap
+    def medians(xs: Map[String, Vector[Double]]): Map[String, Double] =
+      names.map(n => n -> median(xs(n))).toMap
+    val samples = series(_.wallSec)
+    val med = medians(samples)
+    val medTask = medians(series(_.taskSec))
+    val medGc = medians(series(_.gcSec))
+    val medCpu = medians(series(_.cpuSec))
     def jmap(f: String => Double): String =
       names.map(n => s"\"" + n + "\":" + f(n)).mkString("{", ",", "}")
     // compact variant for the tail-surviving final line: 3-decimal
@@ -330,5 +278,53 @@ object Bench {
     // off the headline alone — wall up with task flat is host churn
     println(s"""{"metric":"total","value":${d3(total)},"unit":"sec","failed":$failed,"warmup_sec":${d3(warmupSec)},"reps":$reps,"n_queries":${names.length},"task_total":${d3(taskTotal)},"gc_total":${d3(gcTotal)},"cpu_total":${d3(cpuTotal)},"codegen_compiles":$codegenCompiles,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Warm the session on the benchmarked dataset: the three base
+    * tables, then every [[WarmupQueries]] entry. Returns each item's
+    * seconds in run order.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
+    // per-item fault isolation (round 7): a single broken warmup entry
+    // (q22 under the NTZ data drift) previously aborted the whole list
+    // inside one try, silently unwarming every entry after it — so part
+    // of the measured medians included the first-run codegen the warmup
+    // exists to exclude. Each item now fails alone.
+    // Per-item ATTRIBUTION (round 11): warmup was a single
+    // undifferentiated number, so when a recorded r10 run
+    // showed it jumping 26s -> 56s nothing could say which item (or
+    // machine churn) ate the difference. Each item's seconds are
+    // recorded and emitted as their own JSON line.
+    val warmItems = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    def warm(label: String)(body: => Unit): Unit = {
+      val t0 = System.nanoTime()
+      try body catch { case _: Throwable => () }
+      warmItems += label -> (System.nanoTime() - t0) / 1e9
+    }
+    val t = Tables(spark, sfDir)
+    warm("t_lineitem") { t.lineitem.count(); () }
+    warm("t_documents") { t.documents.count(); () }
+    warm("t_embeddings") { t.embeddings.count(); () }
+    // q59 warms the LineDedup family (q59-q62): round 5 had no
+    // representative, so q62's first measured rep paid the family's
+    // whole-stage codegen inside measurement (one 21.6 s rep).
+    // q74 warms the substring-dedup family (q74/q75/q78): the window-
+    // hash kernel + HOF span lambdas are its own codegen units, like
+    // the LineDedup family before it
+    // q86 warms the n-gram-model join family, q84 the url regex chain
+    // q126/q148/q128/q150 (r18) warm the multimodal decode family:
+    // the heavy Scala codecs (Jpeg, Vp8's 4.5 KB-bytecode decodeImpl)
+    // start interpreted, and with no family representative their C2
+    // compile billed to rep 1 of each decode query — q148's rep-1
+    // read 6-12x its warm time, wide enough to pollute the 3-rep
+    // median. q128 (VP8L + the webp container) and q150 (the
+    // segmented loop-filter arm) exercise the decode branches q148's
+    // uniform fixtures do not, so the JIT's branch profiles are
+    // trained BEFORE rep 1 instead of deopt-cycling mid-bench
+    // (-XX:+PrintCompilation traced 66 made-not-entrant events on
+    // Vp8 methods when these arms first ran under measurement)
+    WarmupQueries
+      .foreach(q => warm(q) { SparkEntry.queries(q)(spark, sfDir).count(); () })
+    warmItems.toSeq
   }
 }

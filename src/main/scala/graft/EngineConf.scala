@@ -95,6 +95,22 @@ final case class EngineConf(
 
 object EngineConf {
 
+  /** The local session of graft's mains (Bench, Verify, ScaleCheck,
+    * Probe): `local[$SPARK_GRAFT_CPUS]` (4 if unset) with as many
+    * shuffle partitions, the UI off and log level WARN — so every tool
+    * runs at the bench's width.
+    */
+  def localSession(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val s = EngineConf(
+      appName = appName,
+      master = Some(s"local[$cpus]"),
+      shufflePartitions = Some(cpus),
+      extraConf = Map("spark.ui.enabled" -> "false")).session()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Spark's cache of compiled generated classes (whole-stage and
     * expression codegen) is an LRU of this many entries; the Spark
     * default is 100. Measured on a 4-vCPU host under the default: one

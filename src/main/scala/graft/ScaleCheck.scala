@@ -134,14 +134,8 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = if (args.length > 1) args(1) else "target/scale_sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt.max(1)
-    val spark = EngineConf(
-      appName = "graft-scale-check",
-      master = Some(s"local[$cpus]"),
-      shufflePartitions = Some(cpus.toInt),
-      extraConf = Map("spark.ui.enabled" -> "false")).session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.localSession("graft-scale-check")
     buildSf1(spark, src, dst)
 
     val report = new StringBuilder

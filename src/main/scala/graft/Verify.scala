@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,13 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineConf(
-      appName = "graft-verify",
-      master = Some(s"local[$cpus]"),
-      shufflePartitions = Some(cpus.toInt),
-      extraConf = Map("spark.ui.enabled" -> "false")).session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineConf.localSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) =>
