@@ -175,8 +175,21 @@ object IvfIndex {
   def build(spark: SparkSession, embeddings: DataFrame, path: String,
             k: Int = 64, initRounds: Int = 2, lloydIters: Int = 2): BuildInfo =
     withIndexLock(spark, path) {
-      buildUnlocked(spark, embeddings, path, k, initRounds, lloydIters)
+      val info = buildUnlocked(spark, embeddings, path, k, initRounds,
+        lloydIters)
+      // a rebuilt index takes a fresh stream: forget the sink's applied
+      // batches and any pending append of the replaced index
+      graft.streaming.BatchLedger.reset(spark, path)
+      val marker = new Path(pendingPath(path))
+      marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(marker, false)
+      info
     }
+
+  /** The streaming sink's pending-append marker, beside the index
+    * ([[graft.streaming.Streams.applyIvfAppendBatch]]).
+    */
+  private[graft] def pendingPath(path: String): String = s"$path._pending_batch"
 
   private[graft] def buildUnlocked(spark: SparkSession, embeddings: DataFrame,
                                    path: String, k: Int, initRounds: Int,

@@ -297,9 +297,11 @@ object NearDupIndex {
           .write.partitionBy("ps")
           .mode(SaveMode.Overwrite).parquet(sigsPath(path))
         // a rebuild starts tombstone-free (the buildIndex convention)
+        // and takes a fresh stream: the sink's applied batches go too
         val fs = new org.apache.hadoop.fs.Path(path)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         fs.delete(new org.apache.hadoop.fs.Path(deletedPath(path)), true)
+        graft.streaming.BatchLedger.reset(spark, path)
         writeMeta(spark, path,
           Meta(minEst, cap, nShards, storeParts, ver = 0L))
         Stats(sigs.count(), nPairs, nLabeled)
@@ -372,7 +374,11 @@ object NearDupIndex {
       // the MATERIALIZED delta row count keeps micro-deltas on
       // single-task stages while a production-sized batch still fans
       // out.
-      try ExecScope.narrow(spark, ExecScope.forRows(nNew)) {
+      // an empty delta changes nothing: no probe, no store append, no
+      // meta version bump. recoverStores above has run, so the crash
+      // contract is the same as for any other batch
+      try if (nNew == 0) Stats(0L, 0L, 0L)
+      else ExecScope.narrow(spark, ExecScope.forRows(nNew)) {
         deletedIds(spark, path).foreach { dead =>
           val readds = sigsNew.select(col("doc_id"))
             .join(broadcast(dead), Seq("doc_id")).limit(1).count()

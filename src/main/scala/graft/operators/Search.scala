@@ -158,10 +158,9 @@ object Search {
     // against a stale ledger would silently skip its first batches)
     // and any pending marker from the replaced index's history
     val loc = tableLocation(spark, table)
-    val lfs = hadoopFs(spark, loc)
-    lfs.delete(new org.apache.hadoop.fs.Path(
-      graft.streaming.Streams.batchLedgerPath(loc)), false)
-    lfs.delete(new org.apache.hadoop.fs.Path(pendingPath(loc)), false)
+    graft.streaming.BatchLedger.reset(spark, loc)
+    hadoopFs(spark, loc)
+      .delete(new org.apache.hadoop.fs.Path(pendingPath(loc)), false)
     corpusVersion.foreach(stampVersion(spark, table, _))
   }
 

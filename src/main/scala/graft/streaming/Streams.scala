@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface: the continuous counterparts of the
@@ -1358,95 +1358,97 @@ object Streams {
         col("j"), col("bucket"), col("cell_n"))
   }
 
-  // ---- exactly-once streaming upsert sink ----
+  // ---- exactly-once sinks ----
 
-  /** Where [[upsertSink]] records applied micro-batch ids: a sidecar
-    * FILE next to the snapshot directory (never inside it —
-    * [[graft.pipeline.Merge.upsert]] publishes by whole-directory
-    * rename-swap, which would wipe an in-directory ledger on every
-    * batch).
+  /** Test seam at the ledgered apply's one unrecorded commit point:
+    * after `apply`, before the ledger record. A hook that throws there
+    * leaves exactly what a crash at that point leaves. A no-op outside
+    * tests.
     */
-  def batchLedgerPath(targetPath: String): String = s"$targetPath._batches"
+  @volatile private[graft] var beforeRecord: (String, Long) => Unit =
+    (_, _) => ()
 
-  private def readLedger(spark: SparkSession, path: String): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(_.toLong).toSet
-      finally in.close()
+  /** The ONE exactly-once step every ledgered sink runs: apply batch
+    * `batchId` to `target` at most once, under Structured Streaming's
+    * replay contract — the engine logs a batch id before the batch
+    * runs, and after a crash it re-delivers the last uncommitted id
+    * with the SAME contents. The ledger contract, for all sinks:
+    *
+    *  - ONE stream per target: the target's [[BatchLedger]] keeps the
+    *    highest applied id, and any id at or below it is refused —
+    *    returns false, no job runs;
+    *  - RISING ids: within one checkpoint ids only rise, and a replay
+    *    repeats the last one, so the mark refuses exactly what the set
+    *    of every applied id would (a fresh checkpoint restarting at 0
+    *    is refused until it passes the mark, as the set refused it);
+    *  - a REBUILD resets the ledger: `IvfIndex.build`,
+    *    `NearDupIndex.build` and `Search.buildIndex` call
+    *    [[BatchLedger.reset]], so a fresh stream against a rebuilt
+    *    target applies from batch 0.
+    *
+    * Order: `settle(mark)` runs on every call, refused or not — a
+    * sink's own pending-marker repair; then, for an unseen id, `apply`,
+    * the [[beforeRecord]] seam, and the ledger record. A crash between
+    * apply and record re-delivers the same id to an apply that already
+    * ran, so every sink's apply must converge when re-run on the same
+    * batch (each apply's scaladoc says why its own does).
+    */
+  private[graft] def ledgered(spark: SparkSession, target: String,
+                              batchId: Long,
+                              settle: Long => Unit = _ => ())(
+      apply: => Unit): Boolean = {
+    val mark = BatchLedger.mark(spark, target)
+    settle(mark)
+    batchId > mark && {
+      apply
+      beforeRecord(target, batchId)
+      BatchLedger.record(spark, target, batchId)
+      true
     }
   }
 
-  private def writeLedger(spark: SparkSession, path: String,
-                          ids: Set[Long]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(ids.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  /** The one `foreachBatch` writer every sink below returns. */
+  private def eachBatch(stream: DataFrame, mode: OutputMode)(
+      f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream.outputMode(mode)
+      .foreachBatch((batch: Dataset[Row], id: Long) => f(batch.toDF(), id))
 
   /** Apply one micro-batch to the keyed snapshot at `targetPath`
-    * through [[graft.pipeline.Merge.upsert]], idempotently under
-    * Structured Streaming's replay contract (after a crash the engine
-    * re-delivers the last uncommitted batch with the SAME batchId and
-    * contents). Returns false when the ledger says the batch already
-    * applied (replay fast-path: no merge job runs at all).
-    *
-    * The crash WINDOW between the merge publish and the ledger write
-    * is safe without any transaction: Merge.upsert is keyed SCD-1
-    * with deterministic version ordering, so re-merging the identical
-    * batch rows is a NO-OP on the snapshot — the ledger's job is to
-    * skip the cost and make idempotence auditable, not to carry the
+    * through [[graft.pipeline.Merge.upsert]], exactly-once through
+    * [[ledgered]]. Re-running the same batch after a crash before the
+    * ledger record is safe without any transaction: Merge.upsert is
+    * keyed SCD-1 with deterministic version ordering, so re-merging
+    * the identical rows is a NO-OP on the snapshot — the ledger skips
+    * the cost and makes idempotence auditable, it does not carry the
     * correctness (the spec proves both properties separately).
     */
   def applyUpsertBatch(batch: DataFrame, batchId: Long, targetPath: String,
                        keys: Seq[String], versionCol: String,
-                       deleteCol: Option[String] = None): Boolean = {
-    val spark = batch.sparkSession
-    val ledger = batchLedgerPath(targetPath)
-    val applied = readLedger(spark, ledger)
-    if (applied.contains(batchId)) return false
-    graft.pipeline.Merge.upsert(spark, targetPath, batch, keys, versionCol,
-      deleteCol)
-    writeLedger(spark, ledger, applied + batchId)
-    true
-  }
+                       deleteCol: Option[String] = None): Boolean =
+    ledgered(batch.sparkSession, targetPath, batchId) {
+      graft.pipeline.Merge.upsert(batch.sparkSession, targetPath, batch,
+        keys, versionCol, deleteCol)
+    }
 
   /** The continuous mirror of the batch [[graft.pipeline.Merge]] load:
     * a change stream (inserts/updates/tombstones) maintained as a
     * queryable keyed parquet snapshot, exactly-once under micro-batch
-    * replay. Start with `.start()` (and a checkpointLocation option —
-    * the engine's offset log drives the batchId replay contract the
-    * ledger relies on).
+    * replay ([[applyUpsertBatch]]; ledger contract on [[ledgered]]).
+    * Start with `.start()` and a checkpointLocation option — the
+    * engine's offset log drives the batchId replay contract.
     */
   def upsertSink(stream: DataFrame, targetPath: String,
                  keys: Seq[String], versionCol: String,
-                 deleteCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyUpsertBatch(batch.toDF(), id, targetPath, keys, versionCol,
-          deleteCol)
-        ()
-      }
+                 deleteCol: Option[String] = None): DataStreamWriter[Row] =
+    eachBatch(stream, OutputMode.Update())(
+      applyUpsertBatch(_, _, targetPath, keys, versionCol, deleteCol))
 
   /** [[applyUpsertBatch]]'s SCD-2 sibling: one micro-batch folded into
-    * the history-keeping snapshot via [[graft.pipeline.Merge.scd2]].
-    * The same two idempotence layers hold: the ledger refuses a
-    * re-delivered batchId before any job runs, and the crash window
-    * between the merge publish and the ledger write is safe because
-    * re-applying the IDENTICAL batch is a provable no-op — every
-    * replayed row (changes, re-inserts AND tombstones, even for keys
-    * the batch itself tombstoned) lands at or below the key's
+    * the history-keeping snapshot via [[graft.pipeline.Merge.scd2]],
+    * exactly-once through [[ledgered]]. Re-applying the IDENTICAL
+    * batch after a crash before the ledger record is a provable no-op
+    * — every replayed row (changes, re-inserts AND tombstones, even
+    * for keys the batch itself tombstoned) lands at or below the key's
     * whole-history high-water mark and is dropped as late. The mark
     * covers closed intervals, which is what makes a tombstone-ENDING
     * replayed batch safe: the key has no open interval, but its close
@@ -1454,34 +1456,24 @@ object Streams {
     */
   def applyScd2Batch(batch: DataFrame, batchId: Long, targetPath: String,
                      keys: Seq[String], versionCol: String,
-                     deleteCol: Option[String] = None): Boolean = {
-    val spark = batch.sparkSession
-    val ledger = batchLedgerPath(targetPath)
-    val applied = readLedger(spark, ledger)
-    if (applied.contains(batchId)) return false
-    graft.pipeline.Merge.scd2(spark, targetPath, batch, keys, versionCol,
-      deleteCol)
-    writeLedger(spark, ledger, applied + batchId)
-    true
-  }
+                     deleteCol: Option[String] = None): Boolean =
+    ledgered(batch.sparkSession, targetPath, batchId) {
+      graft.pipeline.Merge.scd2(batch.sparkSession, targetPath, batch,
+        keys, versionCol, deleteCol)
+    }
 
   /** Continuous SCD-2 history maintenance: a change stream becomes a
     * queryable validity-interval snapshot (_valid_from/_valid_to/
-    * _is_current), exactly-once under micro-batch replay. The batch
+    * _is_current), exactly-once under micro-batch replay
+    * ([[applyScd2Batch]]; ledger contract on [[ledgered]]). The batch
     * and streaming paths share the [[graft.pipeline.Merge.scd2]]
     * kernel, so their semantics cannot drift.
     */
   def scd2Sink(stream: DataFrame, targetPath: String,
                keys: Seq[String], versionCol: String,
-               deleteCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyScd2Batch(batch.toDF(), id, targetPath, keys, versionCol,
-          deleteCol)
-        ()
-      }
+               deleteCol: Option[String] = None): DataStreamWriter[Row] =
+    eachBatch(stream, OutputMode.Update())(
+      applyScd2Batch(_, _, targetPath, keys, versionCol, deleteCol))
 
   /** Continuous history-correct enrichment: each fact micro-batch
     * joins the SCD-2 history snapshot at `historyPath` through
@@ -1500,38 +1492,30 @@ object Streams {
     */
   def temporalEnrich(facts: DataFrame, historyPath: String,
                      keys: Seq[String], factVersion: org.apache.spark.sql.Column)
-                    (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    facts.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        spark.catalog.refreshByPath(historyPath)
-        val hist = spark.read.parquet(historyPath)
-        sink(graft.pipeline.Merge.temporalJoin(
-          batch.toDF(), hist, keys, factVersion), id)
-      }
+                    (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    eachBatch(facts, OutputMode.Append()) { (batch, id) =>
+      val spark = batch.sparkSession
+      spark.catalog.refreshByPath(historyPath)
+      val hist = spark.read.parquet(historyPath)
+      sink(graft.pipeline.Merge.temporalJoin(batch, hist, keys, factVersion),
+        id)
+    }
 
   /** Continuous incremental statistics: each micro-batch folds into
     * the [[graft.pipeline.StatsMaintain]] snapshot EXACTLY once.
     * Stats folding is ADDITIVE — a replayed batch would double-count,
-    * so the sidecar-ledger pattern the merge sinks use (external
-    * file, written after publish) is NOT safe here: its crash window
-    * would re-apply the batch. Instead the applied-batch ledger rides
-    * INSIDE the snapshot directory and swaps atomically with the data
-    * ([[graft.pipeline.StatsMaintain.maintainBatch]]) — there is no
-    * window, by construction.
+    * so the sidecar ledger the other sinks share ([[ledgered]] —
+    * external file, written after the apply) is NOT safe here: its
+    * crash window would re-apply the batch. Instead the applied-batch
+    * ledger rides INSIDE the snapshot directory and swaps atomically
+    * with the data ([[graft.pipeline.StatsMaintain.maintainBatch]]) —
+    * there is no window, by construction.
     */
   def statsSink(stream: DataFrame, targetPath: String,
-                spec: graft.pipeline.StatsMaintain.Spec)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipeline.StatsMaintain.maintainBatch(
-          batch.sparkSession, targetPath, batch.toDF(), spec, id)
-        ()
-      }
+                spec: graft.pipeline.StatsMaintain.Spec): DataStreamWriter[Row] =
+    eachBatch(stream, OutputMode.Update())((batch, id) =>
+      graft.pipeline.StatsMaintain.maintainBatch(
+        batch.sparkSession, targetPath, batch, spec, id))
 
   /** One fact-side change micro-batch folded into BOTH the left base
     * snapshot (exactly-once, via [[applyUpsertBatch]]'s ledger) and
@@ -1596,8 +1580,9 @@ object Streams {
     * (inserts/updates/tombstones) maintains the left BASE snapshot and
     * the standing `left ⋈ right` VIEW together, exactly-once under
     * micro-batch replay ([[applyViewMaintainBatch]] — base ledgered,
-    * view repair idempotent by construction). Dimension-side changes
-    * flow through the dimension's own batch maintainer plus a
+    * ledger contract on [[ledgered]]; view repair idempotent by
+    * construction). Dimension-side changes flow through the
+    * dimension's own batch maintainer plus a
     * `ViewMaintain.maintain`/`maintainPartitioned` call with the
     * right-side delta. Serialization against that dimension-side
     * maintainer: the sink's micro-batches acquire the view lock with
@@ -1615,21 +1600,15 @@ object Streams {
                        keys: Seq[String], versionCol: String,
                        spec: graft.pipeline.ViewMaintain.Spec,
                        deleteCol: Option[String] = None,
-                       partCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyViewMaintainBatch(batch.toDF(), id, leftPath, rightPath,
-          viewPath, keys, versionCol, spec, deleteCol, partCol)
-        ()
-      }
+                       partCol: Option[String] = None): DataStreamWriter[Row] =
+    eachBatch(stream, OutputMode.Update())(
+      applyViewMaintainBatch(_, _, leftPath, rightPath, viewPath, keys,
+        versionCol, spec, deleteCol, partCol))
 
   /** One NEW-docs micro-batch folded into the persisted
-    * [[graft.operators.NearDupIndex]], exactly-once under micro-batch
-    * replay: the sidecar ledger refuses re-delivered batchIds before
-    * any job runs, and the crash window between the maintain and the
-    * ledger write is safe because the index's own crash contract IS
+    * [[graft.operators.NearDupIndex]], exactly-once through
+    * [[ledgered]]. Re-running the same batch after a crash before the
+    * ledger record is safe because the index's own crash contract IS
     * "re-run the same batch" — the replay regenerates the same
     * verified pairs, re-upserts the same labels (convergent) and only
     * duplicates append-store rows (correctness-neutral bloat, see the
@@ -1638,16 +1617,11 @@ object Streams {
     * waits out a concurrent cycle instead of failing the query.
     */
   def applyNearDupIndexBatch(batch: DataFrame, batchId: Long,
-                             path: String): Boolean = {
-    val spark = batch.sparkSession
-    val ledger = batchLedgerPath(path)
-    val applied = readLedger(spark, ledger)
-    if (applied.contains(batchId)) return false
-    graft.operators.NearDupIndex.maintain(spark, path, batch,
-      lockWaitMs = SinkLockWaitMs)
-    writeLedger(spark, ledger, applied + batchId)
-    true
-  }
+                             path: String): Boolean =
+    ledgered(batch.sparkSession, path, batchId) {
+      graft.operators.NearDupIndex.maintain(batch.sparkSession, path, batch,
+        lockWaitMs = SinkLockWaitMs)
+    }
 
   /** Continuous near-dup component-index maintenance: a stream of NEW
     * corpus docs (doc_id, text — ids disjoint from everything indexed,
@@ -1655,47 +1629,39 @@ object Streams {
     * .NearDupIndex]] labels current, so downstream consumers (the
     * cluster-pick, dedup gates, audits) always read fresh components
     * without any corpus rescan. Build the index from the initial
-    * snapshot with `NearDupIndex.build` first.
+    * snapshot with `NearDupIndex.build` first (ledger contract on
+    * [[ledgered]]).
     */
-  def nearDupIndexSink(stream: DataFrame, path: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyNearDupIndexBatch(batch.toDF(), id, path)
-        ()
-      }
+  def nearDupIndexSink(stream: DataFrame, path: String): DataStreamWriter[Row] =
+    eachBatch(stream, OutputMode.Append())(applyNearDupIndexBatch(_, _, path))
 
   // --- continuous ANN index maintenance (streaming IvfIndex.append) ---
 
-  private def ivfPendingPath(path: String): String = s"$path._pending_batch"
-
   /** One embedding micro-batch appended into a persisted
-    * [[graft.operators.IvfIndex]], EXACTLY-ONCE under the micro-batch
-    * replay contract. The hard part, stated plainly: unlike the merge
-    * sinks (re-merge is a no-op) and the stats sink (in-snapshot
-    * ledger), a parquet APPEND is neither idempotent nor atomically
-    * ledgerable — a crash between the append and the ledger write
-    * leaves rows that a replay would duplicate. So the batch id is
-    * recorded in a PENDING marker before any append:
+    * [[graft.operators.IvfIndex]], EXACTLY-ONCE through [[ledgered]].
+    * The hard part, stated plainly: unlike the merge sinks (re-merge
+    * is a no-op) and the stats sink (in-snapshot ledger), a parquet
+    * APPEND is neither idempotent nor atomically ledgerable — a crash
+    * between the append and the ledger record leaves rows that a
+    * replay would duplicate. So the batch id is recorded in a PENDING
+    * marker before any append, and settled against the ledger mark on
+    * every call:
     *
-    *  - marker present + id in the ledger → the append completed and
-    *    only the marker-clear was lost: clear it and continue;
-    *  - marker present + id == THIS batch → this is the replay of an
+    *  - marker id ledgered → the append completed and only the
+    *    marker-clear was lost: clear it and continue;
+    *  - marker id == THIS batch → this is the replay of an
     *    interrupted append: re-append (rows written by the crashed
     *    attempt are now duplicated) and then repair with
     *    [[graft.operators.IvfIndex.dedupeVectors]] (duplicates of a
     *    vec_id are byte-identical, keep-any is exact — and a crash
     *    mid-repair just re-enters this same branch, which converges);
-    *  - marker present + a DIFFERENT unledgered id → not this query's
+    *  - marker id a DIFFERENT unledgered batch → not this query's
     *    replay (a skipped batch or foreign writer): refuse loudly
     *    rather than guess.
-    *
-    * Returns false when the ledger refuses a re-delivered batch (no
-    * job runs).
     */
   def applyIvfAppendBatch(batch: DataFrame, batchId: Long,
                           path: String): Boolean = {
+    import graft.operators.IvfIndex
     val spark = batch.sparkSession
     // the index maintainer lock spans the WHOLE marker-append-ledger
     // cycle: without it, a batch-layer retrain reading `index/` while
@@ -1704,50 +1670,38 @@ object Streams {
     // ledger blocks the replay that could restore them. The wait
     // budget rides out a concurrent retrain (minutes at scale) rather
     // than failing the micro-batch.
-    graft.operators.IvfIndex.withIndexLock(spark, path,
-      waitMs = SinkLockWaitMs) {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pending = new org.apache.hadoop.fs.Path(ivfPendingPath(path))
-    val ledger = batchLedgerPath(path)
-    val applied = readLedger(spark, ledger)
-    var healAfterAppend = false
-    if (fs.exists(pending)) {
-      val in = fs.open(pending)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim finally in.close()
-      // an EMPTY/unparsable marker is a crash between fs.create and
-      // the id write: the append itself never started (the marker is
-      // written before any append job), so there is nothing to heal —
-      // overwrite and proceed rather than dying on a bare
-      // NumberFormatException that wedges the query
-      val pidOpt = try { if (raw.isEmpty) None else Some(raw.toLong) }
-                   catch { case _: NumberFormatException => None }
-      pidOpt match {
-        case None => fs.delete(pending, false); ()
-        case Some(pid) =>
-          if (applied.contains(pid)) { fs.delete(pending, false); () }
-          else if (pid == batchId) healAfterAppend = true
-          else throw new IllegalStateException(
+    IvfIndex.withIndexLock(spark, path, waitMs = SinkLockWaitMs) {
+      val pending = new org.apache.hadoop.fs.Path(IvfIndex.pendingPath(path))
+      val fs = pending.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      var healAfterAppend = false
+      def settle(mark: Long): Unit = if (fs.exists(pending)) {
+        val in = fs.open(pending)
+        val raw = try scala.io.Source.fromInputStream(in, "UTF-8")
+          .mkString.trim finally in.close()
+        // an EMPTY/unparsable marker is a crash between fs.create and
+        // the id write: the append itself never started (the marker is
+        // written before any append job), so there is nothing to heal —
+        // overwrite and proceed rather than dying on a bare
+        // NumberFormatException that wedges the query
+        raw.toLongOption match {
+          case Some(pid) if pid > mark && pid == batchId =>
+            healAfterAppend = true
+          case Some(pid) if pid > mark => throw new IllegalStateException(
             s"ivf append sink: batch $pid was interrupted mid-append at $path " +
               "and this is not its replay — run " +
               "IvfIndex.dedupeVectors(path) and delete " +
-              s"${ivfPendingPath(path)} after confirming no live writer")
+              s"${IvfIndex.pendingPath(path)} after confirming no live writer")
+          case _ => fs.delete(pending, false); ()
+        }
       }
-    }
-    if (applied.contains(batchId)) false
-    else {
-      val o = fs.create(pending, true)
-      try o.write(batchId.toString.getBytes("UTF-8")) finally o.close()
-      graft.operators.IvfIndex.appendUnlocked(spark, path, batch)
-      if (healAfterAppend) {
-        graft.operators.IvfIndex.dedupeVectorsUnlocked(spark, path)
-        ()
+      val applied = ledgered(spark, path, batchId, settle) {
+        val o = fs.create(pending, true)
+        try o.write(batchId.toString.getBytes("UTF-8")) finally o.close()
+        IvfIndex.appendUnlocked(spark, path, batch)
+        if (healAfterAppend) { IvfIndex.dedupeVectorsUnlocked(spark, path); () }
       }
-      writeLedger(spark, ledger, applied + batchId)
-      fs.delete(pending, false)
-      true
-    }
+      if (applied) fs.delete(pending, false)
+      applied
     }
   }
 
@@ -1755,8 +1709,9 @@ object Streams {
     * (vec_id, embedding) appended into a persisted IvfIndex built by
     * the batch layer, exactly-once per micro-batch
     * ([[applyIvfAppendBatch]] — marker protocol + self-healing
-    * replay). Appends assign to the FROZEN centroids (the batch
-    * append contract), so recall decays as the corpus drifts — run
+    * replay; ledger contract on [[ledgered]]). Appends assign to the
+    * FROZEN centroids (the batch append contract), so recall decays
+    * as the corpus drifts — run
     * [[graft.operators.IvfIndex.retrainIfNeeded]] from the batch
     * layer on its volume/recall policy. Retrain and these appends
     * serialize through the index MAINTAINER LOCK (both hold it for
@@ -1773,21 +1728,17 @@ object Streams {
     * the lock budget and fails with the lock-file guidance rather
     * than healing.
     */
-  def ivfAppendSink(stream: DataFrame, path: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applyIvfAppendBatch(batch.toDF(), id, path)
-        ()
-      }
+  def ivfAppendSink(stream: DataFrame, path: String): DataStreamWriter[Row] =
+    eachBatch(stream, OutputMode.Append())(applyIvfAppendBatch(_, _, path))
 
   /** Stream batch-id → the marker token
-    * [[graft.operators.Search.maintainIndexUnlocked]] records, so a
-    * replay can recognize its own interrupted append and a batch-layer
-    * maintain's custom id can never collide with a stream id.
+    * [[graft.operators.Search.maintainIndexUnlocked]] records (and
+    * `SearchBatchTag` reads the id back), so a replay can recognize
+    * its own interrupted append and a batch-layer maintain's custom id
+    * can never collide with a stream id.
     */
   private def searchBatchTag(batchId: Long): String = s"stream-$batchId"
+  private val SearchBatchTag = "stream-(-?\\d+)".r
 
   /** Fold one micro-batch of NEW documents into a persisted
     * [[graft.operators.Search.buildIndex]] table, exactly-once. Like
@@ -1796,9 +1747,9 @@ object Streams {
     * semantics have no per-row uniqueness to refuse on), so three
     * layers compose, all under ONE whole-cycle index location lock:
     *
-    *  - the applied-batch LEDGER (sidecar beside the table location,
-    *    so it survives compaction's table recreation) refuses a
-    *    re-delivered batchId before any job runs;
+    *  - the applied-batch ledger ([[ledgered]], beside the table
+    *    location, so it survives compaction's table recreation)
+    *    refuses a re-delivered batchId before any job runs;
     *  - the maintain cycle's own pending MARKER brackets the append,
     *    and — the keepMarker hook — stays in place until the ledger
     *    records the batch, closing the append-done-but-unledgered
@@ -1806,9 +1757,9 @@ object Streams {
     *    by re-append + DISTINCT compaction (exact, because a
     *    legitimate index never holds two identical (doc_id, pos, t)
     *    rows — [[graft.operators.Search.maintainIndex]]);
-    *  - a marker whose id the ledger already contains is the
+    *  - a marker whose id the ledger already covers is the
     *    completed-append-lost-marker-clear case: cleared here with no
-    *    healing, no job.
+    *    healing, no job, even when this batch is refused.
     *
     * A marker from a batch-layer maintain (non-`stream-` id, not
     * ledgered) refuses loudly through the maintain cycle's own
@@ -1825,50 +1776,41 @@ object Streams {
                             textCol: org.apache.spark.sql.Column = col("text"),
                             versionFor: Long => Option[String] = _ => None)
       : Boolean = {
+    import graft.operators.Search
     val spark = batch.sparkSession
-    val loc = graft.operators.Search.indexLocationOf(spark, table)
+    val loc = Search.indexLocationOf(spark, table)
     graft.util.PathLock.withLock(spark, loc, waitMs = SinkLockWaitMs,
       what = "search index maintainer") {
-      val ledger = batchLedgerPath(loc)
-      val applied = readLedger(spark, ledger)
-      graft.operators.Search.pendingBatchId(spark, table) match {
-        case Some(id) if id.startsWith("stream-") &&
-            scala.util.Try(id.stripPrefix("stream-").toLong).toOption
-              .exists(applied.contains) =>
-          // completed append whose marker-clear was lost: clear, no heal
-          graft.operators.Search.clearPendingMarker(spark, table)
-        case _ => ()   // absent/empty/same-batch/foreign: the maintain
-                       // cycle's own marker branches handle each
-      }
-      if (applied.contains(batchId)) false
-      else {
-        graft.operators.Search.maintainIndexUnlocked(spark, table, batch,
+      val applied = ledgered(spark, loc, batchId, settle = mark =>
+        Search.pendingBatchId(spark, table) match {
+          case Some(SearchBatchTag(n)) if n.toLongOption.exists(_ <= mark) =>
+            // completed append whose marker-clear was lost: clear, no heal
+            Search.clearPendingMarker(spark, table)
+          case _ => ()   // absent/empty/same-batch/foreign: the maintain
+                         // cycle's own marker branches handle each
+        }) {
+        Search.maintainIndexUnlocked(spark, table, batch,
           batchId = searchBatchTag(batchId), idCol = idCol, textCol = textCol,
           newVersion = versionFor(batchId), keepMarker = true)
-        writeLedger(spark, ledger, applied + batchId)
-        graft.operators.Search.clearPendingMarker(spark, table)
-        true
       }
+      if (applied) Search.clearPendingMarker(spark, table)
+      applied
     }
   }
 
   /** Continuous search-index maintenance: a stream of NEW documents
     * folded into a persisted positional postings index exactly-once
     * per micro-batch ([[applySearchIndexBatch]] — ledger + kept
-    * marker + self-healing replay). The batch layer owns deletions
-    * and compaction ([[graft.operators.Search.deleteDocs]]/
-    * `compactIndex`), serialized with these appends by the shared
-    * location lock. Start with `.start()` and a checkpointLocation —
-    * the engine's offset log drives the batchId replay contract the
-    * ledger relies on.
+    * marker + self-healing replay; ledger contract on [[ledgered]]).
+    * The batch layer owns deletions and compaction
+    * ([[graft.operators.Search.deleteDocs]]/`compactIndex`),
+    * serialized with these appends by the shared location lock. Start
+    * with `.start()` and a checkpointLocation — the engine's offset
+    * log drives the batchId replay contract.
     */
   def searchIndexSink(stream: DataFrame, table: String,
                       versionFor: Long => Option[String] = _ => None)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        applySearchIndexBatch(batch.toDF(), id, table, versionFor = versionFor)
-        ()
-      }
+      : DataStreamWriter[Row] =
+    eachBatch(stream, OutputMode.Append())(
+      applySearchIndexBatch(_, _, table, versionFor = versionFor))
 }

@@ -307,4 +307,31 @@ class NearDupIndexSpec extends SparkSpec {
     assert(indexed(path).keySet == Set(1L, 2L, 9L),
       "the re-rooted delta frame must fold correctly")
   }
+
+  test("an empty delta returns after the delta count: no further job, index bytes unchanged") {
+    val path = Files.createTempDirectory("graft-ndidx-empty").toString + "/idx"
+    NearDupIndex.build(spark, path, docs(1L -> tX, 2L -> (tX + " z")), 0.5)
+    val root = java.nio.file.Paths.get(path)
+    // every file under the index — labels, stores, meta — by content
+    def tree(): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val files = Files.walk(root)
+      try files.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq)
+        .toMap
+      finally files.close()
+    }
+    val before = tree()
+    var st: NearDupIndex.Stats = null
+    val m = org.apache.spark.graftbench.Recorder.measure(spark.sparkContext) {
+      st = NearDupIndex.maintain(spark, path, docs())
+    }
+    assert(st == NearDupIndex.Stats(0L, 0L, 0L), st.toString)
+    assert(m.jobs.nonEmpty &&
+      m.jobs.last.description.contains("count at NearDupIndex.scala"),
+      "a job ran after the delta count:\n" + m.jobs.mkString("\n"))
+    assert(tree() == before, "an empty delta must leave the index byte-identical")
+    info(s"empty-delta maintain: ${m.jobs.size} jobs, " +
+      s"${m.jobs.map(_.stages).sum} stages")
+  }
 }

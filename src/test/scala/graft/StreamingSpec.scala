@@ -16,6 +16,18 @@ class StreamingSpec extends SparkSpec {
   private val Base = 86400000L
   private def ts(min: Long): Timestamp = new Timestamp(Base + min * 60000L)
 
+  private final class InjectedCrash extends RuntimeException("injected crash")
+
+  /** Run one ledgered apply that crashes at the primitive's seam
+    * between the apply and the ledger record ([[Streams.beforeRecord]]).
+    */
+  private def crashBeforeRecord(apply: => Boolean): Unit = {
+    val prev = Streams.beforeRecord
+    Streams.beforeRecord = (_, _) => throw new InjectedCrash
+    try { intercept[InjectedCrash](apply); () }
+    finally Streams.beforeRecord = prev
+  }
+
   test("parquetStream + windowedCounts matches the batch windowed aggregation") {
     val dir = Files.createTempDirectory("graft-stream-in").toString
     val events = Tables(spark, sf).events
@@ -514,6 +526,34 @@ class StreamingSpec extends SparkSpec {
     assert(!fs.exists(pending))
     // the lock is held for the whole apply cycle and released after
     assert(!fs.exists(new org.apache.hadoop.fs.Path(p + "._graft_lock")))
+    // a REAL crash between the append and the ledger record: the
+    // replay of the SAME batch id finds its own marker, re-appends,
+    // heals, and lands the batch exactly once
+    spark.catalog.refreshByPath(p)
+    val nBefore = spark.read.parquet(s"$p/index").count()
+    val next = emb.limit(2)
+      .select((col("vec_id") + 40000L).as("vec_id"), col("embedding"))
+    crashBeforeRecord(Streams.applyIvfAppendBatch(next, 44L, p))
+    assert(fs.exists(pending), "the crash must leave the pending marker")
+    assert(Streams.applyIvfAppendBatch(next, 44L, p),
+      "the crashed batch's replay must apply")
+    spark.catalog.refreshByPath(p)
+    val once = spark.read.parquet(s"$p/index")
+    assert(once.count() == nBefore + 2 &&
+      once.select("vec_id").distinct().count() == nBefore + 2,
+      s"crashed batch landed ${once.count() - nBefore} rows, want 2")
+    assert(!fs.exists(pending))
+    assert(!Streams.applyIvfAppendBatch(next, 44L, p))
+    // a REBUILD resets the ledger and clears a stale marker: a fresh
+    // stream restarting batchIds at 0 must not be refused
+    val o3 = fs.create(pending, true)
+    try o3.write("77".getBytes("UTF-8")) finally o3.close()
+    IvfIndex.build(spark, emb.filter(col("vec_id") < 300), p,
+      k = 8, initRounds = 1, lloydIters = 1)
+    assert(!fs.exists(pending),
+      "a rebuild must clear the replaced index's pending marker")
+    assert(Streams.applyIvfAppendBatch(next, 0L, p),
+      "a rebuilt index must not refuse batch 0 from a stale ledger")
   }
 
   test("searchIndexSink: streamed docs fold into the postings index exactly-once; interrupted appends self-heal; ledgered markers clear") {
@@ -610,6 +650,22 @@ class StreamingSpec extends SparkSpec {
       assert(Streams.applySearchIndexBatch(
         Seq(20L -> "twenty batch stream").toDF("doc_id", "text"), 0L, table),
         "a rebuilt index must not refuse batch 0 from a stale ledger")
+      // a REAL crash between the append and the ledger record: the
+      // replay of the SAME batch id finds its kept marker, re-appends,
+      // compacts, and converges to the one-shot index
+      val doc21 = Seq(21L -> "batch stream twenty one").toDF("doc_id", "text")
+      crashBeforeRecord(Streams.applySearchIndexBatch(doc21, 1L, table))
+      assert(fs.exists(pending), "the crash must leave the kept marker")
+      assert(Streams.applySearchIndexBatch(doc21, 1L, table),
+        "the crashed batch's replay must apply")
+      assert(!fs.exists(pending))
+      val all3 = all.unionByName(doc21).unionByName(
+        Seq(20L -> "twenty batch stream").toDF("doc_id", "text"))
+      val want3 = phraseMap(Search.phrase(all3, Seq("batch", "stream")))
+      val got3 = phraseMap(Search.phraseIndexed(spark, table, Seq("batch", "stream")))
+      assert(got3 == want3, s"replayed index $got3 != one-shot $want3")
+      assert(spark.table(table).groupBy("doc_id", "pos", "t").count()
+        .filter("count > 1").count() == 0L, "the replay left duplicate postings")
       // the location lock releases after every cycle
       assert(!fs.exists(graft.util.PathLock.lockFile(loc)))
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -1115,6 +1171,17 @@ class StreamingSpec extends SparkSpec {
       Some("del")), "unseen batchId must apply")
     assert(snap() == after,
       "re-merging identical rows must be a no-op (version-ordered SCD-1)")
+    // a REAL crash between the merge and the ledger record: the replay
+    // of the SAME batch id applies, and the snapshot is one merge's
+    val next = Seq((1L, 3L, "a3", false), (4L, 1L, "d", false))
+      .toDF("k", "ver", "v", "del")
+    crashBeforeRecord(Streams.applyUpsertBatch(next, 100L, target, Seq("k"),
+      "ver", Some("del")))
+    assert(Streams.applyUpsertBatch(next, 100L, target, Seq("k"), "ver",
+      Some("del")), "the crashed batch's replay must apply")
+    assert(snap() == Map(1L -> "a3", 3L -> "c", 4L -> "d"))
+    assert(!Streams.applyUpsertBatch(next, 100L, target, Seq("k"), "ver",
+      Some("del")))
   }
 
   test("scd2Sink: change stream maintains interval history; replay refused; re-merge a no-op") {
@@ -1161,6 +1228,18 @@ class StreamingSpec extends SparkSpec {
       Some("del")), "unseen batchId must apply")
     assert(snap() == after,
       "re-merging identical rows must be a no-op (late-row + tombstone rules)")
+    // a REAL crash between the merge and the ledger record: the replay
+    // of the SAME batch id applies, and the history is one merge's
+    val next = Seq((1L, 7L, "a3", false), (4L, 7L, "d", false))
+      .toDF("k", "ver", "v", "del")
+    crashBeforeRecord(Streams.applyScd2Batch(next, 100L, target, Seq("k"),
+      "ver", Some("del")))
+    assert(Streams.applyScd2Batch(next, 100L, target, Seq("k"), "ver",
+      Some("del")), "the crashed batch's replay must apply")
+    assert(snap() == after - ((1L, "a2", 5L, None, true)) ++ Set(
+      (1L, "a2", 5L, Some(7L), false),
+      (1L, "a3", 7L, None, true),
+      (4L, "d", 7L, None, true)), s"history wrong after replay: ${snap()}")
   }
 
   test("viewMaintainSink: fact stream maintains base + join view; mid-stream dimension delta; replay is a no-op") {
@@ -1306,6 +1385,23 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     assert(Streams.applyNearDupIndexBatch(sameRows, 99L, idx))
     assert(labels() == after, "same-batch replay must converge")
+    // a REAL crash between the maintain and the ledger record: the
+    // replay of the SAME batch id re-runs the maintain and converges
+    val next = Seq((30L, tA + " x3")).toDF("doc_id", "text")
+    crashBeforeRecord(Streams.applyNearDupIndexBatch(next, 100L, idx))
+    assert(Streams.applyNearDupIndexBatch(next, 100L, idx),
+      "the crashed batch's replay must apply")
+    val oneShot2 = LabelProp.components(
+      NearDup.scoredCandidates(NearDup.signatures(all.unionByName(next)), 0.5),
+      "doc_a", "doc_b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels() == oneShot2, s"replayed index ${labels()} vs $oneShot2")
+    // a REBUILD resets the ledger: a fresh stream restarting batchIds
+    // at 0 must not be refused
+    NearDupIndex.build(spark, idx, s1, minEst = 0.5, nShards = 4)
+    assert(Streams.applyNearDupIndexBatch(
+      Seq((40L, tB + " y3")).toDF("doc_id", "text"), 0L, idx),
+      "a rebuilt index must not refuse batch 0 from a stale ledger")
   }
 
   test("temporalEnrich: streamed facts see the history state at their own version") {
