@@ -319,7 +319,18 @@ object SubstrDedup {
     * would strip an innocent token and keep a duplicated one.
     */
   def stripColumn(docs: DataFrame, spanListDf: DataFrame): DataFrame =
-    docs.join(spanListDf, Seq("doc_id"), "left")
+    stripColumn(docs, spanListDf, None)
+
+  /** [[stripColumn]], plus (when `flag` names one) a boolean column
+    * that is true for every doc with a span list: `_sp IS NOT NULL`,
+    * the docs whose text the strip rewrote. A pipeline that writes the
+    * frame can count the flag at the write instead of joining the span
+    * table against the written ids afterwards.
+    */
+  private[graft] def stripColumn(docs: DataFrame, spanListDf: DataFrame,
+                                 flag: Option[String]): DataFrame = {
+    val joined = docs.join(spanListDf, Seq("doc_id"), "left")
+    flag.fold(joined)(f => joined.withColumn(f, col("_sp").isNotNull))
       .withColumn("text",
         when(col("_sp").isNull, col("text"))
           .otherwise(concat_ws(" ",
@@ -330,6 +341,7 @@ object SubstrDedup {
                   (i + lit(1)).cast("long") >= s.getField("span_start") &&
                     (i + lit(1)).cast("long") <= s.getField("span_end")))))))
       .drop("_sp")
+  }
 
   /** The removal form (what the published pass actually does): drop
     * every token inside a duplicated span and rebuild the text,

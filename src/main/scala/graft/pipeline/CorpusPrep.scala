@@ -3,7 +3,11 @@ package graft.pipeline
 import graft.functions.TextOps
 import graft.functions.expressions.TextExprs
 import graft.operators.Sample
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import java.util.concurrent.{CompletableFuture, CompletionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -445,7 +449,8 @@ object CorpusPrep {
   private def planWith(baseDf: DataFrame, cfg: Config,
                        drops: Option[DataFrame],
                        contaminated: Option[DataFrame],
-                       substrSpans: Option[DataFrame] = None): DataFrame = {
+                       substrSpans: Option[DataFrame] = None,
+                       strippedFlag: Option[String] = None): DataFrame = {
     require(cfg.nShards > 0 && (cfg.nShards & (cfg.nShards - 1)) == 0,
       s"nShards must be a power of two, got ${cfg.nShards}")
     require(cfg.sourceRates.isEmpty || cfg.sourceWeights.isEmpty,
@@ -462,7 +467,7 @@ object CorpusPrep {
     // filter-lambda projection; everything downstream sees the
     // stripped text
     val deduped3 = substrSpans.fold(deduped2)(sp =>
-      graft.operators.SubstrDedup.stripColumn(deduped2, sp))
+      graft.operators.SubstrDedup.stripColumn(deduped2, sp, strippedFlag))
     // quality-weighted gate (when on): q117's stateless kernel, after
     // every dedup stage (quality should not decide near-dup survival —
     // q77's argmax owns that) and before the language/mix gates
@@ -535,11 +540,6 @@ object CorpusPrep {
     packed.drop("_ord")
   }
 
-  /** Execute and write `outPath/shard=N/` parquet, interleave-ordered
-    * within each shard. Stage counts cost ONE extra source pass (a
-    * combined count + distinct-digest aggregate), never a re-run of
-    * the sampled/sharded plan.
-    */
   /** run()'s executable state, exposed at package level so the spec
     * can assert the materialization contract (every consumer of the
     * base lineage reads the cache, not a recompute).
@@ -558,6 +558,12 @@ object CorpusPrep {
     }
   }
 
+  /** The internal column of [[Materialized.out]] that flags the docs
+    * the substring stage rewrote; run() counts it at the write and
+    * drops it before the write. [[plan]]'s columns never carry it.
+    */
+  private[graft] val StrippedFlag = "_stripped"
+
   /** Wire up the cached frames run() executes over.
     *
     * The scrub+dedup base lineage is materialized (cached) whenever
@@ -566,7 +572,11 @@ object CorpusPrep {
     * full-corpus scan and dedup shuffle — at 100 TB that's two
     * redundant corpus passes. The (small) drop-id sets are cached too:
     * each feeds its anti-join AND its dropped-count stat — the LSH /
-    * gram pipelines themselves run once.
+    * gram pipelines themselves run once. The planned frame `out` is
+    * cached only when something reads it after the write (the pack
+    * manifest, the membership sidecars, the stats fold): the write's
+    * own counts are observed on the write. A failure while wiring
+    * releases whatever was already cached.
     */
   private[graft] def materialize(docs: DataFrame, cfg: Config,
       benchmark: Option[DataFrame]): Materialized = {
@@ -577,16 +587,25 @@ object CorpusPrep {
     val multiConsumer = cfg.nearDupMinEst.isDefined || benchmark.isDefined ||
       cfg.sourceWeights.isDefined || cfg.substrWindow.isDefined ||
       cfg.publishSnapshot.isDefined || cfg.publishNearSnapshot.isDefined
-    val prior = priorFilter(docs, cfg)
-    val priorNear = priorNearFilter(docs, cfg)
-    val base0 = base(docs, cfg, prior, priorNear)
-    val baseDf = if (multiConsumer) base0.cache() else base0
-    val drops = dropsOf(baseDf, cfg).map(_.cache())
-    val contaminated = contaminatedOf(baseDf, cfg, benchmark).map(_.cache())
-    val substrSpans = substrSpansOf(baseDf, cfg).map(_.cache())
-    Materialized(baseDf, multiConsumer, drops, contaminated,
-      planWith(baseDf, cfg, drops, contaminated, substrSpans).cache(),
-      substrSpans, prior, priorNear)
+    val readAfterWrite = cfg.packBudget.isDefined || cfg.statsPath.isDefined ||
+      cfg.publishSnapshot.isDefined || cfg.publishNearSnapshot.isDefined
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
+    try {
+      val prior = priorFilter(docs, cfg)
+      val priorNear = priorNearFilter(docs, cfg)
+      val base0 = base(docs, cfg, prior, priorNear)
+      val baseDf = if (multiConsumer) cache(base0) else base0
+      val drops = dropsOf(baseDf, cfg).map(cache)
+      val contaminated = contaminatedOf(baseDf, cfg, benchmark).map(cache)
+      val substrSpans = substrSpansOf(baseDf, cfg).map(cache)
+      val out = planWith(baseDf, cfg, drops, contaminated, substrSpans,
+        Some(StrippedFlag))
+      Materialized(baseDf, multiConsumer, drops, contaminated,
+        if (readAfterWrite) cache(out) else out, substrSpans, prior, priorNear)
+    } catch {
+      case e: Throwable => cached.foreach(_.unpersist()); throw e
+    }
   }
 
   /** Per-pack manifest of a PACKED plan/run output: one row per
@@ -649,6 +668,11 @@ object CorpusPrep {
     * containers stored as NULL payloads — all 0 when `mediaOut` is
     * off, so a pipeline operator can read scrub coverage off the run
     * ledger instead of re-aggregating the sidecar.
+    *
+    * Every field is billed as before, but not one after another: the
+    * face counts and the media sidecar write run on the call's side
+    * lane ([[Lane]]) beside the corpus write, and the media triple is
+    * observed on the sidecar write itself.
     */
   final case class WarcStats(htmlDocs: Long, pdfDocs: Long,
                              officeDocs: Long, codingFenced: Long,
@@ -675,15 +699,20 @@ object CorpusPrep {
     * WARC bodies to save a parse would size executor memory to the
     * crawl, the wrong trade at 100 TB (the pipeline caches the
     * EXTRACTED corpus-shape frame internally, which is the small
-    * side).
+    * side). The face counts read nothing the corpus write produces,
+    * so they run on the side lane while the corpus is planned and
+    * written.
     *
     * `mediaOut` (r16 verdict ask): when set, the PII-scrubbed media
     * face ([[graft.sources.WarcSource.mediaScrubbed]]) is written to
     * that path as a sidecar of the text corpus, and the run ledger
     * bills its outcome counts (`mediaDocs`/`mediaScrubbed`/
-    * `mediaFenced`) — read back from the WRITTEN parquet's two flag
-    * columns (column-pruned, payload never re-read), never by a
-    * second archive parse.
+    * `mediaFenced`) — observed on the sidecar write itself (row count
+    * and the two flag columns' true counts, taken in the write's own
+    * stage), never by a read-back job or a second archive parse.
+    *
+    * Every cache the call creates (the noindex id set here, run()'s
+    * materialized frames) is released whichever step throws.
     */
   def runFromWarc(spark: org.apache.spark.sql.SparkSession, warcDir: String,
                   outPath: String, cfg: Config,
@@ -713,63 +742,85 @@ object CorpusPrep {
         Some(WarcSource.pageMeta(recs).filter(col("noindex"))
           .select(col("doc_id")).cache())
       else None
-    val html = noindexIds match {
-      case Some(ids) => htmlAll.join(ids, Seq("doc_id"), "left_anti")
-      case None => htmlAll
-    }
-    val noindexN = noindexIds.map(_.count()).getOrElse(0L)
-    val office =
-      if (includeOffice) Some(WarcSource.officeDocuments(recs)) else None
-    val pdfs = if (includePdfs) Some(WarcSource.pdfDocuments(recs)) else None
-    val docs = (Seq(html) ++ pdfs ++ office).reduce(_ unionByName _)
-    val htmlN = html.count()
-    // office is counted directly (ZIP records are the rare face —
-    // the count's extraction cost prunes to them); the PDF billing
-    // stays DERIVED (input − html − office), not a second
-    // pdfDocuments pass: the faces take disjoint record sets, and an
-    // extra count would re-parse every archive and re-extract every
-    // PDF — a whole wasted crawl scan at the 100 TB scale
-    val officeN = office.map(_.count()).getOrElse(0L)
-    // the coverage the intake LOST to undecodable content codings
-    // (dying/hostile streams): a records-level count, no extraction
-    val codingN = WarcSource.codingFenced(recs).count()
-    // the media sidecar (when requested): the PII-scrubbed media face
-    // written BESIDE the text corpus, then billed from the written
-    // parquet's flag columns — a column-pruned read of two booleans,
-    // never a second archive parse (the wasted-crawl-scan rule; the
-    // flags were computed once, by the write)
-    val (mediaN, mediaScrubN, mediaFenceN) = mediaOut match {
-      case Some(p) =>
-        WarcSource.mediaScrubbed(recs).write
-          .mode(SaveMode.Overwrite).parquet(p)
-        val m = spark.read.parquet(p)
-          .agg(count(lit(1)).cast("long"),
-            sum(col("scrubbed").cast("long")),
-            sum(col("fenced").cast("long")))
-          .collect()(0)
-        (m.getLong(0),
-          if (m.isNullAt(1)) 0L else m.getLong(1),
-          if (m.isNullAt(2)) 0L else m.getLong(2))
-      case None => (0L, 0L, 0L)
-    }
-    val prep =
-      try run(docs, outPath, cfg, benchmark)
-      finally { noindexIds.foreach(_.unpersist()); () }
-    WarcStats(htmlN,
-      if (includePdfs) prep.input - htmlN - officeN else 0L,
-      officeN, codingN, noindexN, prep,
-      mediaDocs = mediaN, mediaScrubbed = mediaScrubN,
-      mediaFenced = mediaFenceN)
+    try Lane.within(spark) { lane =>
+      val html = noindexIds match {
+        case Some(ids) => htmlAll.join(ids, Seq("doc_id"), "left_anti")
+        case None => htmlAll
+      }
+      val noindexN = noindexIds.map(_.count()).getOrElse(0L)
+      val office =
+        if (includeOffice) Some(WarcSource.officeDocuments(recs)) else None
+      val pdfs = if (includePdfs) Some(WarcSource.pdfDocuments(recs)) else None
+      val docs = (Seq(html) ++ pdfs ++ office).reduce(_ unionByName _)
+      val htmlN = lane(html.count())
+      // office is counted directly (ZIP records are the rare face —
+      // the count's extraction cost prunes to them); the PDF billing
+      // stays DERIVED (input − html − office), not a second
+      // pdfDocuments pass: the faces take disjoint record sets, and an
+      // extra count would re-parse every archive and re-extract every
+      // PDF — a whole wasted crawl scan at the 100 TB scale
+      val officeN = lane(office.map(_.count()).getOrElse(0L))
+      // the coverage the intake LOST to undecodable content codings
+      // (dying/hostile streams): a records-level count, no extraction
+      val codingN = lane(WarcSource.codingFenced(recs).count())
+      // the media sidecar (when requested): the PII-scrubbed media face
+      // written BESIDE the text corpus and billed by the write itself —
+      // the observed counts are taken in the write's own stage, so no
+      // job reads the sidecar back and no archive is parsed twice
+      val media = mediaOut.map(p => lane {
+        val seen = new Observation("media")
+        WarcSource.mediaScrubbed(recs)
+          .observe(seen, count(lit(1)).as("rows"),
+            count_if(col("scrubbed")).as("scrubbed"),
+            count_if(col("fenced")).as("fenced"))
+          .write.mode(SaveMode.Overwrite).parquet(p)
+        val m = seen.get
+        (m("rows").asInstanceOf[Long], m("scrubbed").asInstanceOf[Long],
+          m("fenced").asInstanceOf[Long])
+      })
+      val prep = runOn(lane, docs, outPath, cfg, benchmark)
+      val (h, o) = (Lane.join(htmlN), Lane.join(officeN))
+      val (mediaN, mediaScrubN, mediaFenceN) =
+        media.map(Lane.join(_)).getOrElse((0L, 0L, 0L))
+      WarcStats(h, if (includePdfs) prep.input - h - o else 0L,
+        o, Lane.join(codingN), noindexN, prep,
+        mediaDocs = mediaN, mediaScrubbed = mediaScrubN,
+        mediaFenced = mediaFenceN)
+    } finally { noindexIds.foreach(_.unpersist()); () }
   }
 
+  /** Execute and write `outPath/shard=N/` parquet, interleave-ordered
+    * within each shard. Stage counts cost ONE extra source pass (a
+    * combined count + distinct-digest aggregate, [[gateCounts]]),
+    * never a re-run of the sampled/sharded plan. That pass reads only
+    * `docs`, so it runs on the call's side lane ([[Lane]]) while this
+    * thread plans and writes the corpus. The rows written and the
+    * docs substring-stripped are observed on the write itself; no
+    * action reads the output back to count them.
+    */
   def run(docs: DataFrame, outPath: String, cfg: Config,
-          benchmark: Option[DataFrame] = None): Stats = {
+          benchmark: Option[DataFrame] = None): Stats =
+    Lane.within(docs.sparkSession)(runOn(_, docs, outPath, cfg, benchmark))
+
+  private def runOn(lane: Lane, docs: DataFrame, outPath: String,
+                    cfg: Config, benchmark: Option[DataFrame]): Stats = {
     val m = materialize(docs, cfg, benchmark)
     val (out, drops, contaminated) = (m.out, m.drops, m.contaminated)
     try {
-      out.write.mode(SaveMode.Overwrite)
+      val gates = lane(gateCounts(docs, cfg, m.prior, m.priorNear))
+      // counted in the write's own (final) stage: a result task's
+      // accumulator updates apply once per partition, so the counts
+      // are exact under task retries and speculation
+      val written = new Observation("corpus")
+      val flagged = out.columns.contains(StrippedFlag)
+      val counted = count(lit(1)).as("rows") +:
+        (if (flagged) Seq(count_if(col(StrippedFlag)).as("stripped")) else Nil)
+      out.observe(written, counted.head, counted.tail: _*)
+        .drop(StrippedFlag)
+        .write.mode(SaveMode.Overwrite)
         .partitionBy("shard")
         .parquet(outPath)
+      val wrote = written.get
       // layout metadata for maintenance ops (underscore-hidden)
       locally {
         val fs = new org.apache.hadoop.fs.Path(outPath)
@@ -850,66 +901,151 @@ object CorpusPrep {
           batchId = java.nio.ByteBuffer.wrap(md5).getLong,
           legacyBatchIds = Set(java.util.Arrays.hashCode(md5).toLong)).isEmpty
       }
-      val afterSample = out.count()
-      val seenCol = m.prior
-        .map(bf => graft.operators.SnapshotBloom.seen(bf, col("text")))
-        .getOrElse(lit(false))
-      // the stats pass must replay base()'s EXACT rewrite chain
-      // (markup strip, then scrub): digesting the raw markup-bearing
-      // text would overcount afterDedup for tag-only variants, and
-      // probing the Bloom (built from demarked digests) with
-      // un-demarked text would miss re-seen re-crawled pages
-      val badCol = cfg.badWords
-        .map(ws => graft.queries.WebQ.badWordCount(col("text"), ws) > 0L)
-        .getOrElse(lit(false))
-      val nearSeenCol = m.priorNear
-        .map(bf => graft.operators.SnapshotBands.seen(bf, col("text")))
-        .getOrElse(lit(false))
-      // url-dedup survival per row (lit(true) when the stage is off):
-      // the group minimum over the SAME canonical key the stage
-      // partitions on — one window shuffle in the stats pass, exactly
-      // the stage's own cost shape
-      val ukCol =
-        if (cfg.dedupByUrl)
-          col("doc_id") === min(col("doc_id"))
-            .over(Window.partitionBy(urlKeyCol))
-        else lit(true)
-      val a = scrubbed(demarked(docs, cfg), cfg)
-        .withColumn("uk", ukCol)
-        .select(TextOps.textDigest(col("text")).as("h"), seenCol.as("s"),
-          badCol.as("b"), nearSeenCol.as("ns"), col("uk"))
-        .agg(count(lit(1)).as("n"),
-          // distinct digests among docs ALL gates keep — counting the
-          // gated-out ones would overstate the post-dedup frame
-          count_distinct(
-            when(col("uk") && !col("s") && !col("b") && !col("ns"),
-              col("h"))).as("nd"),
-          // the url stage runs first, then the wordlist gate, then the
-          // exact membership probe, then the band probe — mirror
-          // base()'s precedence so each drop bills to the gate that
-          // actually fired
-          sum(when(col("uk") && !col("b") && col("s"), 1L)
-            .otherwise(0L)).as("sdrop"),
-          sum(when(col("uk") && col("b"), 1L).otherwise(0L)).as("bdrop"),
-          sum(when(col("uk") && !col("b") && !col("s") && col("ns"), 1L)
-            .otherwise(0L)).as("nsdrop"),
-          sum(when(!col("uk"), 1L).otherwise(0L)).as("udrop"))
-        .head()
-      Stats(a.getLong(0), a.getLong(1), afterSample,
+      val nearDupN = drops.map(_.count()).getOrElse(0L)
+      val contaminatedN = contaminated.map(_.count()).getOrElse(0L)
+      val a = Lane.join(gates)
+      Stats(a.getLong(0), a.getLong(1), wrote("rows").asInstanceOf[Long],
         urlDupDropped = a.getLong(5),
-        nearDupDropped = drops.map(_.count()).getOrElse(0L),
-        contaminatedDropped = contaminated.map(_.count()).getOrElse(0L),
+        nearDupDropped = nearDupN,
+        contaminatedDropped = contaminatedN,
         snapshotDropped = a.getLong(2),
         badwordsDropped = a.getLong(3),
         nearSnapshotDropped = a.getLong(4),
         // docs actually stripped IN THE OUTPUT: the span table is
-        // computed pre-anti-join/pre-sample, so scope it to written ids
-        substrStripped = m.substrSpans
-          .map(_.join(out.select(col("doc_id")), Seq("doc_id"), "left_semi")
-            .count())
-          .getOrElse(0L),
+        // computed pre-anti-join/pre-sample; the flag rides to the write
+        substrStripped =
+          if (flagged) wrote("stripped").asInstanceOf[Long] else 0L,
         statsFoldSkipped = statsFoldSkipped)
     } finally { m.release() }
+  }
+
+  /** The exact stage counts of [[run]], in ONE pass over `docs`: input
+    * rows, distinct digests among the docs every gate keeps, and each
+    * gate's drops. Real aggregates, not observed counters — they sit
+    * before shuffles, where a re-executed map task would apply its
+    * accumulator updates again.
+    */
+  private def gateCounts(docs: DataFrame, cfg: Config,
+      prior: Option[org.apache.spark.util.sketch.BloomFilter],
+      priorNear: Option[org.apache.spark.util.sketch.BloomFilter])
+      : org.apache.spark.sql.Row = {
+    val seenCol = prior
+      .map(bf => graft.operators.SnapshotBloom.seen(bf, col("text")))
+      .getOrElse(lit(false))
+    // the stats pass must replay base()'s EXACT rewrite chain
+    // (markup strip, then scrub): digesting the raw markup-bearing
+    // text would overcount afterDedup for tag-only variants, and
+    // probing the Bloom (built from demarked digests) with
+    // un-demarked text would miss re-seen re-crawled pages
+    val badCol = cfg.badWords
+      .map(ws => graft.queries.WebQ.badWordCount(col("text"), ws) > 0L)
+      .getOrElse(lit(false))
+    val nearSeenCol = priorNear
+      .map(bf => graft.operators.SnapshotBands.seen(bf, col("text")))
+      .getOrElse(lit(false))
+    // url-dedup survival per row (lit(true) when the stage is off):
+    // the group minimum over the SAME canonical key the stage
+    // partitions on — one window shuffle in the stats pass, exactly
+    // the stage's own cost shape
+    val ukCol =
+      if (cfg.dedupByUrl)
+        col("doc_id") === min(col("doc_id"))
+          .over(Window.partitionBy(urlKeyCol))
+      else lit(true)
+    scrubbed(demarked(docs, cfg), cfg)
+      .withColumn("uk", ukCol)
+      .select(TextOps.textDigest(col("text")).as("h"), seenCol.as("s"),
+        badCol.as("b"), nearSeenCol.as("ns"), col("uk"))
+      .agg(count(lit(1)).as("n"),
+        // distinct digests among docs ALL gates keep — counting the
+        // gated-out ones would overstate the post-dedup frame
+        count_distinct(
+          when(col("uk") && !col("s") && !col("b") && !col("ns"),
+            col("h"))).as("nd"),
+        // the url stage runs first, then the wordlist gate, then the
+        // exact membership probe, then the band probe — mirror
+        // base()'s precedence so each drop bills to the gate that
+        // actually fired
+        sum(when(col("uk") && !col("b") && col("s"), 1L)
+          .otherwise(0L)).as("sdrop"),
+        sum(when(col("uk") && col("b"), 1L).otherwise(0L)).as("bdrop"),
+        sum(when(col("uk") && !col("b") && !col("s") && col("ns"), 1L)
+          .otherwise(0L)).as("nsdrop"),
+        sum(when(!col("uk"), 1L).otherwise(0L)).as("udrop"))
+      .head()
+  }
+
+  /** The side lane of one [[run]] / [[runFromWarc]] call. Billing
+    * actions that read nothing the corpus write produces (the exact
+    * stats pass, the face counts, the media sidecar write) run here
+    * while the calling thread plans and writes the corpus: most of a
+    * crawl-prep call is driver-side planning, and the lane's tasks
+    * fill the executor slots the main path leaves idle meanwhile.
+    *
+    * Each body runs through `SQLExecution.withThreadLocalCaptured`,
+    * the device AQE uses for its stage jobs, so it carries the
+    * caller's local properties and active session: a [[JobRunner]]
+    * job group (and with it the runner's cancel), job tags, the
+    * scheduler pool. Every lane job also carries the call's own tag.
+    * Lane bodies never read the caches run() materializes.
+    */
+  private final class Lane(spark: org.apache.spark.sql.SparkSession) {
+    val tag = s"graft-corpusprep-lane-${Lane.ids.incrementAndGet()}"
+    val started =
+      scala.collection.mutable.ArrayBuffer.empty[CompletableFuture[_]]
+
+    def apply[T](body: => T): CompletableFuture[T] = {
+      val f = SQLExecution.withThreadLocalCaptured(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+        Lane.pool) {
+        spark.sparkContext.addJobTag(tag)
+        body
+      }
+      started += f
+      f
+    }
+  }
+
+  private object Lane {
+    private val ids = new AtomicLong(0)
+    // one shared pool; daemon threads never hold the JVM open
+    private val pool = Executors.newCachedThreadPool(r => {
+      val t = new Thread(r); t.setDaemon(true)
+      t.setName("graft-corpusprep-lane"); t
+    })
+
+    /** The body's value, or rethrow what the body threw. */
+    def join[T](f: CompletableFuture[T]): T =
+      try f.join()
+      catch {
+        case e: CompletionException if e.getCause != null => throw e.getCause
+      }
+
+    /** Run `body` with a fresh lane and join every lane body before
+      * returning, so no lane future outlives the call. A failed body
+      * fails the call. When anything throws, the lane's tag is
+      * cancelled and the call waits for every body to end before it
+      * rethrows; the cancel repeats while a body is still running,
+      * because a job submitted after a cancel is not covered by it.
+      */
+    def within[T](spark: org.apache.spark.sql.SparkSession)(body: Lane => T): T = {
+      val lane = new Lane(spark)
+      try {
+        val r = body(lane)
+        lane.started.foreach(join(_))
+        r
+      } catch {
+        case e: Throwable =>
+          var open = lane.started.filterNot(_.isDone)
+          while (open.nonEmpty) {
+            spark.sparkContext.cancelJobsWithTag(lane.tag)
+            scala.util.Try(CompletableFuture.allOf(open.toSeq: _*)
+              .get(100, TimeUnit.MILLISECONDS))
+            open = open.filterNot(_.isDone)
+          }
+          throw e
+      }
+    }
   }
 
   final case class ForgetStats(

@@ -116,10 +116,14 @@ object Recorder {
     }
   }
 
-  // without the drain, a scope closed right after an action misses the
-  // last stage's events (and one opened right after another action
-  // takes that action's late events as its own)
-  private def drain(sc: SparkContext): Unit =
+  /** Wait until the listener bus has delivered every posted event.
+    * Without the drain, a scope closed right after an action misses the
+    * last stage's events (and one opened right after another action
+    * takes that action's late events as its own); a reader of the
+    * listener-fed status store (`sc.statusTracker`) drains first for
+    * the same reason.
+    */
+  def drain(sc: SparkContext): Unit =
     try sc.listenerBus.waitUntilEmpty()
     catch { case _: Throwable => () } // a stuck bus must not kill the run
 

@@ -28,10 +28,18 @@ class CorpusPrepSpec extends SparkSpec {
     }
   }
 
-  test("runFromWarc: crawled HTML + WET + PDF + DOCX text ride one pipeline; per-face billing; mojibake stays out") {
+  private val pdfText = "a crawled pdf paragraph riding the batch corpus pipeline"
+  private val docxText = "a crawled office document riding the batch corpus pipeline"
+  private val brText = "a brotli coded page riding the batch corpus pipeline"
+
+  /** A one-file crawl with every face the intake bills: html and wet
+    * text, a noindex page, a recoverable and a mojibake PDF, a DOCX, a
+    * plain zip, a dying and a healthy brotli response, and a tagged,
+    * a clean and a broken JPEG. Returns the crawl directory.
+    */
+  private def writeCrawl(): String = {
     import java.nio.file.{Files, Paths}
     val dir = Files.createTempDirectory("graft-prep-warc").toString
-    val out = Files.createTempDirectory("graft-prep-out").toString + "/corpus"
     def rec(headers: Seq[(String, String)], content: Array[Byte]): Array[Byte] = {
       val sb = new StringBuilder
       sb.append("WARC/1.0\r\n")
@@ -46,9 +54,6 @@ class CorpusPrepSpec extends SparkSpec {
         "Content-Type" -> "application/http; msgtype=response"),
         (s"HTTP/1.1 200 OK\r\nContent-Type: $ct\r\n\r\n")
           .getBytes("ISO-8859-1") ++ body)
-    val pdfText = "a crawled pdf paragraph riding the batch corpus pipeline"
-    val docxText = "a crawled office document riding the batch corpus pipeline"
-    val brText = "a brotli coded page riding the batch corpus pipeline"
     // media rows for the mediaOut sidecar billing: one payload per
     // scrub outcome (scrubbed / clean / governed-but-broken = fenced)
     val img = graft.multimodal.Netpbm.Image(8, 8, 255,
@@ -101,6 +106,13 @@ class CorpusPrepSpec extends SparkSpec {
         resp("http://x.example/tagged.jpg", "image/jpeg", jpegTagged) ++
         resp("http://x.example/clean.jpg", "image/jpeg", cleanJpeg) ++
         resp("http://x.example/broken.jpg", "image/jpeg", brokenJpeg))
+    dir
+  }
+
+  test("runFromWarc: crawled HTML + WET + PDF + DOCX text ride one pipeline; per-face billing; mojibake stays out") {
+    import java.nio.file.Files
+    val dir = writeCrawl()
+    val out = Files.createTempDirectory("graft-prep-out").toString + "/corpus"
     val keep = CorpusPrep.Config(langRates = Map.empty, defaultRate = 1.0,
       nShards = 2, stripMarkup = true)
     val stats = CorpusPrep.runFromWarc(spark, dir, out, keep)
@@ -340,23 +352,31 @@ class CorpusPrepSpec extends SparkSpec {
     import spark.implicits._
     val story = "the quick brown fox jumps over the lazy dog and then " +
       "runs far away into the deep green forest tonight again"
-    val docs = Seq(
+    // the source text passes a NON-deterministic identity udf that
+    // counts its evaluations: Catalyst cannot inline it twice, and a
+    // source scan is billed however its plan is spelled. An RDD-backed
+    // frame, so no optimizer rule folds the udf on the driver
+    val evals = spark.sparkContext.longAccumulator("base-source-evals")
+    val tick = udf((t: String) => { evals.add(1L); t }).asNondeterministic()
+    val docs = spark.sparkContext.parallelize(Seq(
       (1L, s"$story one", "en", "a", 1L),
       (2L, s"$story two", "en", "a", 1L),
       (3L, "completely different content about spark catalyst plans " +
         "optimizing large distributed analytical queries every day",
-        "en", "a", 1L)).toDF("doc_id", "text", "lang", "source", "n_chars")
+        "en", "a", 1L)), 2).toDF("doc_id", "text", "lang", "source", "n_chars")
+      .withColumn("text", tick(col("text")))
     val bench = Seq((100L, "held out benchmark words that no doc shares"))
       .toDF("doc_id", "text")
     val cfg2 = CorpusPrep.Config(langRates = Map.empty, defaultRate = 1.0,
-      nShards = 2, nearDupMinEst = Some(0.5), scrubPii = true)
+      nShards = 2, nearDupMinEst = Some(0.5), scrubPii = true,
+      substrWindow = Some(4))
     val m = CorpusPrep.materialize(docs, cfg2, Some(bench))
     try {
       assert(m.baseCached, "base must be cached when both stages are on")
       // execute every consumer, then assert each read the cached base:
       // with the cache, the scrub+dedup window runs ONCE (filling the
       // cache) instead of once per consuming action
-      Seq(m.drops.get, m.contaminated.get, m.out).foreach { df =>
+      Seq(m.drops.get, m.contaminated.get, m.substrSpans.get, m.out).foreach { df =>
         df.collect()
         val plan = df.queryExecution.executedPlan match {
           case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -366,7 +386,19 @@ class CorpusPrepSpec extends SparkSpec {
         assert(plan.contains("InMemoryTableScan"),
           s"consumer recomputed the base lineage:\n$plan")
       }
+      // the plan string cannot tell a cache read from a recompute when
+      // the consumer is itself cached: the source evaluation count can
+      assert(evals.value == 3L,
+        s"the base lineage must run once per input row: ${evals.value}")
     } finally m.release()
+    // run(): the same once, plus its documented extra source pass (the
+    // exact stats pass)
+    evals.reset()
+    val out = java.nio.file.Files.createTempDirectory("graft-matonce").toString
+    val stats = CorpusPrep.run(docs, out, cfg2, Some(bench))
+    assert(stats.input == 3L)
+    assert(evals.value == 6L,
+      s"run() evaluates each source row twice, no more: ${evals.value}")
   }
 
   test("packing stage: q58 layout over the shard window, no extra exchange") {
@@ -900,6 +932,145 @@ class CorpusPrepSpec extends SparkSpec {
     val out2 = java.nio.file.Files.createTempDirectory("graft-corpus-nm").toString
     CorpusPrep.run(docs, out2, cfgP.copy(packBudget = None))
     assert(!new java.io.File(CorpusPrep.manifestPath(out2)).exists())
+  }
+
+  /** The session's cache entries: registered frames and the RDDs
+    * already materialized for them.
+    */
+  private def cacheState(): (Int, Set[Int]) =
+    (org.apache.spark.sql.graftbridge.CacheEntries(spark),
+      spark.sparkContext.getPersistentRDDs.keySet.toSet)
+
+  test("runFromWarc: a failing step releases every cache the call created") {
+    import java.nio.file.Files
+    val dir = writeCrawl()
+    val out = Files.createTempDirectory("graft-prep-leak").toString
+    // the media sidecar cannot be written: its parent is a regular file
+    val blocker = Files.createTempFile("graft-prep-leak", ".file").toString
+    val cfgAll = CorpusPrep.Config(langRates = Map.empty, defaultRate = 1.0,
+      nShards = 2, stripMarkup = true, nearDupMinEst = Some(0.5))
+    val before = cacheState()
+    intercept[Exception] {
+      CorpusPrep.runFromWarc(spark, dir, out + "/corpus", cfgAll,
+        honorNoindex = true, mediaOut = Some(blocker + "/media"))
+    }
+    assert(cacheState() == before,
+      "the noindex id set (or a materialized frame) stayed cached")
+  }
+
+  /** Per observe node (CollectMetricsExec, by name) in an executed
+    * plan: true when it reaches a write command without crossing an
+    * exchange or a query stage on the way down. That is what keeps an
+    * observed count exact: only a result task's accumulator updates
+    * are applied once per partition, whatever retries run.
+    */
+  private def observeVerdicts(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[(String, Boolean)] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.WriteFilesExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    def walk(n: SparkPlan, underWrite: Boolean, crossed: Boolean)
+        : Seq[(String, Boolean)] = n match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, underWrite, crossed)
+      case c: CollectMetricsExec =>
+        (c.name -> (underWrite && !crossed)) +: walk(c.child, underWrite, crossed)
+      case w @ (_: DataWritingCommandExec | _: WriteFilesExec) =>
+        w.children.flatMap(walk(_, underWrite = true, crossed = false))
+      case q: QueryStageExec => walk(q.plan, underWrite, crossed = true)
+      case e: Exchange => e.children.flatMap(walk(_, underWrite, crossed = true))
+      case other => other.children.flatMap(walk(_, underWrite, crossed))
+    }
+    walk(p, underWrite = false, crossed = false)
+  }
+
+  /** The executed plans of every query `body` runs, from a listener
+    * registered around it; waits (bounded) until `until` holds.
+    */
+  private def executedPlans(until: Seq[org.apache.spark.sql.execution.SparkPlan] => Boolean)
+      (body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = { seen.add(qe.executedPlan); () }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      import scala.jdk.CollectionConverters._
+      val deadline = System.nanoTime() + 30000000000L
+      while (!until(seen.asScala.toSeq) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      seen.asScala.toSeq
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("observed counts are exact: each observe node shares its write's final stage") {
+    import java.nio.file.Files
+    val dir = writeCrawl()
+    val out = Files.createTempDirectory("graft-prep-observe").toString
+    val cfgAll = CorpusPrep.Config(langRates = Map.empty, defaultRate = 1.0,
+      nShards = 2, stripMarkup = true, scrubPii = true,
+      nearDupMinEst = Some(0.5), substrWindow = Some(4), dedupByUrl = true)
+    def names(ps: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+      ps.flatMap(observeVerdicts).map(_._1).toSet
+    val plans = executedPlans(ps => Set("corpus", "media").subsetOf(names(ps))) {
+      CorpusPrep.runFromWarc(spark, dir, out + "/corpus", cfgAll,
+        mediaOut = Some(out + "/media"))
+    }
+    val verdicts = plans.flatMap(observeVerdicts)
+    assert(Set("corpus", "media").subsetOf(verdicts.map(_._1).toSet),
+      s"no observed write plan captured: ${verdicts.map(_._1)}")
+    verdicts.foreach { case (name, ok) =>
+      assert(ok, s"observe '$name' is cut from its write by an exchange or a stage:\n" +
+        plans.map(_.toString).mkString("\n"))
+    }
+    // the pin bites: the same count taken BELOW a shard window (a
+    // shuffle under the write) reads as not exact
+    import spark.implicits._
+    val below = Seq((1L, 0L), (2L, 1L), (3L, 0L)).toDF("doc_id", "shard")
+      .observe("below", count(lit(1)))
+      .withColumn("pos", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("shard"))
+          .orderBy(col("doc_id"))))
+    val misplaced = executedPlans(ps => names(ps).contains("below")) {
+      below.write.mode("overwrite").partitionBy("shard").parquet(out + "/below")
+    }.flatMap(observeVerdicts)
+    assert(misplaced.nonEmpty && misplaced.forall(!_._2),
+      s"an observe under a shuffle must fail the pin: $misplaced")
+  }
+
+  test("cancelling a runFromWarc job cancels its side lane too") {
+    import java.nio.file.Files
+    import graft.pipeline.JobRunner
+    import scala.concurrent.duration._
+    val dir = writeCrawl()
+    val out = Files.createTempDirectory("graft-prep-cancel").toString
+    val cfgAll = CorpusPrep.Config(langRates = Map.empty, defaultRate = 1.0,
+      nShards = 2, stripMarkup = true, scrubPii = true,
+      nearDupMinEst = Some(0.5), substrWindow = Some(4), dedupByUrl = true,
+      badWords = Some(Seq("zzzq")))
+    val sc = spark.sparkContext
+    val runner = new JobRunner(spark)
+    val id = runner.submit("crawl-prep") { s =>
+      CorpusPrep.runFromWarc(s, dir, out + "/corpus", cfgAll,
+        mediaOut = Some(out + "/media")); ()
+    }
+    // cancel once the call has a Spark job in flight
+    val deadline = System.nanoTime() + 60000000000L
+    while (sc.statusTracker.getJobIdsForGroup(id).isEmpty &&
+           System.nanoTime() < deadline) Thread.sleep(5)
+    runner.cancel(id)
+    assert(runner.await(id, 2.minutes) == JobRunner.Cancelled)
+    // the status store is fed by the listener bus: drain it first
+    org.apache.spark.graftbench.Recorder.drain(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      s"jobs still running after the cancelled call returned: " +
+        sc.statusTracker.getActiveJobIds.mkString(","))
   }
 }
 
