@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.VecOps
 import graft.functions.expressions.VecExprs
+import graft.pipeline.Snapshot
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -232,32 +233,32 @@ object IvfIndex {
     BuildInfo(k, dim, n)
   }
 
-  /** Crash recovery for the retrain publish: a failure between the two
-    * renames leaves the previous index retired at `._graft_old` and
-    * nothing at `path` — reinstate it so the index is never lost.
-    * Called by every read entry point that can follow a retrain.
+  /** Crash recovery for the index's publishes ([[Snapshot.recover]]):
+    * a failure between the two swap renames leaves the previous index
+    * retired and nothing at `path` — reinstate it so the index is
+    * never lost. Called by every read entry point that can follow a
+    * retrain or dedupe.
     *
     * Lock awareness: when the caller does NOT hold the maintainer
     * lock (readers) and the lock file is present, a missing target is
     * a LIVE maintainer mid-swap, not a crash — "repairing" it would
     * rename the retired tree back under the maintainer's second
-    * rename. Refuse with a retry hint instead of racing.
+    * rename. Refuse with a retry hint instead of racing. Without the
+    * lock, only the mid-swap state is repaired.
     */
   private def recoverRetrain(spark: SparkSession, path: String,
                              lockHeld: Boolean = false): Unit = {
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(path + "._graft_old")
-    if (!fs.exists(new Path(path)) && fs.exists(old)) {
+    if (lockHeld || Snapshot.midSwap(fs, path)) {
       if (!lockHeld && fs.exists(lockFile(path)))
         throw new IllegalStateException(
           s"ivf index at $path is mid-publish (maintainer lock held and " +
             "the target is between its two swap renames) — retry once " +
             "the maintainer completes")
-      if (!fs.rename(old, new Path(path)))
-        throw new java.io.IOException(
-          s"retrain recovery: cannot reinstate $old")
+      Snapshot.recover(fs, path)
     }
+    ()
   }
 
   /** Fraction of the index appended since the last build: append()
@@ -394,9 +395,9 @@ object IvfIndex {
     // be published atomically with the fresh index when the current
     // index has no sidecar of its own (pqParams None), and queryPq
     // would silently return wrong shortlists. Start from nothing.
-    val tmpFs = new Path(tmp)
+    val fs = new Path(tmp)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (tmpFs.exists(new Path(tmp))) tmpFs.delete(new Path(tmp), true)
+    if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
     // net of tombstones: the rebuild IS a compaction — the new tree
     // starts log-free (the in-tree log dies with the retired tree in
     // the swap) and must not resurrect deleted vectors
@@ -416,14 +417,7 @@ object IvfIndex {
     // codes
     pqParams.foreach { case (m, ksub, iters, sampleN) =>
       buildPqUnlocked(spark, tmp, m, ksub, iters, sampleN) }
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(path + "._graft_old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(new Path(path), old) ||
-        !fs.rename(new Path(tmp), new Path(path)))
-      throw new java.io.IOException(s"retrain publish failed for $path")
-    fs.delete(old, true)
+    Snapshot.swap(fs, path, exists = true, new Path(tmp))
     Some(info)
   }
 
@@ -551,8 +545,8 @@ object IvfIndex {
     recoverRetrain(spark, path, lockHeld = true)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(path).getFileSystem(conf)
-    val tmp = path + "._graft_tmp"
-    if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
+    // the write-beside dir; the recovery above cleared a stray one
+    val tmp = Snapshot.tmpPath(path).toString
     val idx = spark.read.parquet(s"$path/index")
     val deduped = antiDeleted(spark, path, idx)
       .select(col("cluster_id"), col("vec_id"), col("embedding"))
@@ -581,12 +575,7 @@ object IvfIndex {
           .write.mode(SaveMode.Overwrite)
           .partitionBy("cluster_id").parquet(s"$tmp/pq/codes")
       }
-      val old = new Path(path + "._graft_old")
-      if (fs.exists(old)) fs.delete(old, true)
-      if (!fs.rename(new Path(path), old) ||
-          !fs.rename(new Path(tmp), new Path(path)))
-        throw new java.io.IOException(s"dedupe publish failed for $path")
-      fs.delete(old, true)
+      Snapshot.swap(fs, path, exists = true, new Path(tmp))
       // the session caches parquet file listings per path — the swap
       // would otherwise serve the retired file list to the next read
       spark.catalog.refreshByPath(path)

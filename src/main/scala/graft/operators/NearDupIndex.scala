@@ -185,24 +185,16 @@ object NearDupIndex {
       .select(pbCol(storeParts).as("pb")).distinct()
       .collect().map(_.getInt(0)).toSeq
 
-  /** Repair an interrupted [[compactStores]] swap (store retired at
-    * `._graft_old`, nothing at the store root) and clear stray tmp
-    * trees. Runs at every entry point, under the caller's lock.
+  /** Repair an interrupted [[compactStores]] swap and clear stray tmp
+    * trees ([[graft.pipeline.Snapshot.recover]] per store). Runs at
+    * every entry point, under the caller's lock.
     */
   private def recoverStores(spark: SparkSession, path: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq(bandsPath(path), sigsPath(path)).foreach { p =>
-      val dst = new org.apache.hadoop.fs.Path(p)
-      val old = new org.apache.hadoop.fs.Path(p + "._graft_old")
-      val tmp = new org.apache.hadoop.fs.Path(p + "._graft_tmp")
-      if (!fs.exists(dst) && fs.exists(old)) {
-        if (!fs.rename(old, dst)) throw new java.io.IOException(
-          s"near-dup index store recovery: cannot reinstate $old")
-        spark.catalog.refreshByPath(p)
-      }
-      if (fs.exists(dst) && fs.exists(old)) fs.delete(old, true)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
+      graft.pipeline.Snapshot.recover(fs, p)
+      spark.catalog.refreshByPath(p)
     }
   }
 
@@ -602,17 +594,11 @@ object NearDupIndex {
           s"compactStores would empty $p — every indexed doc is " +
             "tombstoned; rebuild the index with NearDupIndex.build " +
             "over the surviving corpus instead")
-        val dst = new org.apache.hadoop.fs.Path(p)
-        val old = new org.apache.hadoop.fs.Path(p + "._graft_old")
-        val tmp = new org.apache.hadoop.fs.Path(p + "._graft_tmp")
+        val tmp = graft.pipeline.Snapshot.tmpPath(p)
         live.repartition(col(partColName))
           .write.partitionBy(partColName)
           .mode(SaveMode.Overwrite).parquet(tmp.toString)
-        if (!fs.rename(dst, old)) throw new java.io.IOException(
-          s"store compaction: cannot retire $dst")
-        if (!fs.rename(tmp, dst)) throw new java.io.IOException(
-          s"store compaction: cannot publish $tmp")
-        fs.delete(old, true)
+        graft.pipeline.Snapshot.swap(fs, p, exists = true, tmp)
         spark.catalog.refreshByPath(p)
       }
       compactOne(bandsPath(path), "pb", Seq("band", "bkey", "doc_id"))

@@ -75,25 +75,16 @@ object SnapshotBloom {
     bf
   }
 
-  /** Publish the sidecar: write to `<path>.tmp`, then rename — a
-    * reader never observes a half-written filter (the IvfIndex
-    * crash-safe publish rule). Hadoop FS API so the same code runs on
-    * local disk and on a distributed store.
+  /** Publish the sidecar atomically ([[graft.util.AtomicFile]]: write
+    * `<path>.tmp`, then OVERWRITE-rename) — a reader never observes a
+    * half-written filter, and a crash never leaves NO sidecar: losing
+    * the previous snapshot's membership is strictly worse than keeping
+    * a stale one. Hadoop FS API so the same code runs on local disk
+    * and on a distributed store.
     */
-  def save(spark: SparkSession, bf: BloomFilter, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try bf.writeTo(out) finally out.close()
-    // OVERWRITE rename, atomically where the filesystem can: a
-    // delete-then-rename pair would leave NO sidecar if the process
-    // died between the two calls — losing the previous snapshot's
-    // membership is strictly worse than keeping a stale one
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  def save(spark: SparkSession, bf: BloomFilter, path: String): Unit =
+    graft.util.AtomicFile.write(spark.sparkContext.hadoopConfiguration,
+      path)(bf.writeTo)
 
   def load(spark: SparkSession, path: String): BloomFilter = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -1077,7 +1077,7 @@ object CorpusPrep {
     * crash between a shard's two renames is repaired by the NEXT
     * forget (the per-shard recoverAndExists). In the window before
     * that repair, a reader partition-discovering the corpus root sees
-    * the retired `shard=N._graft_old` directory as a malformed
+    * the retired sibling of `shard=N` as a malformed
     * partition value — at 100 TB run maintenance through a catalog
     * (or re-run forget immediately) rather than raw discovery.
     *
@@ -1130,7 +1130,7 @@ object CorpusPrep {
       // maintainer lock (the whole cycle, not just the swap)
       Snapshot.withMaintainerLock(fs, dir) { lease =>
         // recoverAndExists, not a bare exists: a crash in an EARLIER
-        // forget's swap leaves the shard retired at `._graft_old` — a
+        // forget's swap leaves the shard retired beside its dir — a
         // bare exists would skip it and the victims would survive
         if (Snapshot.recoverAndExists(fs, dir, lease)) {
           val cur = spark.read.parquet(dir)

@@ -12,25 +12,24 @@ import org.apache.spark.sql.functions._
   * The merge itself is ONE window over the union — no join: both sides
   * shuffle once on the key, the per-key winner is picked by
   * (version, source) rank, and ties go to the incoming batch. The
-  * result is written to a sibling temp directory and published with
-  * two renames: readers see the previous complete snapshot until the
-  * publish, then the new one — never a half-written directory. (The
-  * instant between the two renames has no directory at the target; a
-  * reader there fails fast with not-found rather than reading partial
-  * data, and a crash there is repaired by the next upsert, which
-  * reinstates the retired snapshot before merging.)
+  * result is published through the shared [[Snapshot]] swap: readers
+  * see the previous complete snapshot until the publish, then the new
+  * one — never a half-written directory, and a crash between the
+  * swap's renames is repaired by the next upsert, which reinstates the
+  * retired snapshot before merging.
   *
-  * Scale path: for a 100 TB table, wrap this with partition pruning —
-  * take the update batch's distinct partition values, rewrite ONLY the
-  * touched `part=`-directories, and leave the rest of the snapshot in
-  * place. The single-snapshot form below is the building block each
-  * touched partition runs.
+  * Scale path: for a 100 TB table, lay the snapshot out by partition
+  * and use [[upsertPartitioned]] — it reads, merges and swaps ONLY the
+  * `part=` directories the batch touches, in one fused job, with the
+  * same merge kernel as the single-snapshot [[upsert]].
   */
 object Merge {
 
   final case class Stats(
       targetRows: Long, updateRows: Long, resultRows: Long,
       inserted: Long, updated: Long, deleted: Long)
+
+  private val NoStats = Stats(0, 0, 0, 0, 0, 0)
 
   /** Merge `updates` into the snapshot at `targetPath`.
     *
@@ -57,17 +56,38 @@ object Merge {
     // (not just the swap): a concurrent maintainer publishing between
     // this read and this publish would be silently overwritten
     Snapshot.withMaintainerLock(fs, targetPath) { lease =>
-    // crash recovery first (see [[Snapshot]]): skipping it would treat
-    // a half-published target as a fresh bootstrap and drop data
-    val exists = Snapshot.recoverAndExists(fs, targetPath, lease)
+      // crash recovery first (see [[Snapshot]]): skipping it would
+      // treat a half-published target as a fresh bootstrap and drop data
+      val exists = Snapshot.recoverAndExists(fs, targetPath, lease)
+      // one materialization of the caller's plan: it feeds the union
+      // AND the updateRows stat, and may be an expensive computation
+      val upd = updates.cache()
+      try mergeKernel(spark,
+          if (exists) Some(spark.read.parquet(targetPath)) else None,
+          upd, keys, versionCol, deleteCol, needStats = true)(
+          Snapshot.publish(fs, targetPath, exists, _, lease))
+      finally { upd.unpersist(); () }
+    }
+  }
 
+  /** The ONE SCD-1 merge kernel [[upsert]] and [[upsertPartitioned]]
+    * share: `tgtRaw` (None: bootstrap) against the caller-cached
+    * `upd`, ranked over the window partitioning `grp` — the keys,
+    * led by the partition column in the fused form, so each
+    * partition's winners are exactly what its standalone merge would
+    * pick. `publish` receives the winners net of tombstones; the
+    * stats come from the same cached winners, or are zeroed when
+    * `needStats` is false.
+    */
+  private def mergeKernel(spark: SparkSession, tgtRaw: Option[DataFrame],
+                          upd: DataFrame, grp: Seq[String],
+                          versionCol: String, deleteCol: Option[String],
+                          needStats: Boolean)
+                         (publish: DataFrame => Unit): Stats = {
     val del = deleteCol.getOrElse("_graft_delete")
-    // one materialization of the caller's plan: it feeds the union AND
-    // the updateRows stat, and may be an expensive computation
-    val upd = (if (deleteCol.isDefined) updates
-               else updates.withColumn(del, lit(false)))
-      .withColumn("_graft_src", lit(1))
-      .cache()
+    val updData = upd.drop(deleteCol.toSeq: _*)
+    val tgtSide = tgtRaw.getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], updData.schema))
     // add-column schema evolution: columns NEW in the update batch are
     // added to the snapshot side as typed nulls, so the published
     // snapshot carries the evolved schema (existing rows read null for
@@ -75,35 +95,28 @@ object Merge {
     // updates MISSING a snapshot column — stays an error: silently
     // null-filling the update side would erase that column's value on
     // every key the batch touches (SCD-1 winners replace whole rows).
-    val updData = updates.drop(deleteCol.toSeq: _*)
-    val tgtRaw = if (exists) spark.read.parquet(targetPath)
-                 else spark.createDataFrame(
-                   spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                   updData.schema)
-    // name matching follows the session's resolution semantics: Spark
-    // resolves column names per spark.sql.caseSensitive (default
-    // case-INSENSITIVE), so a batch column differing only in case is
-    // the SAME column, not a new one (treating it as new would produce
-    // a duplicate/ambiguous column in the published snapshot)
-    val caseSensitive =
-      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    def norm(n: String): String =
-      if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
-    val updNames = updData.columns.map(norm).toSet
-    val tgtNames = tgtRaw.columns.map(norm).toSet
-    val missingInUpd = tgtRaw.columns.toSeq.filterNot(c => updNames(norm(c)))
+    // Names match by the session's resolution semantics: a batch column
+    // differing only in case is the SAME column under the default
+    // case-insensitive resolution, not a new one (treating it as new
+    // would publish a duplicate/ambiguous column).
+    val key = Snapshot.nameKey(spark)
+    val updNames = updData.columns.map(key).toSet
+    val tgtNames = tgtSide.columns.map(key).toSet
+    val missingInUpd = tgtSide.columns.toSeq.filterNot(c => updNames(key(c)))
     require(missingInUpd.isEmpty,
       s"merge: update batch is missing snapshot column(s) ${missingInUpd.mkString(", ")}; " +
         "add-column evolution only goes forward")
-    val newCols = updData.schema.fields
-      .filterNot(f => tgtNames(norm(f.name)))
-    val tgt = newCols.foldLeft(tgtRaw) { (df, f) =>
+    val tgt = updData.schema.fields.filterNot(f => tgtNames(key(f.name)))
+      .foldLeft(tgtSide) { (df, f) =>
         df.withColumn(f.name, lit(null).cast(f.dataType))
       }
       .withColumn(del, lit(false))
       .withColumn("_graft_src", lit(0))
+    val updTagged = (if (deleteCol.isDefined) upd
+                     else upd.withColumn(del, lit(false)))
+      .withColumn("_graft_src", lit(1))
 
-    // ONE shuffle on the key: rank picks the winner, the unbounded
+    // ONE shuffle on `grp`: rank picks the winner, the unbounded
     // max() over the same partitioning records whether the key existed
     // in the snapshot (for the stats — no extra exchange, the window
     // partitioning is reused). The full-row hash is the LAST tiebreak:
@@ -112,20 +125,20 @@ object Merge {
     // different payload. The hash must include the delete flag — a
     // same-key same-version tombstone vs live row is otherwise
     // hash-equal and the winner would again be arrival order.
-    val dataCols = updates.drop(deleteCol.toSeq: _*).columns.toSeq :+ del
-    val wRank = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(versionCol).desc, col("_graft_src").desc,
-        xxhash64(dataCols.map(col): _*).asc)
-    val wKey = Window.partitionBy(keys.map(col): _*)
-    val merged = tgt.unionByName(upd)
+    val dataCols = updData.columns.toSeq :+ del
+    val wKey = Window.partitionBy(grp.map(col): _*)
+    val wRank = wKey.orderBy(col(versionCol).desc, col("_graft_src").desc,
+      xxhash64(dataCols.map(col): _*).asc)
+    val merged0 = tgt.unionByName(updTagged)
       .withColumn("_graft_rn", row_number().over(wRank))
       .withColumn("_graft_had_tgt",
         max(when(col("_graft_src") === 0, 1).otherwise(0)).over(wKey))
       .filter(col("_graft_rn") === 1)
-      .cache()
-
+    // without the stats pass the publish is merged's ONLY consumer —
+    // caching would just add a materialization job
+    val merged = if (needStats) merged0.cache() else merged0
     try {
-      val a = merged.groupBy().agg(
+      val a = if (!needStats) None else Some(merged.groupBy().agg(
         count(lit(1)).as("winners"),
         count(when(!col(del), 1)).as("kept"),
         count(when(col(del) && col("_graft_had_tgt") === 1, 1)).as("deleted"),
@@ -134,22 +147,17 @@ object Merge {
         count(when(col("_graft_src") === 1 && !col(del) &&
           col("_graft_had_tgt") === 1, 1)).as("updated"),
         count(when(col("_graft_had_tgt") === 1, 1)).as("target_keys"))
-        .collect()(0)
-
-      val result = merged.filter(!col(del))
-        .drop(del, "_graft_src", "_graft_rn", "_graft_had_tgt")
-
-      Snapshot.publish(fs, targetPath, exists, result, lease)
-
-      Stats(
-        targetRows = a.getLong(5),
+        .collect()(0))
+      publish(merged.filter(!col(del))
+        .drop(del, "_graft_src", "_graft_rn", "_graft_had_tgt"))
+      a.fold(NoStats)(r => Stats(
+        targetRows = r.getLong(5),
         updateRows = upd.count(),
-        resultRows = a.getLong(1),
-        inserted = a.getLong(3),
-        updated = a.getLong(4),
-        deleted = a.getLong(2))
-    } finally { merged.unpersist(); upd.unpersist(); () }
-    }
+        resultRows = r.getLong(1),
+        inserted = r.getLong(3),
+        updated = r.getLong(4),
+        deleted = r.getLong(2)))
+    } finally { if (needStats) merged.unpersist(); () }
   }
 
   /** Partition-pruned merge into a snapshot laid out as
@@ -159,29 +167,28 @@ object Merge {
     * byte-identical (mtime-pinned in the spec).
     *
     * FUSED, not serial (r11): all touched partitions merge in ONE
-    * Spark job — the window partitions by (partCol, keys), so each
-    * partition's winners are exactly what its standalone single-window
-    * merge would pick — and the result is written partitioned-by-
-    * partCol to one sibling tmp tree, then swapped per partition with
-    * pure METADATA renames. The first cut ran a full read-merge-publish
-    * cycle per touched partition serially; a delta relabeling docs
-    * across 16 shards paid 16 driver round-trip cycles (~0.7 s each —
-    * measured dominating NearDupIndex.maintain at 14 s for a 500-doc
-    * batch), and at 1000 touched partitions of a real table the
-    * driver-serial loop IS the wall clock. The fused job keeps the
-    * pruning (only touched dirs are read or written) and the per-
-    * partition crash contract (each dir swaps through the same
-    * `._graft_old` two-rename protocol, repaired by the next cycle's
-    * recovery), while the job count stays O(1) in touched partitions.
+    * Spark job — [[mergeKernel]]'s window partitions by (partCol,
+    * keys), so each partition's winners are exactly what its
+    * standalone single-window merge would pick — and
+    * [[Snapshot.publishPartitioned]] writes the result to one sibling
+    * tmp tree, then swaps it in per partition with pure METADATA
+    * renames. The first cut ran a full read-merge-publish cycle per
+    * touched partition serially; a delta relabeling docs across 16
+    * shards paid 16 driver round-trip cycles (~0.7 s each — measured
+    * dominating NearDupIndex.maintain at 14 s for a 500-doc batch),
+    * and at 1000 touched partitions of a real table the driver-serial
+    * loop IS the wall clock. The fused job keeps the pruning (only
+    * touched dirs are read or written) and the per-partition crash
+    * contract (each dir swaps through the same two-rename protocol,
+    * repaired by the next cycle's recovery), while the job count stays
+    * O(1) in touched partitions.
     *
     * All touched partitions' maintainer locks are held for the whole
-    * cycle, acquired in sorted path order (two concurrent fused
-    * maintainers with overlapping sets contend in a consistent order
-    * — the second fails fast at the first contended lock, the
-    * single-writer convention, never deadlocks). A crash mid-swap
-    * leaves some partitions published and some retired at
-    * `._graft_old`; the next maintain's per-partition recovery
-    * reinstates them — same contract as the serial form.
+    * cycle ([[Snapshot.withPartitions]]: sorted order, never
+    * deadlocks, the second of two contending maintainers fails fast).
+    * A crash mid-swap leaves some partitions published and some
+    * retired; the next maintain's per-partition recovery reinstates
+    * them — same contract as the serial form.
     *
     * Requires every update row to carry its partition value (rows
     * cannot move between partitions in one merge — changing the
@@ -211,213 +218,52 @@ object Merge {
                         needStats: Boolean = true,
                         clusterWrite: Boolean = false): Stats = {
     // resolve the caller's partCol to the frame's OWN attribute case
-    // ONCE (per the session's resolution semantics): the partitioned
-    // writer names directories after the ATTRIBUTE, so a caller-cased
-    // 'Shard' against a 'shard' column would probe `Shard=…` while the
-    // writer wrote `shard=…` — every partition "missing", every swap a
-    // fabricated empty snapshot over the real merged output
-    val caseSensitiveRes =
-      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    def normName(n: String): String =
-      if (caseSensitiveRes) n else n.toLowerCase(java.util.Locale.ROOT)
-    val partColR = updates.columns.find(c => normName(c) == normName(partCol))
+    // ONCE: the partitioned writer names directories after the
+    // ATTRIBUTE, so a caller-cased 'Shard' against a 'shard' column
+    // would probe `Shard=…` while the writer wrote `shard=…` — every
+    // partition "missing", every swap a fabricated empty snapshot over
+    // the real merged output
+    val key = Snapshot.nameKey(spark)
+    val partColR = updates.columns.find(c => key(c) == key(partCol))
       .getOrElse(throw new IllegalArgumentException(
         s"upsertPartitioned: partition column $partCol not found in " +
           s"update batch columns ${updates.columns.mkString(", ")}"))
-    require(!keys.exists(k => normName(k) == normName(partColR)),
+    require(!keys.exists(k => key(k) == key(partColR)),
       "partition column is implicit per-partition; keys must not repeat it")
     val upd = updates.cache() // feeds the distinct, the union and the count
-    try {
-      // collect each touched value TWICE: the typed value (re-attached
-      // as a literal to the partition reads) and Spark's OWN string
-      // form (`cast(string)` — exactly what the partitioned writer
-      // stringifies before escaping). Deriving the dir name from
-      // v.toString instead would diverge for types whose JVM toString
-      // differs from the SQL cast (java.sql.Timestamp renders a
-      // trailing ".0" the writer does not) — and a name mismatch here
-      // would make the swap below publish a fabricated empty dir over
-      // the real merged output
-      val touched = upd
-        .select(col(partColR), col(partColR).cast("string").as("_str"))
-        .distinct().collect().map(r => (r.get(0), r.getString(1)))
-      // a null partition value has no `partCol=` directory to live in
-      // (and === never matches null, so its rows would silently merge
-      // NOWHERE) — reject loudly instead of losing data
-      require(!touched.exists(_._1 == null),
-        s"upsertPartitioned: update batch has rows with null $partCol")
-      if (touched.isEmpty) return Stats(0, 0, 0, 0, 0, 0)
-      val fs = new Path(targetPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(new Path(targetPath))
-      // escape exactly as Spark's partitioned writer does, so values
-      // with '/', '=', '%', … produce the directory names partition
-      // discovery expects (and the tmp tree's dirs line up 1:1)
-      val parts = touched.map { case (v, str) =>
-        val dirName = org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.escapePathName(str)
-        (v, dirName, s"$targetPath/$partColR=$dirName")
-      }.sortBy(_._2).toList
-      // acquire every touched partition's lock (sorted order), recover
-      // each, then run the fused cycle with all leases in hand — the
-      // iterative multi-lock, so stack depth never tracks the touched
-      // count
-      Snapshot.withMaintainerLocks(fs, parts.map(_._3)) { ls =>
-        fusedCycle(spark, fs, targetPath, upd, partColR, keys,
-          versionCol, deleteCol,
-          parts.zip(ls).map { case ((v, dn, p), (lease, exists)) =>
-            (v, dn, p, lease, exists)
-          }, needStats, clusterWrite)
+    try Snapshot.withPartitions(spark, targetPath, upd.select(col(partColR)),
+        partColR, 0L, "upsertPartitioned") { parts =>
+      // target side: each existing partition dir read DIRECTLY (no
+      // partition discovery — its value re-attaches as a typed literal,
+      // sidestepping discovery's int32 narrowing), united into one scan
+      // set. The union schema over the touched dirs is inferred in ONE
+      // mergeSchema read (needed for the evolution refusal — the
+      // update batch's schema cannot stand in for what the target
+      // actually holds); the per-dir reads then carry it EXPLICITLY —
+      // a bare spark.read.parquet(dir) costs a schema-inference footer
+      // JOB per dir (measured: one ~25 ms driver round trip per touched
+      // shard per maintain in the r12 NearDupIndex profile — the serial
+      // cost this fused cycle exists to remove). Partitions written
+      // before an add-column evolution read null for the newer columns
+      // (an explicit schema's missing fields), exactly as their
+      // standalone merge would via allowMissingColumns.
+      val existing = parts.filter(_.exists)
+      val tgtRaw = if (existing.isEmpty) None else {
+        val schema = spark.read.option("mergeSchema", "true")
+          .parquet(existing.map(_.path): _*).schema
+        Some(existing.map { p =>
+          spark.read.schema(schema).parquet(p.path)
+            .withColumn(partColR, lit(p.value))
+        }.reduce(_.unionByName(_, allowMissingColumns = true)))
       }
-    } finally { upd.unpersist(); () }
-  }
-
-  /** The fused merge-and-swap, with every touched partition's lock
-    * held and recovery done ([[upsertPartitioned]]).
-    */
-  private def fusedCycle(spark: SparkSession,
-                         fs: org.apache.hadoop.fs.FileSystem,
-                         targetPath: String, upd: DataFrame, partCol: String,
-                         keys: Seq[String], versionCol: String,
-                         deleteCol: Option[String],
-                         parts: List[(Any, String, String, Snapshot.Lease, Boolean)],
-                         needStats: Boolean, clusterWrite: Boolean)
-      : Stats = {
-    val del = deleteCol.getOrElse("_graft_delete")
-    val updData = upd.drop(deleteCol.toSeq: _*)
-    // target side: each existing partition dir read DIRECTLY (no
-    // partition discovery — its value re-attaches as a typed literal,
-    // sidestepping discovery's int32 narrowing), united into one scan
-    // set. The union schema over the touched dirs is inferred in ONE
-    // mergeSchema read (needed for the evolution refusal below — the
-    // update batch's schema cannot stand in for what the target
-    // actually holds); the per-dir reads then carry it EXPLICITLY —
-    // a bare spark.read.parquet(dir) costs a schema-inference footer
-    // JOB per dir (measured: one ~25 ms driver round trip per touched
-    // shard per maintain in the r12 NearDupIndex profile — the serial
-    // cost this fused cycle exists to remove). Partitions written
-    // before an add-column evolution read null for the newer columns
-    // (an explicit schema's missing fields), exactly as their
-    // standalone merge would via allowMissingColumns.
-    val existingDirs = parts.collect { case (_, _, p, _, true) => p }
-    val tgtSchema: Option[org.apache.spark.sql.types.StructType] =
-      if (existingDirs.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true")
-        .parquet(existingDirs: _*).schema)
-    val tgtFrames = parts.collect { case (v, _, p, _, true) =>
-      spark.read.schema(tgtSchema.get).parquet(p)
-        .withColumn(partCol, lit(v))
-    }
-    val tgtRaw = if (tgtFrames.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], updData.schema)
-    else tgtFrames.reduce(_.unionByName(_, allowMissingColumns = true))
-    val caseSensitive =
-      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    def norm(n: String): String =
-      if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
-    val updNames = updData.columns.map(norm).toSet
-    val tgtNames = tgtRaw.columns.map(norm).toSet
-    val missingInUpd = tgtRaw.columns.toSeq.filterNot(c => updNames(norm(c)))
-    require(missingInUpd.isEmpty,
-      s"merge: update batch is missing snapshot column(s) ${missingInUpd.mkString(", ")}; " +
-        "add-column evolution only goes forward")
-    val newCols = updData.schema.fields
-      .filterNot(f => tgtNames(norm(f.name)))
-    val tgt = newCols.foldLeft(tgtRaw) { (df, f) =>
-        df.withColumn(f.name, lit(null).cast(f.dataType))
+      mergeKernel(spark, tgtRaw, upd, partColR +: keys, versionCol,
+        deleteCol, needStats) { result =>
+        Snapshot.publishPartitioned(spark, targetPath, partColR,
+          if (clusterWrite) result.repartition(col(partColR)) else result,
+          parts)
       }
-      .withColumn(del, lit(false))
-      .withColumn("_graft_src", lit(0))
-    val updTagged = (if (deleteCol.isDefined) upd
-                     else upd.withColumn(del, lit(false)))
-      .withColumn("_graft_src", lit(1))
-    // the per-partition single-window merge, fused: partCol leads the
-    // window partitioning, so each partition's winners are picked
-    // independently — identical to its standalone merge
-    val grp = (partCol +: keys).map(col)
-    val dataCols = updData.columns.toSeq :+ del
-    val wRank = Window.partitionBy(grp: _*)
-      .orderBy(col(versionCol).desc, col("_graft_src").desc,
-        xxhash64(dataCols.map(col): _*).asc)
-    val wKey = Window.partitionBy(grp: _*)
-    val merged0 = tgt.unionByName(updTagged)
-      .withColumn("_graft_rn", row_number().over(wRank))
-      .withColumn("_graft_had_tgt",
-        max(when(col("_graft_src") === 0, 1).otherwise(0)).over(wKey))
-      .filter(col("_graft_rn") === 1)
-    // without the stats pass the write below is merged's ONLY
-    // consumer — caching would just add a materialization job
-    val merged = if (needStats) merged0.cache() else merged0
-    try {
-      val a = if (!needStats) None else Some(merged.groupBy().agg(
-        count(lit(1)).as("winners"),
-        count(when(!col(del), 1)).as("kept"),
-        count(when(col(del) && col("_graft_had_tgt") === 1, 1)).as("deleted"),
-        count(when(col("_graft_src") === 1 && !col(del) &&
-          col("_graft_had_tgt") === 0, 1)).as("inserted"),
-        count(when(col("_graft_src") === 1 && !col(del) &&
-          col("_graft_had_tgt") === 1, 1)).as("updated"),
-        count(when(col("_graft_had_tgt") === 1, 1)).as("target_keys"))
-        .collect()(0))
-      val result = merged.filter(!col(del))
-        .drop(del, "_graft_src", "_graft_rn", "_graft_had_tgt")
-      // ONE write job produces every partition's new contents under a
-      // sibling tmp tree (a stray one is crash garbage — clear it).
-      // No repartition-by-partCol here (contrast the append-mode index
-      // stores): every dir is swap-REPLACED so files never accumulate
-      // across cycles, and one-task-per-partition would serialize a
-      // large partition's merge output through a single task
-      val tmpRoot = new Path(targetPath + "._graft_ptmp")
-      if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
-      (if (clusterWrite) result.repartition(col(partCol)) else result)
-        .write.partitionBy(partCol)
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmpRoot.toString)
-      // A partition whose rows were ALL tombstoned gets no tmp dir
-      // from the writer — publish a ZERO-ROW parquet snapshot (with
-      // schema: a bare _SUCCESS dir would crash the NEXT merge's
-      // spark.read with "unable to infer schema"), matching the serial
-      // form, which published the empty frame through Snapshot.publish.
-      // The empty snapshot is WRITTEN ONCE and FS-copied per missing
-      // partition — per-partition zero-row write JOBS would re-create
-      // the serial driver-round-trip cost this fused cycle removes
-      // (a retention delta can tombstone hundreds of partitions).
-      // partCol filter uses the same resolution semantics as the
-      // schema checks above (the column name is the caller's frame's
-      // attribute, already case-resolved by upsertPartitioned).
-      val missing = parts.filterNot { case (_, dirName, _, _, _) =>
-        fs.exists(new Path(s"$tmpRoot/$partCol=$dirName")) }
-      if (missing.nonEmpty) {
-        val emptySchema = org.apache.spark.sql.types.StructType(
-          result.schema.fields.filterNot(f => norm(f.name) == norm(partCol)))
-        val emptyDir = new Path(s"$tmpRoot/_graft_empty")
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(emptyDir.toString)
-        missing.foreach { case (_, dirName, _, _, _) =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, emptyDir, fs,
-            new Path(s"$tmpRoot/$partCol=$dirName"), false,
-            spark.sparkContext.hadoopConfiguration)
-          ()
-        }
-      }
-      // swap each partition in: metadata renames only
-      parts.foreach { case (_, dirName, partPath, lease, exists) =>
-        Snapshot.publishWritten(fs, partPath, exists,
-          new Path(s"$tmpRoot/$partCol=$dirName"), lease)
-      }
-      fs.delete(tmpRoot, true)
-      a match {
-        case Some(r) => Stats(
-          targetRows = r.getLong(5),
-          updateRows = upd.count(),
-          resultRows = r.getLong(1),
-          inserted = r.getLong(3),
-          updated = r.getLong(4),
-          deleted = r.getLong(2))
-        case None => Stats(0, 0, 0, 0, 0, 0)
-      }
-    } finally { if (needStats) merged.unpersist(); () }
+    }.getOrElse(NoStats)
+    finally { upd.unpersist(); () }
   }
 
   /** Time travel over an SCD-2 snapshot: the rows as they were AT

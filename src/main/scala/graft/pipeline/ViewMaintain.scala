@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance of a MATERIALIZED JOIN VIEW — the join
@@ -130,107 +130,18 @@ object ViewMaintain {
   private def resolvePartCol(spark: SparkSession, left: DataFrame,
                              right: DataFrame, partCol: String,
                              spec: Spec): String = {
-    val caseSensitive =
-      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    def norm(n: String): String =
-      if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
-    val r = left.columns.find(c => norm(c) == norm(partCol))
+    val key = Snapshot.nameKey(spark)
+    val r = left.columns.find(c => key(c) == key(partCol))
       .getOrElse(throw new IllegalArgumentException(
         s"partitioned view: partition column $partCol not found in " +
           s"left columns ${left.columns.mkString(", ")}"))
-    require(norm(r) != norm(spec.leftKey) && norm(r) != norm(spec.leftJoinCol),
+    require(key(r) != key(spec.leftKey) && key(r) != key(spec.leftJoinCol),
       s"partition column $r must not be the left key or join column " +
         "(it is stored as the directory name, not in the data files)")
-    require(!right.columns.exists(c => norm(c) == norm(r)),
+    require(!right.columns.exists(c => key(c) == key(r)),
       s"partition column $r collides with a right-side column: " +
         "partition discovery over the view would see it twice")
     r
-  }
-
-  /** Distinct touched partition values, collected as (typed value,
-    * Spark's own `cast(string)` form). The cast string — exactly what
-    * the partitioned writer stringifies before escaping — is what
-    * names the directory; a JVM `toString` would diverge for types
-    * like java.sql.Timestamp and silently swap empty dirs over data
-    * (the Merge lesson). Null partition values have no directory to
-    * live in — reject loudly instead of losing rows.
-    */
-  private def collectTouched(touched: DataFrame,
-                             partCol: String): Array[(Any, String)] = {
-    val vals = touched
-      .select(col(partCol), col(partCol).cast("string").as("_str"))
-      .distinct().collect().map(r => (r.get(0), r.getString(1)))
-    require(!vals.exists(_._1 == null),
-      s"partitioned view maintenance: rows with null $partCol")
-    vals
-  }
-
-  /** Acquire every touched partition's maintainer lock in sorted path
-    * order (two concurrent fused maintainers with overlapping sets
-    * contend in a consistent order — the second fails fast at the
-    * first contended lock, never deadlocks), recover each, then run
-    * `body` with all leases in hand — the iterative
-    * [[Snapshot.withMaintainerLocks]], so stack depth never tracks
-    * the touched-partition count.
-    */
-  private def withAllLocks[T](fs: org.apache.hadoop.fs.FileSystem,
-                              parts: List[(Any, String, String)],
-                              lockWaitMs: Long)
-      (body: List[(Any, String, String, Snapshot.Lease, Boolean)] => T): T =
-    Snapshot.withMaintainerLocks(fs, parts.map(_._3), lockWaitMs) { ls =>
-      body(parts.zip(ls).map { case ((v, dn, p), (lease, exists)) =>
-        (v, dn, p, lease, exists)
-      })
-    }
-
-  /** The fused publish ([[Merge]]'s `fusedCycle` write-and-swap half):
-    * ONE partitioned write job produces every touched partition's new
-    * contents under a sibling tmp tree; a touched partition whose rows
-    * were ALL repaired away gets a ZERO-ROW parquet snapshot (with
-    * schema — a bare dir would crash the next read; written once and
-    * FS-copied, never one write job per empty partition); then each
-    * partition swaps in with pure METADATA renames under its own
-    * lease. Job count is O(1) in touched partitions.
-    *
-    * Deliberately NO repartition-by-partCol before the write (unlike
-    * the append-mode index stores, which would otherwise accumulate
-    * tasks×partitions files per maintain): each swap REPLACES its
-    * directory wholesale, so file counts never accumulate across
-    * cycles, and forcing one task per partition value would serialize
-    * a large partition's rewrite through a single task.
-    */
-  private def writeAndSwap(spark: SparkSession,
-                           fs: org.apache.hadoop.fs.FileSystem,
-                           viewPath: String, partCol: String,
-                           result: DataFrame,
-                           parts: List[(Any, String, String, Snapshot.Lease, Boolean)])
-      : Unit = {
-    val tmpRoot = new Path(viewPath + "._graft_ptmp")
-    if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
-    result.write.partitionBy(partCol)
-      .mode(SaveMode.Overwrite).parquet(tmpRoot.toString)
-    val missing = parts.filterNot { case (_, dirName, _, _, _) =>
-      fs.exists(new Path(s"$tmpRoot/$partCol=$dirName")) }
-    if (missing.nonEmpty) {
-      val emptySchema = org.apache.spark.sql.types.StructType(
-        result.schema.fields.filterNot(_.name == partCol))
-      val emptyDir = new Path(s"$tmpRoot/_graft_empty")
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-        .write.mode(SaveMode.Overwrite).parquet(emptyDir.toString)
-      missing.foreach { case (_, dirName, _, _, _) =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, emptyDir, fs,
-          new Path(s"$tmpRoot/$partCol=$dirName"), false,
-          spark.sparkContext.hadoopConfiguration)
-        ()
-      }
-    }
-    parts.foreach { case (_, dirName, partPath, lease, exists) =>
-      Snapshot.publishWritten(fs, partPath, exists,
-        new Path(s"$tmpRoot/$partCol=$dirName"), lease)
-    }
-    fs.delete(tmpRoot, true)
-    ()
   }
 
   /** Initial full materialization in the PARTITIONED layout, FUSED:
@@ -261,25 +172,14 @@ object ViewMaintain {
                        partCol: String): Unit = {
     val pc = resolvePartCol(spark, left, right, partCol, spec)
     val l = left.cache()
-    try {
-      val touched = collectTouched(l.select(col(pc)), pc)
-      if (touched.isEmpty) return
-      val fs = new Path(viewPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(new Path(viewPath))
-      val parts = touched.map { case (v, str) =>
-        val dirName = org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.escapePathName(str)
-        (v, dirName, s"$viewPath/$pc=$dirName")
-      }.sortBy(_._2).toList
-      withAllLocks(fs, parts, 0L) { locked =>
-        val viewCols =
-          (left.columns.filterNot(_ == pc) ++ right.columns).toSeq
-        val result = joined(l, right, spec, ignore = Set(pc))
-          .select((viewCols :+ pc).map(col): _*)
-        writeAndSwap(spark, fs, viewPath, pc, result, locked)
-      }
-    } finally { l.unpersist(); () }
+    try Snapshot.withPartitions(spark, viewPath, l.select(col(pc)), pc, 0L,
+        "partitioned view build") { parts =>
+      val viewCols = (left.columns.filterNot(_ == pc) ++ right.columns).toSeq
+      Snapshot.publishPartitioned(spark, viewPath, pc,
+        joined(l, right, spec, ignore = Set(pc))
+          .select((viewCols :+ pc).map(col): _*), parts)
+    }
+    finally { l.unpersist(); () }
     spark.catalog.refreshByPath(viewPath)
   }
 
@@ -303,7 +203,7 @@ object ViewMaintain {
     * 1000 touched partitions the serial loop IS the wall clock. The
     * fusion keeps the pruning (untouched dirs never opened) and the
     * per-partition crash contract (each dir swaps through the same
-    * `._graft_old` two-rename protocol, repaired by the next cycle's
+    * [[Snapshot]] two-rename protocol, repaired by the next cycle's
     * recovery).
     *
     * Touched partitions:
@@ -343,17 +243,8 @@ object ViewMaintain {
         .join(drKeys, l(spec.leftJoinCol) === drKeys(spec.rightJoinCol),
           "left_semi")
         .select(col(pc))
-      val touched = collectTouched(fromLeft.unionByName(fromRight), pc)
-      if (touched.isEmpty) return
-      val fs = new Path(viewPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(new Path(viewPath))
-      val parts = touched.map { case (v, str) =>
-        val dirName = org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.escapePathName(str)
-        (v, dirName, s"$viewPath/$pc=$dirName")
-      }.sortBy(_._2).toList
-      withAllLocks(fs, parts, lockWaitMs) { locked =>
+      Snapshot.withPartitions(spark, viewPath, fromLeft.unionByName(fromRight),
+          pc, lockWaitMs, "partitioned view maintenance") { parts =>
         val dl = leftDelta.select(col(spec.leftKey).as("_vm_lk")).distinct()
         val dr =
           rightDelta.select(col(spec.rightJoinCol).as("_vm_jk")).distinct()
@@ -372,11 +263,12 @@ object ViewMaintain {
           viewCols.map(c =>
             left.schema.fields.find(_.name == c)
               .getOrElse(right.schema(c))))
-        val oldSlices = locked.collect { case (v, _, p, _, true) =>
-          spark.catalog.refreshByPath(p)
-          spark.read.schema(dataSchema).parquet(p)
+        val (exist, bootstrap) = parts.partition(_.exists)
+        val oldSlices = exist.map { p =>
+          spark.catalog.refreshByPath(p.path)
+          spark.read.schema(dataSchema).parquet(p.path)
             .select(viewCols.map(col): _*)
-            .withColumn(pc, lit(v))
+            .withColumn(pc, lit(p.value))
         }
         // ONE anti-probe pair over the UNION of the old slices — one
         // probe per touched SET, never per partition (a per-partition
@@ -390,8 +282,8 @@ object ViewMaintain {
         }
         // left' slice: delta-probed rows of existing touched
         // partitions + the FULL left slice of bootstrap partitions
-        val existVals = locked.collect { case (v, _, _, _, true) => v }
-        val bootVals = locked.collect { case (v, _, _, _, false) => v }
+        val existVals = exist.map(_.value)
+        val bootVals = bootstrap.map(_.value)
         val lExist = if (existVals.isEmpty) l.limit(0)
                      else l.filter(col(pc).isin(existVals: _*))
         val byOwnKey = lExist
@@ -404,8 +296,8 @@ object ViewMaintain {
           .dropDuplicates(spec.leftKey)
         val repaired = joined(slice, right, spec, ignore = Set(pc))
           .select((viewCols :+ pc).map(col): _*)
-        val result = kept.foldLeft(repaired)(_ unionByName _)
-        writeAndSwap(spark, fs, viewPath, pc, result, locked)
+        Snapshot.publishPartitioned(spark, viewPath, pc,
+          kept.foldLeft(repaired)(_ unionByName _), parts)
       }
     } finally { l.unpersist(); () }
     spark.catalog.refreshByPath(viewPath)

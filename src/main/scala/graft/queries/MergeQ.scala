@@ -26,20 +26,13 @@ import graft.pipeline.Merge
   */
 object MergeQ {
 
-  /** Fresh scratch snapshot path for one face build. */
+  /** Fresh scratch snapshot path for one face build: the previous
+    * build's tree goes with every swap sibling beside it.
+    */
   private def scratch(s: SparkSession, tag: String): String = {
     val path = s"target/graft_${tag}_snapshot"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // the previous build's tree AND its swap leftovers: a stale
-    // `._graft_old` would otherwise be "recovered" over the fresh run.
-    // (Per-partition markers of a partitioned layout live INSIDE the
-    // tree and go with it; the fused tmp tree is a sibling.)
-    fs.delete(p, true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "._graft_old"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "._graft_tmp"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "._graft_ptmp"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "._graft_lock"), false)
+    graft.pipeline.Snapshot.dropWithSiblings(new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration), path)
     path
   }
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The applied-batch ledger of the exactly-once sinks
@@ -17,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   * A ledger in the earlier one-id-per-line format reads as its
   * maximum, so an existing deployment carries over.
   *
-  * A record writes `.tmp`, then `FileContext.rename(OVERWRITE)`s it
-  * over the ledger.
+  * A record rewrites the file atomically ([[graft.util.AtomicFile]]:
+  * `.tmp`, then `FileContext.rename(OVERWRITE)` over the ledger).
   */
 private[graft] object BatchLedger {
 
@@ -38,15 +38,9 @@ private[graft] object BatchLedger {
   }
 
   /** Make `batchId` the mark. */
-  def record(spark: SparkSession, target: String, batchId: Long): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path(target))
-    val tmp = new Path(path(target) + ".tmp")
-    val out = tmp.getFileSystem(conf).create(tmp, true)
-    try out.write(batchId.toString.getBytes(UTF_8)) finally out.close()
-    FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
-  }
+  def record(spark: SparkSession, target: String, batchId: Long): Unit =
+    graft.util.AtomicFile.write(spark.sparkContext.hadoopConfiguration,
+      path(target))(_.write(batchId.toString.getBytes(UTF_8)))
 
   /** Forget every applied id: a rebuilt target takes a fresh stream
     * whose batch ids restart at 0.
