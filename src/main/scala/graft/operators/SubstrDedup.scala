@@ -86,17 +86,25 @@ object SubstrDedup {
         posexplode(windowMd5Hashes(col("arr"), w)).as(Seq("i", "h")))
       .select(col("doc_id"), (col("i") + 1).cast("long").as("p"), col("h"))
 
-  /** The exact pass over a pre-tokenized frame — see [[spans]]. */
+  /** Grams held by at least two distinct docs, with their keeper (the
+    * minimal doc): (h, keeper). "Two distinct docs" is `min < max`, one
+    * map-side-combinable aggregate; a distinct count would add a
+    * (gram, doc) exchange that carries every pair. Both forms ignore
+    * NULL ids.
+    */
+  private[graft] def dupGrams(anchors: DataFrame): DataFrame =
+    anchors.groupBy(col("h"))
+      .agg(min(col("doc_id")).as("keeper"), max(col("doc_id")).as("_last"))
+      .filter(col("keeper") < col("_last"))
+      .select(col("h"), col("keeper"))
+
+  /** The exact pass over a pre-tokenized frame, unsorted — see [[spans]]. */
   private def spansFromToks(toks: DataFrame, w: Int): DataFrame =
     spansFromPos(posFrame(toks, w), w)
 
   private def spansFromPos(pos: DataFrame, w: Int): DataFrame = {
-    // grams seen in >= 2 docs, with their keeper (minimal doc)
-    val dup = pos.groupBy(col("h"))
-      .agg(count_distinct(col("doc_id")).as("df"), min(col("doc_id")).as("keeper"))
-      .filter(col("df") >= 2)
     // duplicated anchors: the gram is shared and this doc is not its keeper
-    val marked = pos.join(dup, "h")
+    val marked = pos.join(dupGrams(pos), "h")
       .filter(col("doc_id") =!= col("keeper"))
       .select(col("doc_id"), col("p"))
     // gaps-and-islands (the q61 device): consecutive anchor positions
@@ -110,7 +118,6 @@ object SubstrDedup {
         (max(col("p")) + lit(w.toLong - 1)).as("span_end"),
         (max(col("p")) + lit(w.toLong) - min(col("p"))).as("n_tok"))
       .select(col("doc_id"), col("span_start"), col("span_end"), col("n_tok"))
-      .orderBy(col("doc_id"), col("span_start"))
   }
 
   /** Duplicated-run spans per document: (doc_id, span_start, span_end,
@@ -118,7 +125,16 @@ object SubstrDedup {
     */
   def spans(docs: DataFrame, w: Int,
             idCol: Column = col("doc_id"),
-            textCol: Column = col("text")): DataFrame = {
+            textCol: Column = col("text")): DataFrame =
+    spanRows(docs, w, idCol, textCol).orderBy(col("doc_id"), col("span_start"))
+
+  /** [[spans]] without its global sort, for the consumers that regroup
+    * the spans by doc anyway: the sort would add a range exchange (and
+    * its sampling job) under an aggregate that can reuse the island
+    * window's doc_id partitioning.
+    */
+  private def spanRows(docs: DataFrame, w: Int,
+                       idCol: Column, textCol: Column): DataFrame = {
     require(w >= 2, s"window must be >= 2 tokens, got $w")
     spansFromToks(tokenized(docs, w, idCol, textCol), w)
   }
@@ -209,10 +225,7 @@ object SubstrDedup {
   }
 
   private def winnowedSpansFromAnchors(anch: DataFrame, w: Int): DataFrame = {
-    val dup = anch.groupBy(col("h"))
-      .agg(count_distinct(col("doc_id")).as("df"), min(col("doc_id")).as("keeper"))
-      .filter(col("df") >= 2)
-    val marked = anch.join(dup, "h")
+    val marked = anch.join(dupGrams(anch), "h")
       .filter(col("doc_id") =!= col("keeper"))
       .select(col("doc_id"), col("p"))
     // anchors are sparse, so islands merge INTERVALS [p, p+w-1]:
@@ -274,10 +287,7 @@ object SubstrDedup {
     // round 1: docs involved in ANY shared fingerprint — keepers AND
     // non-keepers both; round 2 needs the keeper's positions present
     // to draw boundaries and attribute ownership
-    val dupF = anch.groupBy(col("h"))
-      .agg(count_distinct(col("doc_id")).as("df"))
-      .filter(col("df") >= 2)
-    val involved = anch.join(dupF, "h").select("doc_id").distinct()
+    val involved = anch.join(dupGrams(anch), "h").select("doc_id").distinct()
     // round 2: the exact pass, cohort-only (left-semi keeps the
     // involved frame on the build side; AQE broadcasts it while
     // small). `toks` is evaluated by both rounds — a production
@@ -285,6 +295,7 @@ object SubstrDedup {
     // sidecar) rather than re-tokenizing; at query scope the second
     // scan is the cheaper, pushdown-pruned read.
     spansFromToks(toks.join(involved, Seq("doc_id"), "left_semi"), w)
+      .orderBy(col("doc_id"), col("span_start"))
   }
 
   /** Per-doc span LISTS of [[spans]] — one row per doc that has any
@@ -296,7 +307,7 @@ object SubstrDedup {
   def spanLists(docs: DataFrame, w: Int,
                 idCol: Column = col("doc_id"),
                 textCol: Column = col("text")): DataFrame =
-    spans(docs, w, idCol, textCol)
+    spanRows(docs, w, idCol, textCol)
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("span_start"), col("span_end"))).as("_sp"))
 
@@ -358,7 +369,7 @@ object SubstrDedup {
   def strip(docs: DataFrame, w: Int,
             idCol: Column = col("doc_id"),
             textCol: Column = col("text")): DataFrame =
-    stripFromSpans(docs, spans(docs, w, idCol, textCol), idCol, textCol)
+    stripFromSpans(docs, spanRows(docs, w, idCol, textCol), idCol, textCol)
 
   private def stripFromSpans(docs: DataFrame, spansDf: DataFrame,
                              idCol: Column, textCol: Column): DataFrame = {

@@ -542,20 +542,19 @@ object CorpusPrep {
 
   /** run()'s executable state, exposed at package level so the spec
     * can assert the materialization contract (every consumer of the
-    * base lineage reads the cache, not a recompute).
+    * base lineage reads the cache, not a recompute). Each cached frame
+    * here is the leaf over its cache entry; `cached` holds the frames
+    * the entries were made from, in the order they were cached.
     */
   private[graft] final case class Materialized(
-      baseDf: DataFrame, baseCached: Boolean,
+      baseDf: DataFrame,
       drops: Option[DataFrame], contaminated: Option[DataFrame],
-      out: DataFrame, substrSpans: Option[DataFrame] = None,
-      prior: Option[org.apache.spark.util.sketch.BloomFilter] = None,
-      priorNear: Option[org.apache.spark.util.sketch.BloomFilter] = None) {
-    def release(): Unit = {
-      out.unpersist(); drops.foreach(_.unpersist())
-      contaminated.foreach(_.unpersist())
-      substrSpans.foreach(_.unpersist())
-      if (baseCached) { baseDf.unpersist(); () } else ()
-    }
+      out: DataFrame, substrSpans: Option[DataFrame],
+      prior: Option[org.apache.spark.util.sketch.BloomFilter],
+      priorNear: Option[org.apache.spark.util.sketch.BloomFilter],
+      cached: Seq[DataFrame]) {
+    /** Unpersist every cache, each before the caches it reads. */
+    def release(): Unit = cached.reverseIterator.foreach(_.unpersist())
   }
 
   /** The internal column of [[Materialized.out]] that flags the docs
@@ -575,8 +574,16 @@ object CorpusPrep {
     * gram pipelines themselves run once. The planned frame `out` is
     * cached only when something reads it after the write (the pack
     * manifest, the membership sidecars, the stats fold): the write's
-    * own counts are observed on the write. A failure while wiring
-    * releases whatever was already cached.
+    * own counts are observed on the write.
+    *
+    * Every later step reads a cached frame through its cache entry
+    * ([[org.apache.spark.sql.graftbridge.Bridge.cachedLeaf]]), so
+    * Catalyst analyses one `InMemoryRelation` leaf there instead of
+    * re-analysing the WARC lineage (and its self-joins) at each
+    * DataFrame call, while execution still reads the cache through
+    * `InMemoryTableScan`. Nothing is filled here: run() fills the
+    * caches. A failure while wiring releases whatever was already
+    * cached.
     */
   private[graft] def materialize(docs: DataFrame, cfg: Config,
       benchmark: Option[DataFrame]): Materialized = {
@@ -590,7 +597,10 @@ object CorpusPrep {
     val readAfterWrite = cfg.packBudget.isDefined || cfg.statsPath.isDefined ||
       cfg.publishSnapshot.isDefined || cfg.publishNearSnapshot.isDefined
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
+    def cache(df: DataFrame): DataFrame = {
+      cached += df.cache()
+      org.apache.spark.sql.graftbridge.Bridge.cachedLeaf(df)
+    }
     try {
       val prior = priorFilter(docs, cfg)
       val priorNear = priorNearFilter(docs, cfg)
@@ -601,8 +611,9 @@ object CorpusPrep {
       val substrSpans = substrSpansOf(baseDf, cfg).map(cache)
       val out = planWith(baseDf, cfg, drops, contaminated, substrSpans,
         Some(StrippedFlag))
-      Materialized(baseDf, multiConsumer, drops, contaminated,
-        if (readAfterWrite) cache(out) else out, substrSpans, prior, priorNear)
+      Materialized(baseDf, drops, contaminated,
+        if (readAfterWrite) cache(out) else out, substrSpans, prior, priorNear,
+        cached.toSeq)
     } catch {
       case e: Throwable => cached.foreach(_.unpersist()); throw e
     }
@@ -794,9 +805,13 @@ object CorpusPrep {
     * combined count + distinct-digest aggregate, [[gateCounts]]),
     * never a re-run of the sampled/sharded plan. That pass reads only
     * `docs`, so it runs on the call's side lane ([[Lane]]) while this
-    * thread plans and writes the corpus. The rows written and the
-    * docs substring-stripped are observed on the write itself; no
-    * action reads the output back to count them.
+    * thread plans and writes the corpus. The near-dup, contamination
+    * and span caches are filled on the lane too, each by a count, so
+    * those chains run beside each other and beside the write's
+    * planning, and the two drop-set counts are the near-dup and
+    * contamination stats. The rows written and the docs
+    * substring-stripped are observed on the write itself; no action
+    * reads the output back to count them.
     */
   def run(docs: DataFrame, outPath: String, cfg: Config,
           benchmark: Option[DataFrame] = None): Stats =
@@ -805,8 +820,12 @@ object CorpusPrep {
   private def runOn(lane: Lane, docs: DataFrame, outPath: String,
                     cfg: Config, benchmark: Option[DataFrame]): Stats = {
     val m = materialize(docs, cfg, benchmark)
-    val (out, drops, contaminated) = (m.out, m.drops, m.contaminated)
+    val out = m.out
     try {
+      // the fills go first: the write waits on them, the gates do not
+      val nearDupN = m.drops.map(d => lane(d.count()))
+      val contaminatedN = m.contaminated.map(c => lane(c.count()))
+      val spansFilled = m.substrSpans.map(s => lane(s.count()))
       val gates = lane(gateCounts(docs, cfg, m.prior, m.priorNear))
       // counted in the write's own (final) stage: a result task's
       // accumulator updates apply once per partition, so the counts
@@ -901,13 +920,12 @@ object CorpusPrep {
           batchId = java.nio.ByteBuffer.wrap(md5).getLong,
           legacyBatchIds = Set(java.util.Arrays.hashCode(md5).toLong)).isEmpty
       }
-      val nearDupN = drops.map(_.count()).getOrElse(0L)
-      val contaminatedN = contaminated.map(_.count()).getOrElse(0L)
       val a = Lane.join(gates)
+      spansFilled.foreach(Lane.join(_))
       Stats(a.getLong(0), a.getLong(1), wrote("rows").asInstanceOf[Long],
         urlDupDropped = a.getLong(5),
-        nearDupDropped = nearDupN,
-        contaminatedDropped = contaminatedN,
+        nearDupDropped = nearDupN.map(Lane.join(_)).getOrElse(0L),
+        contaminatedDropped = contaminatedN.map(Lane.join(_)).getOrElse(0L),
         snapshotDropped = a.getLong(2),
         badwordsDropped = a.getLong(3),
         nearSnapshotDropped = a.getLong(4),
@@ -916,7 +934,10 @@ object CorpusPrep {
         substrStripped =
           if (flagged) wrote("stripped").asInstanceOf[Long] else 0L,
         statsFoldSkipped = statsFoldSkipped)
-    } finally { m.release() }
+    } catch {
+      // the lane fills read the caches: none may outlive the release
+      case e: Throwable => lane.settle(); throw e
+    } finally m.release()
   }
 
   /** The exact stage counts of [[run]], in ONE pass over `docs`: input
@@ -975,19 +996,23 @@ object CorpusPrep {
       .head()
   }
 
-  /** The side lane of one [[run]] / [[runFromWarc]] call. Billing
-    * actions that read nothing the corpus write produces (the exact
-    * stats pass, the face counts, the media sidecar write) run here
-    * while the calling thread plans and writes the corpus: most of a
-    * crawl-prep call is driver-side planning, and the lane's tasks
-    * fill the executor slots the main path leaves idle meanwhile.
+  /** The side lane of one [[run]] / [[runFromWarc]] call. Actions
+    * the calling thread need not wait for run here while it plans and
+    * writes the corpus: the billing passes that read nothing the write
+    * produces (the exact stats pass, the face counts, the media
+    * sidecar write) and the fills of the drop-id, contamination and
+    * span caches. Most of a crawl-prep call is driver-side planning,
+    * and the lane's tasks fill the executor slots the main path leaves
+    * idle meanwhile.
     *
     * Each body runs through `SQLExecution.withThreadLocalCaptured`,
     * the device AQE uses for its stage jobs, so it carries the
     * caller's local properties and active session: a [[JobRunner]]
     * job group (and with it the runner's cancel), job tags, the
     * scheduler pool. Every lane job also carries the call's own tag.
-    * Lane bodies never read the caches run() materializes.
+    * The cache fills read the caches run() materializes, so run()
+    * releases them only after those bodies have ended: joined on
+    * success, [[settle]]d on failure.
     */
   private final class Lane(spark: org.apache.spark.sql.SparkSession) {
     val tag = s"graft-corpusprep-lane-${Lane.ids.incrementAndGet()}"
@@ -1003,6 +1028,20 @@ object CorpusPrep {
       }
       started += f
       f
+    }
+
+    /** Cancel the lane's jobs and wait for every body to end. The
+      * cancel repeats while a body is still running, because a job
+      * submitted after a cancel is not covered by it.
+      */
+    def settle(): Unit = {
+      var open = started.filterNot(_.isDone)
+      while (open.nonEmpty) {
+        spark.sparkContext.cancelJobsWithTag(tag)
+        scala.util.Try(CompletableFuture.allOf(open.toSeq: _*)
+          .get(100, TimeUnit.MILLISECONDS))
+        open = open.filterNot(_.isDone)
+      }
     }
   }
 
@@ -1023,10 +1062,8 @@ object CorpusPrep {
 
     /** Run `body` with a fresh lane and join every lane body before
       * returning, so no lane future outlives the call. A failed body
-      * fails the call. When anything throws, the lane's tag is
-      * cancelled and the call waits for every body to end before it
-      * rethrows; the cancel repeats while a body is still running,
-      * because a job submitted after a cancel is not covered by it.
+      * fails the call. When anything throws, the lane is settled (its
+      * jobs cancelled, every body ended) before the call rethrows.
       */
     def within[T](spark: org.apache.spark.sql.SparkSession)(body: Lane => T): T = {
       val lane = new Lane(spark)
@@ -1035,15 +1072,7 @@ object CorpusPrep {
         lane.started.foreach(join(_))
         r
       } catch {
-        case e: Throwable =>
-          var open = lane.started.filterNot(_.isDone)
-          while (open.nonEmpty) {
-            spark.sparkContext.cancelJobsWithTag(lane.tag)
-            scala.util.Try(CompletableFuture.allOf(open.toSeq: _*)
-              .get(100, TimeUnit.MILLISECONDS))
-            open = open.filterNot(_.isDone)
-          }
-          throw e
+        case e: Throwable => lane.settle(); throw e
       }
     }
   }

@@ -372,7 +372,9 @@ class CorpusPrepSpec extends SparkSpec {
       substrWindow = Some(4))
     val m = CorpusPrep.materialize(docs, cfg2, Some(bench))
     try {
-      assert(m.baseCached, "base must be cached when both stages are on")
+      assert(m.baseDf.queryExecution.analyzed.isInstanceOf[
+        org.apache.spark.sql.execution.columnar.InMemoryRelation],
+        "base must be cached when both stages are on")
       // execute every consumer, then assert each read the cached base:
       // with the cache, the scrub+dedup window runs ONCE (filling the
       // cache) instead of once per consuming action
@@ -399,6 +401,47 @@ class CorpusPrepSpec extends SparkSpec {
     assert(stats.input == 3L)
     assert(evals.value == 6L,
       s"run() evaluates each source row twice, no more: ${evals.value}")
+  }
+
+  test("materialize: every later step analyses cache leaves, never the WARC lineage") {
+    import graft.sources.WarcSource
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import spark.implicits._
+    val recs = WarcSource.records(spark, writeCrawl(), None)
+    val docs = Seq(WarcSource.documents(recs), WarcSource.pdfDocuments(recs),
+      WarcSource.officeDocuments(recs)).reduce(_ unionByName _)
+    val bench = Seq((100L, "held out benchmark words that no doc shares"))
+      .toDF("doc_id", "text")
+    val cfgAll = CorpusPrep.Config(langRates = Map.empty, defaultRate = 1.0,
+      nShards = 2, stripMarkup = true, scrubPii = true, dedupByUrl = true,
+      nearDupMinEst = Some(0.5), substrWindow = Some(4))
+    def frames(m: CorpusPrep.Materialized) = Seq("base" -> m.baseDf,
+      "drops" -> m.drops.get, "contaminated" -> m.contaminated.get,
+      "spans" -> m.substrSpans.get, "out" -> m.out)
+    // `out` is planned over the leaves here; with a read after the
+    // write it is cached and read as a leaf itself
+    Seq(cfgAll, cfgAll.copy(packBudget = Some(64))).foreach { c =>
+      val m = CorpusPrep.materialize(docs, c, Some(bench))
+      try frames(m).foreach { case (name, df) =>
+        val plan = df.queryExecution.analyzed
+        // tree collection does not descend into an InMemoryRelation's
+        // cached plan, which still prints its binaryFile scan
+        val leaves = plan.collectLeaves()
+        assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[InMemoryRelation]),
+          s"$name analyses more than cache leaves:\n$plan")
+        assert(plan.collectWithSubqueries { case r: LogicalRelation => r }.isEmpty,
+          s"$name analyses a file scan:\n$plan")
+        df.collect()
+        val exec = df.queryExecution.executedPlan match {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+            a.executedPlan.toString
+          case p => p.toString
+        }
+        assert(exec.contains("InMemoryTableScan"),
+          s"$name does not read its cache:\n$exec")
+      } finally m.release()
+    }
   }
 
   test("packing stage: q58 layout over the shard window, no extra exchange") {
@@ -956,6 +999,33 @@ class CorpusPrepSpec extends SparkSpec {
     }
     assert(cacheState() == before,
       "the noindex id set (or a materialized frame) stayed cached")
+
+    // the corpus write fails while a lane fill is still running: its
+    // path names a filesystem that does not exist, which fails the
+    // write as it is planned, and the benchmark's text blocks the
+    // contamination fill until the call has returned
+    import spark.implicits._
+    CorpusPrepSpec.closeGate()
+    val held = udf((t: String) => { CorpusPrepSpec.awaitGate(); t })
+      .asNondeterministic()
+    // RDD-backed, so no optimizer rule evaluates the udf on the driver
+    val bench = spark.sparkContext.parallelize(
+      Seq((100L, "held out benchmark words that no doc shares")), 1)
+      .toDF("doc_id", "text").withColumn("text", held(col("text")))
+    val t0 = System.nanoTime()
+    try {
+      intercept[Exception] {
+        CorpusPrep.runFromWarc(spark, dir, "graft-nofs://corpus",
+          cfgAll.copy(substrWindow = Some(4)), benchmark = Some(bench))
+      }
+    } finally CorpusPrepSpec.openGate()
+    assert(System.nanoTime() - t0 < 100000000000L,
+      "the call outwaited the gate, so no fill was running when it failed")
+    assert(cacheState() == before, "a cache outlived the failed call")
+    org.apache.spark.graftbench.Recorder.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a lane job outlived the failed call: " +
+        spark.sparkContext.statusTracker.getActiveJobIds.mkString(","))
   }
 
   /** Per observe node (CollectMetricsExec, by name) in an executed
@@ -1075,6 +1145,21 @@ class CorpusPrepSpec extends SparkSpec {
 }
 
 object CorpusPrepSpec {
+
+  /** A gate a task can wait on. Tasks run in this JVM under
+    * `local[N]`, so a spec closes it, lets a udf wait on it, and opens
+    * it from the test thread. The wait is bounded, so a gate left
+    * closed cannot hang the suite.
+    */
+  @volatile private var gate = new java.util.concurrent.CountDownLatch(0)
+
+  def closeGate(): Unit = gate = new java.util.concurrent.CountDownLatch(1)
+
+  def openGate(): Unit = gate.countDown()
+
+  def awaitGate(): Unit = {
+    gate.await(120, java.util.concurrent.TimeUnit.SECONDS); ()
+  }
 
   /** Every optional stage of [[CorpusPrep.run]] switched on over the
     * documents at `sf`: its input, config and contamination benchmark.

@@ -54,6 +54,31 @@ class SubstrDedupSpec extends SparkSpec {
       s"got ${out.toSeq}")
   }
 
+  test("dupGrams: min < max keeps the same grams and keepers as a distinct-doc count") {
+    import spark.implicits._
+    // seeded random anchors over tiny id and gram alphabets, so grams
+    // repeat within a doc, span many docs and meet NULL ids; each case
+    // owns its own block of gram hashes, so one frame holds them all
+    val rnd = new scala.util.Random(29)
+    val rows = (0 until 200).flatMap { c =>
+      val grams = 1 + rnd.nextInt(6)
+      Seq.fill(rnd.nextInt(30))((
+        if (rnd.nextInt(6) == 0) None else Some(rnd.nextInt(1 + c % 5).toLong),
+        c * 100L + rnd.nextInt(grams)))
+    }
+    val pos = rows.toDF("doc_id", "h")
+    val byCount = pos.groupBy(col("h"))
+      .agg(count_distinct(col("doc_id")).as("df"), min(col("doc_id")).as("keeper"))
+      .filter(col("df") >= 2)
+      .select(col("h"), col("keeper"))
+      .collect().toSet
+    val dup = SubstrDedup.dupGrams(pos).collect().toSet
+    assert(byCount.nonEmpty && byCount.size < pos.select("h").distinct().count(),
+      "the fixture must hold shared and unshared grams")
+    assert(dup == byCount,
+      s"only distinct-count: ${byCount -- dup}; only min<max: ${dup -- byCount}")
+  }
+
   test("strip removes exactly the span tokens; keeper and clean docs pass through whole") {
     val run = "r1 r2 r3 r4 r5 r6"
     val d = docs(
